@@ -70,13 +70,8 @@ def main(argv: list[str] | None = None) -> int:
         rates = page_match_rates(parse_documents(docs, repartition=args.repartition), lex)
         catalog.append(rates, f"{args.output}/lexicon_match_rates", run_id=run_id)
 
-    # count from the (tiny) lineage table, not a full re-read of page_scores
-    if done:
-        import pyspark.sql.functions as F
-
-        n_docs = int(runner.lineage().agg(F.sum("n_docs")).collect()[0][0] or 0)
-    else:
-        n_docs = 0
+    # docs scored by THIS invocation: the counts its own part writes observed
+    n_docs = sum(runner.part_counts[p]["n_docs"] for p in done)
     dt = time.time() - t0
     if args.quiet:
         print(f"{n_docs},{dt:.3f}")

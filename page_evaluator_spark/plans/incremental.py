@@ -3,19 +3,31 @@ with per-partition lineage + metrics").
 
 Documents are assigned a STABLE partition id — pmod(xxhash64(doc_id), n_parts)
 — so the work breakdown is identical across runs and cluster sizes.  Each part
-is processed as its own job whose outputs (page_scores, spans_out, quarantine)
-are appended atomically-per-part through the Catalog facade, followed by one
-lineage row carrying row-count metrics.  An interrupted run leaves complete
-parts committed; the next invocation anti-joins the lineage table and
-processes only the remainder.  Re-processing a part is idempotent on BOTH
-backends — even when the retry runs under a fresh --run-id: the parquet
-emulation keys the commit directory by the PART alone (commit=part{N},
-mode=overwrite), and the Iceberg branch passes ``replace_where="part_id =
-{N}"`` so Catalog.append atomically overwrites the rows that part owns
-(one snapshot commit — every output row carries a part_id column for
-exactly this; on Iceberg create the output tables PARTITIONED BY (part_id)
-so overwrite-by-filter stays file-aligned even after compaction — the
-Catalog.append alignment contract).
+is one commit, in this order:
+
+1. the part is parsed once into a persisted relation;
+2. its three outputs (page_scores, spans_out, quarantine) are appended
+   through the Catalog facade CONCURRENTLY, one thread per table, all over
+   that one persisted parse (the threads keep the caller's job group,
+   description and tags);
+3. only when all three appends succeeded, one lineage row is appended.  Its
+   counts come from the writes themselves: a ``DataFrame.observe`` on each
+   output collects n_docs / n_tokens (page_scores) and n_spans (spans_out) /
+   n_quarantined (quarantine, both in the ``metrics`` map), so no extra job
+   re-reads the part to count it.
+
+A failed output append re-raises (the first failure, in table order) and
+leaves the part without a lineage row, i.e. pending.  An interrupted run
+leaves complete parts committed; the next invocation reads the lineage table
+once and processes only the remainder.  Re-processing a part is idempotent
+on BOTH backends — even when the retry runs under a fresh --run-id: the
+parquet emulation keys the commit directory by the PART alone
+(commit=part{N}, mode=overwrite), and the Iceberg branch passes
+``replace_where="part_id = {N}"`` so Catalog.append atomically overwrites the
+rows that part owns (one snapshot commit — every output row carries a part_id
+column for exactly this; on Iceberg create the output tables PARTITIONED BY
+(part_id) so overwrite-by-filter stays file-aligned even after compaction —
+the Catalog.append alignment contract).
 
 At 10^12 docs the input table would be bucketed by the same hash so each
 part-job prunes to its buckets instead of re-scanning (Iceberg
@@ -28,9 +40,11 @@ pruning) — one extra full write instead of n_parts full scans.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog
@@ -38,6 +52,8 @@ from .pipeline import evaluate_documents
 
 LINEAGE_SCHEMA = ("run_id string, part_id int, n_docs bigint, n_tokens bigint, "
                   "committed_at timestamp, metrics map<string,string>")
+# the per-part output tables, in commit (and failure-report) order
+OUTPUTS = ("page_scores", "spans_out", "quarantine")
 
 
 def part_id_expr(n_parts: int):
@@ -51,6 +67,8 @@ class IncrementalRunner:
     n_parts: int = 8
     repartition: int | None = None
     catalog: Catalog = field(init=False)
+    # counts of the parts committed by the last run(), by part id
+    part_counts: dict[int, dict[str, int]] = field(init=False, default_factory=dict)
 
     def __post_init__(self) -> None:
         self.catalog = Catalog(self.spark)
@@ -73,7 +91,8 @@ class IncrementalRunner:
         return {r["part_id"] for r in self.lineage().select("part_id").distinct().collect()}
 
     def pending_parts(self) -> list[int]:
-        return [p for p in range(self.n_parts) if p not in self.committed_parts()]
+        committed = self.committed_parts()
+        return [p for p in range(self.n_parts) if p not in committed]
 
     # --- input staging (parquet-fallback bucketing) -----------------------
     def _stage_docs(self, docs: DataFrame) -> DataFrame:
@@ -113,9 +132,11 @@ class IncrementalRunner:
         stage_input (default: auto — stage when >1 part is pending and the
         output root is a path) controls the write-once/prune-per-part staging;
         on Iceberg the input table's own bucket(doc_id) layout replaces it.
-        Returns the list of parts committed by THIS invocation.
+        Returns the list of parts committed by THIS invocation; their counts
+        are in ``part_counts``.
         """
         done: list[int] = []
+        self.part_counts = {}
         pending = self.pending_parts()
         if max_parts is not None:
             pending = pending[:max_parts]
@@ -125,43 +146,82 @@ class IncrementalRunner:
             docs_p = self._stage_docs(docs)
         else:
             docs_p = docs.withColumn("_part", part_id_expr(self.n_parts))
-        for part in pending:
-            # Commit token derived from the PART, not the run id: if a prior
-            # run crashed after appending outputs but before the lineage
-            # commit, the part is still pending and re-processing OVERWRITES
-            # the orphaned commit=part{N} dir (parquet) / atomically overwrites
-            # the part's rows (Iceberg, replace_where snapshot commit) instead
-            # of duplicating them — resume is idempotent across fresh --run-ids.
-            commit = f"part{part}"
-            owns = f"part_id = {part}"
-            part_docs = docs_p.where(F.col("_part") == part).drop("_part")
-            out = evaluate_documents(part_docs, repartition=self.repartition,
-                                     cache_parsed=True)
-            try:
-                scores = out.page_scores.withColumn("part_id", F.lit(part))
-                self.catalog.append(scores, self._ref("page_scores"), run_id=commit,
+        with ThreadPoolExecutor(len(OUTPUTS)) as pool:
+            for part in pending:
+                # Commit token derived from the PART, not the run id: if a
+                # prior run crashed after appending outputs but before the
+                # lineage commit, the part is still pending and re-processing
+                # OVERWRITES the orphaned commit=part{N} dir (parquet) /
+                # atomically overwrites the part's rows (Iceberg, replace_where
+                # snapshot commit) instead of duplicating them — resume is
+                # idempotent across fresh --run-ids.
+                commit = f"part{part}"
+                owns = f"part_id = {part}"
+                part_docs = docs_p.where(F.col("_part") == part).drop("_part")
+                out = evaluate_documents(part_docs, repartition=self.repartition,
+                                         cache_parsed=True)
+                try:
+                    counts = self._append_outputs(pool, out, part, commit, owns)
+                finally:
+                    out.parsed.unpersist()
+                # lineage commit LAST: a crash before this line leaves the part
+                # uncommitted and it will be re-done (idempotent per-part dirs)
+                self.catalog.append(self._lineage_row(run_id, part, counts),
+                                    self.lineage_ref, run_id=commit,
                                     replace_where=owns)
-                self.catalog.append(out.spans_out.withColumn("part_id", F.lit(part)),
-                                    self._ref("spans_out"), run_id=commit,
-                                    replace_where=owns)
-                self.catalog.append(out.quarantine.withColumn("part_id", F.lit(part)),
-                                    self._ref("quarantine"), run_id=commit,
-                                    replace_where=owns)
-                agg = scores.agg(F.count("*").alias("n_docs"),
-                                 F.sum("token_count").alias("n_tokens")).collect()[0]
-            finally:
-                out.parsed.unpersist()
-            lineage_row = self.spark.createDataFrame(
-                [(run_id, part, agg["n_docs"] or 0, int(agg["n_tokens"] or 0),
-                  None, {"pipeline": "evaluate_documents"})],
-                LINEAGE_SCHEMA,
-            ).withColumn("committed_at", F.current_timestamp())
-            # lineage commit LAST: a crash before this line leaves the part
-            # uncommitted and it will be re-done (idempotent per-part dirs)
-            self.catalog.append(lineage_row, self.lineage_ref, run_id=commit,
-                                replace_where=owns)
-            done.append(part)
+                self.part_counts[part] = counts
+                done.append(part)
         return done
+
+    def _append_outputs(self, pool: ThreadPoolExecutor, out, part: int,
+                        commit: str, owns: str) -> dict[str, int]:
+        """Append the part's outputs concurrently over its one persisted parse
+        and return the counts their writes observed.
+
+        Waits for every append; the first failure (in OUTPUTS order) is
+        re-raised.  Observation.get blocks until its query has completed, so
+        the counts are read only after all writes returned successfully.
+        """
+        metrics = {
+            "page_scores": (F.count(F.lit(1)).alias("n_docs"),
+                            F.sum("token_count").alias("n_tokens")),
+            "spans_out": (F.count(F.lit(1)).alias("n_spans"),),
+            "quarantine": (F.count(F.lit(1)).alias("n_quarantined"),),
+        }
+        observations = {name: Observation() for name in OUTPUTS}
+
+        def append(name: str) -> None:
+            df = getattr(out, name).withColumn("part_id", F.lit(part))
+            self.catalog.append(df.observe(observations[name], *metrics[name]),
+                                self._ref(name), run_id=commit, replace_where=owns)
+
+        # wrapped here, in the caller's thread: the wrapper captures the
+        # caller's local properties (job group, description) and tags now
+        target = inheritable_thread_target(self.spark)(append)
+        futures = [pool.submit(target, name) for name in OUTPUTS]
+        wait(futures)
+        for f in futures:
+            f.result()
+        counts: dict[str, int] = {}
+        for obs in observations.values():
+            counts.update({k: int(v or 0) for k, v in obs.get.items()})
+        return counts
+
+    def _lineage_row(self, run_id: str, part: int, counts: dict[str, int]) -> DataFrame:
+        """The part's one lineage row, typed as LINEAGE_SCHEMA, built natively
+        (no Python-side rows to parallelize and re-schema)."""
+        metrics = {"pipeline": "evaluate_documents",
+                   "n_spans": str(counts["n_spans"]),
+                   "n_quarantined": str(counts["n_quarantined"])}
+        return self.spark.range(1, numPartitions=1).select(
+            F.lit(run_id).cast("string").alias("run_id"),
+            F.lit(part).cast("int").alias("part_id"),
+            F.lit(counts["n_docs"]).cast("bigint").alias("n_docs"),
+            F.lit(counts["n_tokens"]).cast("bigint").alias("n_tokens"),
+            F.current_timestamp().alias("committed_at"),
+            F.create_map(*[F.lit(x) for kv in metrics.items() for x in kv])
+             .cast("map<string,string>").alias("metrics"),
+        )
 
     # --- outputs ---------------------------------------------------------
     def page_scores(self) -> DataFrame:

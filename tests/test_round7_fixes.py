@@ -169,6 +169,7 @@ def test_worker_python_wrapper_mechanics():
     directory-form pyspark, so the exact same code executes via FileFinder
     imports.  Tested without a Spark session: run the wrapper the way the
     JVM launches a worker and check what the child imports."""
+    import glob
     import os
     import subprocess
     import sys
@@ -182,11 +183,11 @@ def test_worker_python_wrapper_mechanics():
     assert os.access(wrapper, os.X_OK)
 
     spark_home = os.environ.get("SPARK_HOME", "")
-    zip_path = os.path.join(spark_home, "python", "lib", "pyspark.zip")
+    lib = os.path.join(spark_home, "python", "lib")
+    py4j_zips = glob.glob(os.path.join(lib, "py4j-*-src.zip"))
+    assert len(py4j_zips) == 1, py4j_zips
     env = dict(os.environ)
-    env["PYTHONPATH"] = os.pathsep.join(
-        [zip_path, os.path.join(spark_home, "python", "lib",
-                                "py4j-0.10.9.9-src.zip")])
+    env["PYTHONPATH"] = os.pathsep.join([os.path.join(lib, "pyspark.zip"), py4j_zips[0]])
     probe = ("import pyspark, py4j, json, sys; "
              "print(json.dumps([pyspark.__file__, pyspark.__version__, "
              "py4j.__file__]))")
