@@ -6,11 +6,15 @@ Every knob here exists for a reason at scale:
   * bounded Arrow batches so a batch of large documents cannot OOM a Python
     worker (parse-UDF memory ∝ batch_rows × doc_size, SURVEY.md §4.1),
   * shuffle partitions sized for the local test harness (overridden by AQE),
-  * Arrow-optimized Python UDF transport throughout.
+  * Arrow-optimized Python UDF transport throughout,
+  * on local masters, Python workers that import pyspark from the driver's
+    directory install instead of Spark's zips (``_worker_python_wrapper``:
+    same code, no per-task zipimport cache rebuild).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
 import sys
@@ -33,14 +37,16 @@ def _worker_python_wrapper() -> str | None:
     O(1), so pointing workers at the directory install removes the tax
     without changing a byte of what executes.
 
-    Only activated when (a) the driver itself imports pyspark from a real
-    directory, (b) its version equals the JVM-side Spark version shipped in
-    $SPARK_HOME (else workers could run different code), and (c) the
-    interpreter path is shebang-safe.  Cluster deployments (non-local
-    master) keep Spark's default worker bootstrap — there the fix is baking
-    a directory install into the executor image.
+    Returns None (Spark's default worker bootstrap) unless (a) the driver
+    itself imports pyspark from a real directory, (b) its version equals the
+    JVM-side Spark version shipped in $SPARK_HOME (else workers could run
+    different code), (c) the interpreter path is shebang-safe and (d) the
+    script can be stored safely (``_private_script``).  py4j's zip is
+    stripped only when the driver's py4j is a directory install too — in the
+    stock ``$SPARK_HOME/python`` layout py4j exists only as that zip.
     """
     try:
+        import py4j
         import pyspark
     except ImportError:  # pragma: no cover
         return None
@@ -48,6 +54,13 @@ def _worker_python_wrapper() -> str | None:
     if not pkg_init.endswith(".py") or not os.path.isfile(pkg_init):
         return None  # driver itself runs from a zip — nothing better to offer
     site_dir = os.path.dirname(os.path.dirname(pkg_init))
+    py4j_init = getattr(py4j, "__file__", "") or ""
+    strip_py4j = py4j_init.endswith(".py") and os.path.isfile(py4j_init)
+    paths = [site_dir]
+    if strip_py4j:
+        py4j_dir = os.path.dirname(os.path.dirname(py4j_init))
+        if py4j_dir != site_dir:
+            paths.append(py4j_dir)
     spark_home = os.environ.get("SPARK_HOME", "")
     if spark_home:
         rel = os.path.join(spark_home, "RELEASE")
@@ -65,35 +78,80 @@ def _worker_python_wrapper() -> str | None:
     script = (
         f"#!{python}\n"
         "import os, sys\n"
-        f"_SITE = {site_dir!r}\n"
+        f"_PATHS = {paths!r}\n"
         f"_HOME = {home_real!r}\n"
+        f"_STRIP_PY4J = {strip_py4j!r}\n"
         "def _spark_archive(p):\n"
-        "    # pyspark.zip / py4j zip / spark-core jar that Spark prepends for\n"
-        "    # its own code — all provided by the directory install instead.\n"
+        "    # pyspark.zip / spark-core jar (and the py4j zip when py4j is a\n"
+        "    # directory install too) that Spark prepends for its own code.\n"
         "    # zipimporter.invalidate_caches() re-reads each archive's central\n"
         "    # directory once per task, which is the whole point of stripping.\n"
         "    if not p.endswith(('.zip', '.jar')):\n"
         "        return False\n"
         "    base = os.path.basename(p)\n"
-        "    if base.startswith(('pyspark', 'py4j', 'spark-core')):\n"
+        "    if base.startswith('py4j'):\n"
+        "        return _STRIP_PY4J\n"
+        "    if base.startswith(('pyspark', 'spark-core')):\n"
         "        return True\n"
         "    return _HOME is not None and os.path.realpath(p).startswith(_HOME + os.sep)\n"
         'parts = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]\n'
         "parts = [p for p in parts if not _spark_archive(p)]\n"
-        "if _SITE not in parts:\n"
-        "    parts.insert(0, _SITE)\n"
+        "parts = [p for p in _PATHS if p not in parts] + parts\n"
         'os.environ["PYTHONPATH"] = os.pathsep.join(parts)\n'
         f"os.execv({python!r}, [{python!r}] + sys.argv[1:])\n"
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pageeval_worker_python_{os.getuid()}_{abs(hash((python, site_dir, home_real))) % 10**8}")
+    return _private_script(script)
+
+
+def _private_script(script: str) -> str | None:
+    """Store ``script`` as an executable only the current user can have
+    written, and return its path (None when that cannot be guaranteed).
+
+    The directory ``<tempdir>/pageeval-<uid>`` must be a real directory
+    (lstat: not a symlink) owned by this uid with no group/other bits; the
+    file name is a digest of the script, so it is stable across processes
+    and hash seeds and never piles up.  An existing file is reused only when
+    it is a regular file owned by this uid with the same content; otherwise
+    a fresh copy is created with O_EXCL|O_NOFOLLOW under a random name and
+    renamed into place (rename replaces a planted symlink, never follows it).
+    """
+    uid = os.getuid()
+    folder = os.path.join(tempfile.gettempdir(), f"pageeval-{uid}")
     try:
-        if not os.path.exists(path) or open(path).read() != script:
-            with open(path, "w") as fh:
-                fh.write(script)
-        os.chmod(path, os.stat(path).st_mode | stat.S_IXUSR | stat.S_IXGRP | stat.S_IXOTH)
-    except OSError:  # pragma: no cover
+        os.makedirs(folder, 0o700, exist_ok=True)
+        st = os.lstat(folder)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != uid or st.st_mode & 0o077:
+        return None
+    data = script.encode()
+    name = f"pageeval_worker_python_{hashlib.sha256(data).hexdigest()[:16]}"
+    path = os.path.join(folder, name)
+    try:
+        fd = os.open(path, os.O_RDONLY | os.O_NOFOLLOW)
+    except OSError:
+        pass  # absent, or a symlink (ELOOP): write a fresh copy
+    else:
+        with os.fdopen(fd, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            if (stat.S_ISREG(st.st_mode) and st.st_uid == uid
+                    and st.st_mode & stat.S_IXUSR and fh.read() == data):
+                return path
+    tmp = os.path.join(folder, f".{name}.{os.urandom(8).hex()}")
+    try:
+        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY | os.O_NOFOLLOW, 0o700)
+    except OSError:
+        return None
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            os.fchmod(fh.fileno(), 0o700)  # umask may have cleared u+x
+            fh.write(data)
+        os.replace(tmp, path)
+    except OSError:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
         return None
     return path
 
@@ -152,30 +210,26 @@ def get_spark(app_name: str = "page-evaluator-spark", master: str | None = None,
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
     )
-    if (master.startswith("local")
-            and os.environ.get("PAGEEVAL_FAST_WORKERS", "").lower()
-            in ("1", "true", "yes")
-            and _worker_python_is_default()):
-        # OPT-IN (measured, r7): kill the per-task zipimport
-        # invalidate_caches tax in the workers (see _worker_python_wrapper —
-        # ~125 ms/task here; pipeline walls drop ~2.5-3x at every
-        # parallelism level).  Deliberately NOT the default: the frozen
-        # bench's N→4N scaling legs were DESIGNED so that per-task overhead
-        # amortizes fixed driver costs at the 30k-doc bench size
-        # (bench.py's "~2x the parallel compute" note); removing the tax
-        # exposes the ~1.5 s/run driver serial floor and the published
-        # 2c→8c ratio drops below the 0.8 contract bar even though
-        # pages/sec improves ~2.5x at BOTH levels.  Production deployments
-        # (long stages, millions of tasks) should set
-        # PAGEEVAL_FAST_WORKERS=1 — there the tax is pure loss and the
-        # serial floor is noise.  pyspark reads the worker executable from
-        # $PYSPARK_PYTHON at SparkContext init (core/context.py), so the
-        # env var — not a conf key — is the binding surface; a user setting
-        # pointing at a DIFFERENT interpreter is respected.
+    wrapper = None
+    if master.startswith("local") and _worker_python_is_default():
+        # Cluster executors keep Spark's default worker bootstrap: the
+        # wrapper is a path on THIS host (there the fix is baking a directory
+        # install into the executor image).
         wrapper = _worker_python_wrapper()
-        if wrapper:
-            os.environ["PYSPARK_PYTHON"] = wrapper
-    spark = builder.getOrCreate()
+    # pyspark reads the worker executable from $PYSPARK_PYTHON once, at
+    # SparkContext init (stored as sc.pythonExec, which every UDF uses), so
+    # the env var is the binding surface — set only around getOrCreate and
+    # restored after, so it cannot leak into a later session in this process.
+    saved = os.environ.get("PYSPARK_PYTHON")
+    if wrapper:
+        os.environ["PYSPARK_PYTHON"] = wrapper
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            os.environ.pop("PYSPARK_PYTHON", None)
+        else:
+            os.environ["PYSPARK_PYTHON"] = saved
     # executors must be able to unpickle the Arrow kernels no matter where
     # the driver was launched from (spark-submit --py-files also covers this;
     # addPyFile is the belt-and-braces for harness-built sessions)

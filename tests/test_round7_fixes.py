@@ -161,63 +161,6 @@ def test_repeated_substrings_single_explode_in_final_plan(spark):
     assert "ExistingRDD" in plan
 
 
-def test_worker_python_wrapper_mechanics():
-    """The opt-in PAGEEVAL_FAST_WORKERS wrapper (r7): strips Spark's
-    zip/jar archives from a worker's PYTHONPATH (their zipimporters make the
-    per-task importlib.invalidate_caches() re-read each archive's central
-    directory — ~125 ms/task measured) and substitutes the driver's
-    directory-form pyspark, so the exact same code executes via FileFinder
-    imports.  Tested without a Spark session: run the wrapper the way the
-    JVM launches a worker and check what the child imports."""
-    import glob
-    import os
-    import subprocess
-    import sys
-
-    from page_evaluator_spark.session import (_worker_python_is_default,
-                                              _worker_python_wrapper)
-
-    wrapper = _worker_python_wrapper()
-    if wrapper is None:  # driver itself runs pyspark from a zip — nothing to test
-        return
-    assert os.access(wrapper, os.X_OK)
-
-    spark_home = os.environ.get("SPARK_HOME", "")
-    lib = os.path.join(spark_home, "python", "lib")
-    py4j_zips = glob.glob(os.path.join(lib, "py4j-*-src.zip"))
-    assert len(py4j_zips) == 1, py4j_zips
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.pathsep.join([os.path.join(lib, "pyspark.zip"), py4j_zips[0]])
-    probe = ("import pyspark, py4j, json, sys; "
-             "print(json.dumps([pyspark.__file__, pyspark.__version__, "
-             "py4j.__file__]))")
-    out = subprocess.run([wrapper, "-c", probe], capture_output=True,
-                         text=True, env=env, timeout=120)
-    assert out.returncode == 0, out.stderr[-500:]
-    import json
-
-    import pyspark as driver_pyspark
-    pyfile, version, py4jfile = json.loads(out.stdout.strip().splitlines()[-1])
-    assert ".zip" not in pyfile, pyfile          # directory import, not zipimport
-    assert ".zip" not in py4jfile, py4jfile
-    assert version == driver_pyspark.__version__  # same code either way
-
-    # a PYSPARK_PYTHON pointing at this same interpreter counts as default
-    # (wrapping it changes bootstrap, not which Python runs); a different
-    # interpreter is an explicit user choice
-    old = os.environ.get("PYSPARK_PYTHON")
-    try:
-        os.environ["PYSPARK_PYTHON"] = sys.executable
-        assert _worker_python_is_default()
-        os.environ["PYSPARK_PYTHON"] = "/nonexistent/python9"
-        assert not _worker_python_is_default()
-    finally:
-        if old is None:
-            os.environ.pop("PYSPARK_PYTHON", None)
-        else:
-            os.environ["PYSPARK_PYTHON"] = old
-
-
 def test_parse_kernel_output_is_column_pruned(spark):
     """r7: each uncached pipeline branch declares only the parsed columns it
     consumes, so the Arrow boundary never ships the other ten (guide §4.1).
