@@ -7,7 +7,6 @@ Public API:
   evaluate_documents(docs, ...)      (doc_id, spans) table → PipelineOutputs
                                      {page_scores, spans_out, quarantine,
                                       page_meta, token_props, parsed}
-  score_pages_fused(docs)            zero-shuffle map-only scorer variant
   IncrementalRunner(spark, out_dir)  resumable lineage-tracked execution
   queries / oracle_sql               the 51-query harness (queries module)
 """
@@ -18,10 +17,3 @@ from .session import get_spark
 
 __all__ = ["IncrementalRunner", "PipelineOutputs", "evaluate_documents", "get_spark"]
 
-
-def __getattr__(name):  # lazy: keep fused/queries imports off the cold path
-    if name == "score_pages_fused":
-        from .operators.fused import score_pages_fused
-
-        return score_pages_fused
-    raise AttributeError(name)

@@ -63,21 +63,6 @@ def category_expr(tok: Column) -> Column:
     )
 
 
-def counter_aggs() -> list[Column]:
-    """Per-doc counter aggregates over a `category` column (OCRPage.java:124-135).
-
-    Partial (map-side) + final hash aggregation comes free from Catalyst, so
-    the shuffle carries ≤ one 11-int row per (doc, partition) — negligible at
-    any scale (SURVEY.md §2.5 A1).
-    """
-    aggs = [F.count("*").cast("int").alias("token_count")]
-    for cat in CATEGORIES:
-        aggs.append(
-            F.sum(F.when(F.col("category") == cat, 1).otherwise(0)).cast("int").alias(cat)
-        )
-    return aggs
-
-
 def with_scores(stats: DataFrame) -> DataFrame:
     """Attach correctable/quality scores (OCRPageStats.java:120-136).
 

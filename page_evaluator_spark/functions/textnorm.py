@@ -12,17 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Java String.trim() strips code points <= U+0020 from BOTH ends
-# (OCRPage.java:40).  Spark's F.trim strips only ' ' — use an explicit class.
-JAVA_TRIM_RE = "^[\\x00-\\x20]+|[\\x00-\\x20]+$"
-
 # OCRPage.java:11-12 — max leading/trailing punctuation removed by cleanToken.
 CLEAN_LEADING_RE = "^\\p{Punct}{0,1}"
 CLEAN_TRAILING_RE = "\\p{Punct}{0,3}$"
-
-# TxtPage.java:24 — end-of-line hyphenated word joiner (verbatim Java pattern;
-# (?m) kept for fidelity although the pattern has no ^/$ anchors).
-HYPHEN_WORD_RE = "(?m)(\\S*\\p{L})-\\n(\\p{L}\\S*)\\s*"
 
 # OpenNLP SimpleTokenizer (TxtPage.java:54) as a single Java regex:
 # letter runs | digit runs | same-char runs of 'other'.  Whitespace class =
@@ -30,11 +22,6 @@ HYPHEN_WORD_RE = "(?m)(\\S*\\p{L})-\\n(\\p{L}\\S*)\\s*"
 # \p{javaWhitespace} ∪ \p{Zs} in Java regex.  Character.isDigit == \p{Nd}.
 _WS_CC = "\\p{javaWhitespace}\\p{Zs}"
 SIMPLE_TOKENIZER_RE = f"\\p{{L}}+|\\p{{Nd}}+|([^\\p{{L}}\\p{{Nd}}{_WS_CC}])\\1*"
-
-
-def java_trim(col: Column) -> Column:
-    """Exact Java String.trim() (OCRPage.java:40)."""
-    return F.regexp_replace(col, JAVA_TRIM_RE, "")
 
 
 def clean_token(norm: Column) -> Column:
@@ -47,74 +34,6 @@ def clean_token(norm: Column) -> Column:
     return F.regexp_replace(F.regexp_replace(norm, CLEAN_LEADING_RE, ""), CLEAN_TRAILING_RE, "")
 
 
-def reflow_txt(text: Column) -> Column:
-    """TXT line filter + reflow (TxtPage.java:41-47): split lines, Java-trim
-    each, drop empties, re-join with a trailing '\\n' per kept line."""
-    lines = F.split(text, "\\r\\n|\\r|\\n")  # BufferedReader.readLine separators
-    trimmed = F.transform(lines, lambda x: F.regexp_replace(x, JAVA_TRIM_RE, ""))
-    kept = F.filter(trimmed, lambda x: x != F.lit(""))
-    return F.when(F.size(kept) > 0, F.concat(F.array_join(kept, "\n"), F.lit("\n"))) \
-            .otherwise(F.lit(""))
-
-
-def dehyphenate_txt(text: Column) -> Column:
-    """TxtPage.java:50-52 — HYPHEN_WORD_MATCHER.replaceAll("$1$2\\n")."""
-    return F.regexp_replace(text, HYPHEN_WORD_RE, "$1$2\n")
-
-
 def tokenize_txt(text: Column) -> Column:
     """Fully-native SimpleTokenizer: array of tokens (TxtPage.java:54)."""
     return F.regexp_extract_all(text, F.lit(SIMPLE_TOKENIZER_RE), 0)
-
-
-# A title segment the reference accepts: after Java-trim it still contains a
-# LITERAL space (HOCRToken.java:25 indexOf(" ") — tabs don't count), i.e. the
-# segment has nonws …  space … nonws.  A well-formed title is one-or-more such
-# segments ';'-joined, plus optional trailing ';'s (String.split drops ALL
-# trailing EMPTY segments, so "a 1;;;" is fine but "a 1; " crashes), OR a pure
-# ';'-run (";".split(";") is the EMPTY array → empty Properties, no crash).
-# Anchored \A..\z, NOT ^..$: Java's $ matches before a final line terminator,
-# so "a 1;\n" (kernel crash: trailing segment trims to '') would slip through.
-_TITLE_SEG_OK = "[^;]*[^;\\x00-\\x20][^;]* [^;]*[^;\\x00-\\x20][^;]*"
-TITLE_OK_RE = f"\\A{_TITLE_SEG_OK}(;{_TITLE_SEG_OK})*;*\\z"
-TITLE_EMPTY_RE = "\\A;+\\z"
-
-
-def hocr_title_to_map(title: Column) -> Column:
-    """hOCR ``title`` attribute → MAP<STRING,STRING> (HOCRToken.java:20-29).
-
-    Java splits on ';' (String.split drops TRAILING empty segments — stripped
-    here up front), Java-trims each segment, then splits it at its FIRST
-    space — Spark's str_to_map with a whitespace-absorbing pair delimiter
-    (pair split is first-occurrence).  Properties are carried metadata, never
-    used by the scoring cascade (SURVEY.md §2 P6).
-
-    Malformed titles the reference CRASHES on (StringIndexOutOfBounds:
-    empty title, leading/interior empty segment, whitespace-only trailing
-    segment, any segment without a post-trim space) return NULL — the native
-    crash-parity signal mirroring the kernel's ValueError → quarantine.
-
-    The map is assembled via map_from_entries over an explicitly
-    LAST-WINS-deduplicated entry array, NOT str_to_map: repeated keys
-    ("bbox …; bbox …") are legal for java.util.Properties (last put wins),
-    but map constructors under Spark's default mapKeyDedupPolicy=EXCEPTION
-    would abort the whole job on such a row, and this twin must not depend
-    on session configuration.
-    """
-    no_trailing = F.regexp_replace(title, "(;|[\\x00-\\x20])+$", "")
-    segs = F.split(F.regexp_replace(no_trailing, JAVA_TRIM_RE, ""), ";")
-    trimmed = F.transform(segs, lambda s: F.regexp_replace(s, JAVA_TRIM_RE, ""))
-    entries = F.transform(
-        trimmed,
-        lambda s: F.struct(
-            F.substring(s, 1, F.locate(" ", s) - 1).alias("k"),
-            F.substring(s, F.locate(" ", s) + 1, F.length(s)).alias("v")))
-    # Properties.put last-wins: drop an entry when the SAME key occurs later
-    last_wins = F.filter(
-        entries,
-        lambda e, i: ~F.exists(F.slice(entries, i + 2, F.size(entries)),
-                               lambda x: x["k"] == e["k"]))
-    parsed = F.map_from_entries(last_wins)
-    empty = F.create_map().cast("map<string,string>")
-    return (F.when(title.rlike(TITLE_EMPTY_RE), empty)
-            .when(title.rlike(TITLE_OK_RE), parsed))

@@ -1,6 +1,6 @@
 """Parse/extract stage: interleaved-span documents → token/media/meta/error rows.
 
-The ONLY Python boundary in the pipeline (Arrow-batched ``mapInPandas``; no
+The ONLY Python boundary in the pipeline (Arrow-batched ``mapInArrow``; no
 per-row Python UDFs, per BASELINE.json input_hint).  Everything downstream
 (classification, aggregation, scoring) is native Catalyst.
 
@@ -14,8 +14,9 @@ Semantics transliterated from the read-only reference (citations inline):
   hOCR:  HOCRPage.java:37-62, HOCRTokenIterator.java:21-82, HOCRToken.java:20-42
   TXT:   TxtPage.java:37-61 + OpenNLP SimpleTokenizer 1.5.3
   fold:  OCRPage.java:38-49 (trim → EOL-hyphen join → drop empty)
-Deviation (required at 10^12-doc scale): parse failures become quarantine rows
-instead of the reference's process-kill (Main.java:46-49) — SURVEY.md §2 S5.
+Deviation (required at 10^12-doc scale): parse failures, unknown kinds and
+spans with a null kind or offset become quarantine rows instead of the
+reference's process-kill (Main.java:46-49) — SURVEY.md §2 S5.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ import unicodedata
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 import regex
 from pyspark.sql import DataFrame
@@ -122,26 +122,9 @@ def _title_props(title: str) -> dict[str, str]:
     return props
 
 
-def _title_props_check(title: str) -> None:
-    """Validation-only `_title_props`: raises the IDENTICAL ValueError on the
-    same (first) malformed segment, but skips the dict build.  Used by the
-    column-pruned kernels that do not emit `props` — the crash parity that
-    turns a bad title into an error row must hold regardless of which output
-    columns a branch consumes."""
-    segs = title.split(";")
-    if len(segs) > 1:
-        while segs and segs[-1] == "":
-            segs.pop()
-    for seg in segs:
-        seg = seg.strip(_JAVA_TRIM)
-        if seg.find(" ") < 0:
-            raise ValueError(f"bad hOCR title segment: {seg!r}")
-
-
 def _parse_hocr(
     xml_text: str,
-    want_props: bool = True,
-) -> tuple[list[str], list[bool], list[dict[str, str]] | None, list[int],
+) -> tuple[list[str], list[bool], list[dict[str, str]], list[int],
            list[int], str, str, list[str]]:
     """→ (token_texts, is_last_on_line flags, per-token title props,
     per-token line indices, per-token within-line indices, page_id, engine,
@@ -150,9 +133,6 @@ def _parse_hocr(
     Raises ValueError on anything the reference turns into PageParserException
     or a crash (missing ocr_page → NPE, HOCRPage.java:53-61; malformed title
     segment → StringIndexOutOfBounds, HOCRToken.java:22-29).
-
-    want_props=False validates every title (same errors, same order) but
-    returns None instead of the per-token dicts — the pruned-kernel path.
     """
     try:
         root = ET.fromstring(xml_text)
@@ -176,7 +156,7 @@ def _parse_hocr(
 
     texts: list[str] = []
     last: list[bool] = []
-    props: list[dict[str, str]] | None = [] if want_props else None
+    props: list[dict[str, str]] = []
     lines: list[int] = []
     toks: list[int] = []
     li = -1
@@ -186,10 +166,7 @@ def _parse_hocr(
         if n:
             li += 1
         for i, w in enumerate(words):
-            if want_props:  # HOCRToken.java:20-29 (check-only keeps crash parity)
-                props.append(_title_props(w.get("title", "")))
-            else:
-                _title_props_check(w.get("title", ""))
+            props.append(_title_props(w.get("title", "")))  # HOCRToken.java:20-29
             texts.append("".join(w.itertext()))  # getTextContent, HOCRToken.java:40-42
             last.append(i == n - 1)  # HOCRTokenIterator.java:45
             lines.append(li)
@@ -197,44 +174,15 @@ def _parse_hocr(
     return texts, last, props, lines, toks, page_id, engine, caps.split(" ")
 
 
-# --- the sequential fold, vectorized (OCRPage.java:38-49) --------------------
-
-def join_hyphen_tokens(texts: list[str], is_last: list[bool]) -> list[str]:
-    """Trim → EOL-hyphen join → drop empties → NFC (OCRPage.java:38-49).
-
-    Sequential semantics: a candidate (is_last ∧ endswith('-') ∧ hasNext)
-    consumes the NEXT token; the consumed token never joins on its own and the
-    joined result is not re-checked (no chains).  Within a maximal run of
-    consecutive candidates, joins therefore alternate — computed vectorized
-    via run-position parity instead of a Python loop.
-    """
-    n = len(texts)
-    if n == 0:
-        return []
-    t = np.array([s.strip(_JAVA_TRIM) for s in texts], dtype=object)
-    cand = np.fromiter(
-        (bool(is_last[i]) and t[i].endswith("-") and i < n - 1 for i in range(n)),
-        dtype=bool, count=n)
-    idx = np.arange(n)
-    run_start = np.maximum.accumulate(np.where(cand, 0, idx + 1))  # start of candidate run
-    join = cand & (((idx - run_start) % 2) == 0)
-    consumed = np.zeros(n, dtype=bool)
-    consumed[1:] = join[:-1]
-    out: list[str] = []
-    for i in range(n):
-        if consumed[i]:
-            continue
-        s = t[i][:-1] + t[i + 1] if join[i] else t[i]
-        if s:  # OCRPage.java:48-49
-            # frozen NFC rule (CANON_EQ); identity on ASCII, skipped cheaply
-            out.append(s if s.isascii() else unicodedata.normalize("NFC", s))
-    return out
-
-
-# --- hyphen fold with provenance (for the token relation) --------------------
+# --- hyphen fold with provenance (OCRPage.java:38-49) -------------------------
 
 def _fold_tokens(texts: list[str], is_last: list[bool]) -> tuple[list[str], list[int]]:
-    """join_hyphen_tokens + the ORIGINAL index of each surviving (first) token.
+    """Trim → EOL-hyphen join → drop empties → NFC, plus the ORIGINAL index
+    of each surviving (first) token.
+
+    Sequential semantics: a candidate (is_last ∧ endswith('-') ∧ hasNext)
+    consumes the NEXT token; the consumed token never joins on its own and
+    the joined result is not re-checked (no chains).
 
     Returns parallel lists (token_texts, src_idxs); callers index any
     per-source-token payload (line/tok provenance, hOCR title props) by
@@ -336,7 +284,7 @@ def _make_parse_kernel(columns: tuple[str, ...]):
     (doc_id, span_offset, kind, text, media_ref), emitting only `columns`.
 
     Parsing work is IDENTICAL for every column subset (a branch that never
-    reads `props` still validates each hOCR title so error rows match); only
+    reads `props` still parses each hOCR title so error rows match); only
     the materialization/serialization of the dropped columns is skipped.
     """
     want_props = "props" in columns
@@ -353,7 +301,13 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                     rb.column("text").to_pylist(),
                     rb.column("media_ref").to_pylist()):
                 if kind is None or span_offset is None:
-                    out.add(doc_id, 0, 0, "empty")  # zero-span document marker
+                    if all(v is None for v in (kind, span_offset, text, media_ref)):
+                        # explode_outer's row for a zero-span / null-spans doc
+                        out.add(doc_id, 0, 0, "empty")
+                    else:  # a malformed span goes to quarantine, never dropped
+                        field = "kind" if kind is None else "offset"
+                        out.add(doc_id, span_offset, -1, "error",
+                                error=f"InvalidSpan: null {field}")
                     continue
                 if kind in MEDIA_KINDS:
                     out.add(doc_id, span_offset, 0, kind, media_ref=media_ref)
@@ -361,8 +315,7 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                 try:
                     if kind == "hocr":
                         (texts, last, tprops, lines, toks,
-                         page_id, engine, caps) = _parse_hocr(
-                            text or "", want_props=want_props)
+                         page_id, engine, caps) = _parse_hocr(text or "")
                         out.add(doc_id, span_offset, -1, "page", page_id=page_id,
                                 engine=engine, caps=caps)
                         folded_t, src = _fold_tokens(texts, last)

@@ -19,12 +19,6 @@ SCORE_COLUMNS = ["doc_id", "token_count", *CATEGORIES,
                  "correctable_score", "quality_score"]
 
 
-def classify_words(parsed: DataFrame) -> DataFrame:
-    """word rows → + category column (native regex cascade)."""
-    return (parsed.where(F.col("kind") == "word")
-            .withColumn("category", category_expr(F.col("text"))))
-
-
 def with_category(parsed: DataFrame) -> DataFrame:
     """All parsed rows → + category column (null for non-word rows)."""
     return parsed.withColumn(
@@ -32,20 +26,12 @@ def with_category(parsed: DataFrame) -> DataFrame:
         F.when(F.col("kind") == "word", category_expr(F.col("text"))))
 
 
-def score_pages(parsed: DataFrame, all_docs: DataFrame | None = None) -> DataFrame:
-    """Parsed relation → page_scores (FIXTURES.md §2).
-
-    ``all_docs`` (optional, (doc_id) relation) is only needed if the parsed
-    relation was pre-filtered; the standard pipeline covers every document
-    already via marker rows.
-    """
+def score_pages(parsed: DataFrame) -> DataFrame:
+    """Parsed relation → page_scores (FIXTURES.md §2)."""
     is_word = F.col("category").isNotNull()
     aggs = [F.sum(F.when(is_word, 1).otherwise(0)).cast("int").alias("token_count")]
     for cat in CATEGORIES:
         aggs.append(F.sum(F.when(F.col("category") == cat, 1).otherwise(0))
                     .cast("int").alias(cat))
     stats = with_category(parsed).groupBy("doc_id").agg(*aggs)
-    if all_docs is not None:
-        base = all_docs.select("doc_id").distinct()
-        stats = base.join(stats, "doc_id", "left").na.fill(0, ["token_count", *CATEGORIES])
     return with_scores(stats).select(*SCORE_COLUMNS)

@@ -28,3 +28,8 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf01_dir() -> str:
     return "/root/testdata/sf0.01"
+
+
+def plan_string(df) -> str:
+    """The executed physical plan of ``df`` as Spark renders it."""
+    return df._jdf.queryExecution().executedPlan().toString()

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from .conftest import plan_string
+
 
 def test_connected_components_known_graph(spark):
     from page_evaluator_spark.operators.curation import connected_components
@@ -166,7 +168,7 @@ def test_benchmark_contamination_counts_and_plan(spark):
                    "d2": (1, True),
                    "d3": (0, False),
                    "d4": (0, False)}
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(out)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan[:1500]
 
 

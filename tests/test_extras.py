@@ -9,6 +9,8 @@ import pytest
 
 from page_evaluator_spark.corpus import corpus_to_spark_df, gen_corpus
 
+from .conftest import plan_string
+
 
 def test_lexicon_match_rates(spark):
     from page_evaluator_spark.operators.lexicon import (
@@ -35,7 +37,7 @@ def test_lexicon_match_rates(spark):
     joined = scores_with_match_rates(score_pages(parsed), rates)
     assert joined.count() == docs.count()
     # broadcast hint visible in the physical plan
-    plan = rates._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(rates)
     assert "Broadcast" in plan
 
 
@@ -323,7 +325,7 @@ def test_ivf_ann_recall_and_plan_shape(spark, sf01_dir):
     # query probes are broadcast
     df = ivf_ann_topk(e, q, k=10)
     df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(df)
     assert "BroadcastHashJoin [cell" in plan, plan[:1500]
     probe_side = plan.split("BroadcastHashJoin", 1)[1]
     corpus_branch = probe_side.split(":- ", 1)[1].split("+- BroadcastExchange")[0]

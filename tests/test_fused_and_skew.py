@@ -1,31 +1,15 @@
-"""Fused zero-shuffle scorer equivalence + plan-shape guarantees + skew helpers."""
+"""Plan-shape guarantees (one shuffle for scores, sharded windows, broadcast
+and bucketed joins, AQE skew splits) and the skew helpers."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from page_evaluator_spark.corpus import corpus_to_spark_df, fixtures_docs, gen_corpus
-from page_evaluator_spark.operators.fused import score_pages_fused
-from page_evaluator_spark.operators.score import score_pages
 from page_evaluator_spark.operators.parse import parse_documents
+from page_evaluator_spark.operators.score import score_pages
 
-
-def _rows(df):
-    return {r["doc_id"]: tuple(r[c] for c in df.columns if c != "doc_id")
-            for r in df.collect()}
-
-
-def test_fused_equals_standard(spark):
-    docs = corpus_to_spark_df(spark, gen_corpus(60, seed=21, include_fixtures=True))
-    std = score_pages(parse_documents(docs))
-    fused = score_pages_fused(docs).select(*std.columns)
-    assert _rows(std) == _rows(fused)
-
-
-def test_fused_plan_is_map_only(spark):
-    docs = corpus_to_spark_df(spark, fixtures_docs())
-    plan = score_pages_fused(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, "fused scorer must not shuffle"
+from .conftest import plan_string
 
 
 def test_standard_scores_single_shuffle(spark, tmp_path):
@@ -34,7 +18,7 @@ def test_standard_scores_single_shuffle(spark, tmp_path):
     p = str(tmp_path / "c.parquet")
     write_corpus_parquet(p, fixtures_docs())
     scores = score_pages(parse_documents(spark.read.parquet(p)))
-    plan = scores._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(scores)
     assert plan.count("Exchange") == 1, f"expected exactly one shuffle:\n{plan}"
 
 
@@ -73,48 +57,6 @@ def test_size_hint_and_salting(spark):
     assert any(r["doc_id"] == "skew000" for r in report)
 
 
-def test_apply_in_pandas_scorer_equals_standard(spark):
-    """The applyInPandas UDAF-shape scorer agrees with the native plan on
-    docs that have ≥1 token (it only sees word rows by construction)."""
-    import pyspark.sql.functions as F
-    from page_evaluator_spark.operators.fused import score_words_grouped
-
-    docs = corpus_to_spark_df(spark, gen_corpus(30, seed=13, include_fixtures=True))
-    parsed = parse_documents(docs)
-    words = parsed.where(F.col("kind") == "word")
-    std = score_pages(parsed).where(F.col("token_count") > 0)
-    grouped = score_words_grouped(words).select(*std.columns)
-    assert _rows(std) == _rows(grouped)
-
-
-def test_native_txt_scorer_equals_standard(spark):
-    """Zero-Python TXT plan == standard Arrow-kernel plan on NFC-stable input."""
-    import random as _r
-
-    from page_evaluator_spark.operators.native_txt import score_text_docs_native
-
-    rng = _r.Random(77)
-    vocab = ["whereunto", "quality", "a.", "!!", "1,234.56", "$100", "I",
-             "mmmm", "vn'to", "q3e1n", "h0u5e9", "...", "?!", "to", "esti-",
-             "mation", "wrap-"]
-    docs = []
-    for i in range(40):
-        lines = ["  ".join(rng.choice(vocab) for _ in range(rng.randint(0, 8)))
-                 for _ in range(rng.randint(0, 6))]
-        docs.append({"doc_id": f"t{i:03d}", "spans": [
-            {"kind": "text", "text": "\n".join(lines) + "\n", "media_ref": None,
-             "offset": 0}]})
-    docs.append({"doc_id": "t_empty", "spans": [
-        {"kind": "text", "text": "", "media_ref": None, "offset": 0}]})
-    df = corpus_to_spark_df(spark, docs)
-    std = score_pages(parse_documents(df))
-    nat = score_text_docs_native(df).select(*std.columns)
-    assert _rows(std) == _rows(nat)
-    # zero Python anywhere in the native plan
-    plan = nat._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "ArrowEval" not in plan
-
-
 def test_pack_token_budget_window_is_sharded(spark, sf_dir):
     """The packing window must partition by shard — a global ordered window
     would serialize 100 TB into one task."""
@@ -122,7 +64,7 @@ def test_pack_token_budget_window_is_sharded(spark, sf_dir):
 
     df = pack_token_budget(spark.read.parquet(f"{sf_dir}/documents.parquet"),
                            budget=512, n_shards=16)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(df)
     assert "Window" in plan
     # Spark renders a global window as 'Window [...], [ts ASC...]' with an
     # EMPTY partition spec; the sharded one carries 'partitionBy' semantics
@@ -141,7 +83,7 @@ def test_tfidf_df_is_agg_join_not_term_window(spark, sf_dir):
 
     df = tfidf_top_terms(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()  # AQE-final plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(df)
     plan = plan.split("== Initial Plan ==")[0]
     assert "Join" in plan, plan[:2000]
     assert "windowspecdefinition" in plan, "per-lang top-k window missing"
@@ -153,7 +95,7 @@ def test_lexicon_join_is_broadcast(spark, sf_dir):
     from page_evaluator_spark.queries import lexicon_match_rate
 
     df = lexicon_match_rate(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(df)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
 
 
@@ -182,7 +124,7 @@ def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
                   .groupBy("o_orderpriority")
                   .agg(F2.count("*").alias("n")))
         rows = {r["o_orderpriority"]: r["n"] for r in joined.collect()}
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = plan_string(joined)
         plan = plan.split("== Initial Plan ==")[0]  # AQE appends the pre-plan
         assert "Bucketed: true" in plan
         # the JOIN itself must consume bucket layout directly: no Exchange may
@@ -222,7 +164,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         dim = spark.range(201).select(F2.col("id").alias("k"), (F2.col("id") * 2).alias("w"))
         j = hot.union(cold).join(dim, "k").select("k", "v", "w")
         assert len(j.toPandas()) == 320_000  # finalizes THIS queryExecution
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = plan_string(j)
         final = plan.split("== Initial Plan ==")[0]
         assert "skew=true" in final, final[:1500]
         assert "skewed" in final, final[:1500]

@@ -1,6 +1,6 @@
 """Parity of the NATIVE (JVM Catalyst) expression layer against the oracle:
-classification cascade, cleaning, native TXT tokenizer, and property-based
-cross-checks of the vectorized hyphen join.
+classification cascade, cleaning and the native TXT tokenizer, plus
+property-based checks of the kernel's SimpleTokenizer regex.
 """
 
 from __future__ import annotations
@@ -13,14 +13,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from page_evaluator_spark.functions.classify import category_expr
-from page_evaluator_spark.functions.textnorm import (
-    clean_token,
-    dehyphenate_txt,
-    java_trim,
-    reflow_txt,
-    tokenize_txt,
-)
-from page_evaluator_spark.operators.parse import _tokenize_txt, join_hyphen_tokens
+from page_evaluator_spark.functions.textnorm import clean_token, tokenize_txt
+from page_evaluator_spark.operators.parse import _tokenize_txt
 
 from . import oracle
 
@@ -65,13 +59,6 @@ def test_native_clean_matches_oracle(spark):
         assert got[t] == oracle.clean_token(t), repr(t)
 
 
-def test_native_java_trim(spark):
-    cases = ["\x00\x1f hello \t\n", " x ", "", "\t\t", "a "]  # nbsp not trimmed
-    df = spark.createDataFrame([(t,) for t in cases], "text string")
-    got = [r["t"] for r in df.select(java_trim(F.col("text")).alias("t")).collect()]
-    assert got == [oracle.java_trim(c) for c in cases]
-
-
 def test_native_txt_tokenizer_matches_oracle(spark):
     texts = [
         "wait... what?! now",
@@ -97,7 +84,9 @@ def test_native_txt_tokenizer_matches_oracle(spark):
         assert [m.group(0) for m in _TOKEN.finditer(t)] == oracle.simple_tokenize(t), repr(t)
 
 
-def test_native_txt_full_parse_matches_oracle(spark):
+def test_native_txt_full_parse_matches_oracle():
+    """Full TXT parse (reflow, dehyphenation, SimpleTokenizer): the kernel's
+    _tokenize_txt against the oracle (the native twin is gone)."""
     texts = [
         "The quality of  mercy\n\n   \nis not estima-\ntion...  but?! rather\n",
         "aaa-\nbbb-\nccc ddd-\neee\n",
@@ -106,25 +95,8 @@ def test_native_txt_full_parse_matches_oracle(spark):
         "trail-\n",
         "a-\nb-\nc-\nd\n",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    expr = tokenize_txt(dehyphenate_txt(reflow_txt(F.col("text"))))
-    got = {r["text"]: list(r["toks"]) for r in df.withColumn("toks", expr).collect()}
     for t in texts:
-        exp = [tok.text for tok in oracle.parse_txt(t).tokens]
-        assert got[t] == exp, repr(t)
-        # and the pandas-UDF implementation agrees too
-        assert _tokenize_txt(t) == exp, repr(t)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(
-    st.tuples(st.text(alphabet=_ALPHABET + "-", min_size=0, max_size=8), st.booleans()),
-    min_size=0, max_size=12))
-def test_vectorized_hyphen_join_matches_sequential(toks):
-    tokens = [oracle.Token(t, last) for t, last in toks]
-    assert join_hyphen_tokens([t for t, _ in toks], [l for _, l in toks]) \
-        == oracle.final_tokens(tokens)
-
+        assert _tokenize_txt(t) == [tok.text for tok in oracle.parse_txt(t).tokens], repr(t)
 
 # line-terminator-ish chars BufferedReader.readLine does NOT split on —
 # exercise them in the property pools (ADVICE r1 #1)
@@ -163,14 +135,10 @@ def test_category_partition_properties(spark):
             assert r[s] == -1.0 or 0.0 <= r[s] <= 1.0
 
 
-def test_hocr_title_to_map(spark):
-    """str_to_map first-space split == HOCRToken.java:20-29 Properties parse."""
-    from page_evaluator_spark.functions.textnorm import hocr_title_to_map
-
-    cases = ["bbox 393 604 442 620; x_wconf 85", "a 1;b 2 3;  c x y z  "]
-    df = spark.createDataFrame([(t,) for t in cases], "title string")
-    got = {r["title"]: r["m"]
-           for r in df.withColumn("m", hocr_title_to_map(F.col("title"))).collect()}
+def test_hocr_title_to_map():
+    """The kernel's title map == HOCRToken.java:20-29's Properties parse,
+    both as written out here and as the oracle computes it."""
+    from .test_parse_kernel import _title_kernel_vs_oracle
 
     def java_props(title):
         props = {}
@@ -180,9 +148,9 @@ def test_hocr_title_to_map(spark):
             props[seg[:i]] = seg[i + 1:]
         return props
 
-    for t in cases:
-        assert got[t] == java_props(t), t
-
+    for t in ["bbox 393 604 442 620; x_wconf 85", "a 1;b 2 3;  c x y z  "]:
+        kernel, expected = _title_kernel_vs_oracle(t)
+        assert kernel == expected == java_props(t), t
 
 def test_hocr_page_fuzz_parity(spark):
     """Seeded fuzz: random hOCR pages (hyphen-ended words, whitespace-padded

@@ -10,7 +10,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from page_evaluator_spark.functions.classify import category_expr
-from page_evaluator_spark.operators.fused import _classify
 from page_evaluator_spark.operators.parse import (
     _parse_hocr,
     _title_props,
@@ -18,6 +17,7 @@ from page_evaluator_spark.operators.parse import (
 )
 
 from . import oracle
+from .test_parse_kernel import _title_kernel_vs_oracle, hocr_with_title
 
 # ---------------------------------------------------------------------------
 # ADVICE #1: BufferedReader.readLine splits ONLY on \n / \r / \r\n — never on
@@ -41,35 +41,17 @@ def test_txt_no_split_on_non_readline_terminators():
     assert _tokenize_txt("ab-\rcd") == ["abcd"]
 
 
-def test_txt_udf_matches_native_twin_on_terminators(spark):
-    from page_evaluator_spark.functions.textnorm import (
-        dehyphenate_txt,
-        reflow_txt,
-        tokenize_txt,
-    )
-
-    texts = [f"ab-{ch}cd\nxy-\nz {ch} q" for ch in TERMINATORISH]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    expr = tokenize_txt(dehyphenate_txt(reflow_txt(F.col("text"))))
-    got = {r["text"]: list(r["toks"]) for r in df.withColumn("toks", expr).collect()}
-    for t in texts:
-        assert got[t] == _tokenize_txt(t), repr(t)
-        assert got[t] == [tok.text for tok in oracle.parse_txt(t).tokens], repr(t)
-
+def test_txt_udf_matches_native_twin_on_terminators():
+    """Full TXT parse (reflow, dehyphenation, SimpleTokenizer) with the
+    non-readline terminators inside lines; the native twin is gone, the
+    kernel is held to the oracle."""
+    for t in [f"ab-{ch}cd\nxy-\nz {ch} q" for ch in TERMINATORISH]:
+        assert _tokenize_txt(t) == [tok.text for tok in oracle.parse_txt(t).tokens], repr(t)
 
 # ---------------------------------------------------------------------------
 # ADVICE #2: Java String.split(";") drops TRAILING empty segments — a trailing
 # ';' in an hOCR title is legal; "" still crashes (Java "".split(";") == [""]).
 # ---------------------------------------------------------------------------
-
-def _hocr_with_title(title: str) -> str:
-    esc = title.replace("&", "&amp;").replace('"', "&quot;").replace("<", "&lt;")
-    return (
-        "<html><head></head><body><div class='ocr_page' id='p1'>"
-        f"<span class='ocr_line'><span class='ocrx_word' title=\"{esc}\">w</span></span>"
-        "</div></body></html>"
-    )
-
 
 TITLE_OK = {
     "bbox 1 2 3 4;": {"bbox": "1 2 3 4"},                       # trailing ';'
@@ -85,16 +67,34 @@ TITLE_BAD = ["", "bbox", ";a b", "a b;;c", "a b; ;c d"]  # space-less segment so
 def test_title_props_java_split_semantics():
     for title, expected in TITLE_OK.items():
         assert _title_props(title) == expected, repr(title)
-        texts, last, props, *_ = _parse_hocr(_hocr_with_title(title))
+        texts, last, props, *_ = _parse_hocr(hocr_with_title(title))
         assert props == [expected], repr(title)
-        op = oracle.parse_hocr(_hocr_with_title(title))
+        op = oracle.parse_hocr(hocr_with_title(title))
         assert op.error is None, repr(title)
         assert [t.props for t in op.tokens] == [expected], repr(title)
     for title in TITLE_BAD:
         with pytest.raises(ValueError):
             _title_props(title)
-        assert oracle.parse_hocr(_hocr_with_title(title)).error is not None, repr(title)
+        assert oracle.parse_hocr(hocr_with_title(title)).error is not None, repr(title)
 
+
+def test_native_title_map_matches_kernel():
+    """The kernel's title parser on the awkward cases: trailing ';', padded
+    segments, first-space split."""
+    for title in ["bbox 393 604 442 620; x_wconf 85", "a 1;b 2 3;  c x y z  ",
+                  "bbox 1 2 3 4;", "a 1 ; b 2"]:
+        assert _title_props(title) == {
+            k.strip(): v for k, v in (
+                (seg.strip().split(" ", 1)[0], seg.strip().split(" ", 1)[1])
+                for seg in title.rstrip("; \t").split(";"))}
+
+
+def test_native_title_map_trailing_semicolon():
+    """Trailing/repeated ';' and repeated keys: the kernel's map through
+    the hOCR route equals both _title_props and the oracle's."""
+    for t in ["bbox 1 2 3 4;", "bbox 1 2 3 4;;", "a 1 ; b 2", "a 1;a 2"]:
+        kernel, expected = _title_kernel_vs_oracle(t)
+        assert kernel == expected == _title_props(t), repr(t)
 
 def test_trailing_semicolon_title_not_quarantined(spark):
     """End-to-end: a doc whose only span carries title='bbox 1 2 3 4;' must
@@ -103,7 +103,7 @@ def test_trailing_semicolon_title_not_quarantined(spark):
     from page_evaluator_spark.plans.pipeline import evaluate_documents
 
     docs = [{"doc_id": "t1", "spans": [
-        {"kind": "hocr", "text": _hocr_with_title("bbox 1 2 3 4;"),
+        {"kind": "hocr", "text": hocr_with_title("bbox 1 2 3 4;"),
          "media_ref": None, "offset": 0}]}]
     out = evaluate_documents(corpus_to_spark_df(spark, docs))
     assert out.quarantine.count() == 0
@@ -121,16 +121,12 @@ MATCHES_CASES = ["12 ", "12 ", "12\x85", "! ", "a ",
                  "$1,2 ", "12", "!", "a"]
 
 
-def test_matches_semantics_native_fused_oracle_agree(spark):
+def test_matches_semantics_native_oracle_agree(spark):
     df = spark.createDataFrame([(t,) for t in MATCHES_CASES], "text string")
     got = {r["text"]: r["cat"]
            for r in df.withColumn("cat", category_expr(F.col("text"))).collect()}
-    from page_evaluator_spark.operators.fused import _CATS
-
     for t in MATCHES_CASES:
-        exp = oracle.classify_token(t)
-        assert got[t] == exp, repr(t)
-        assert _CATS[_classify(t)] == exp, repr(t)
+        assert got[t] == oracle.classify_token(t), repr(t)
     # the three clean ones still hit their categories
     assert got["12"] == "number_objects"
     assert got["!"] == "punct"
@@ -178,29 +174,6 @@ def test_token_props_carried_end_to_end(spark):
         {"bbox": "1 2 3 4", "x_wconf": "85"},
         {"bbox": "5 6 7 8", "x_wconf": "40"},
         {"bbox": "9 9 9 9", "x_wconf": "99"}]
-
-
-def test_native_title_map_matches_kernel():
-    from page_evaluator_spark.functions.textnorm import hocr_title_to_map  # noqa: F401
-    # (native twin exercised in test_native_parity; here pin the kernel on the
-    # same awkward cases the native twin handles)
-    for title in ["bbox 393 604 442 620; x_wconf 85", "a 1;b 2 3;  c x y z  ",
-                  "bbox 1 2 3 4;", "a 1 ; b 2"]:
-        assert _title_props(title) == {
-            k.strip(): v for k, v in (
-                (seg.strip().split(" ", 1)[0], seg.strip().split(" ", 1)[1])
-                for seg in title.rstrip("; \t").split(";"))}
-
-
-def test_native_title_map_trailing_semicolon(spark):
-    from page_evaluator_spark.functions.textnorm import hocr_title_to_map
-
-    cases = ["bbox 1 2 3 4;", "bbox 1 2 3 4;;", "a 1 ; b 2", "a 1;a 2"]
-    df = spark.createDataFrame([(t,) for t in cases], "title string")
-    got = {r["title"]: dict(r["m"])
-           for r in df.withColumn("m", hocr_title_to_map(F.col("title"))).collect()}
-    for t in cases:
-        assert got[t] == _title_props(t), repr(t)
 
 
 # ---------------------------------------------------------------------------
@@ -326,12 +299,12 @@ _TITLE_ALPHABET = "ab1 ;\t_x\x1f "
 @given(st.text(alphabet=_TITLE_ALPHABET, min_size=0, max_size=24))
 def test_title_props_fuzz_kernel_vs_oracle(title):
     """Kernel and oracle must agree on crash/no-crash AND the parsed map for
-    arbitrary titles.  Both sides go through the SAME XML route (the DOM
-    normalizes tabs in attribute values to spaces, exactly like the
-    reference's parser), so compare _parse_hocr, not _title_props directly."""
+    arbitrary titles.  Both sides go through the SAME XML route (what the
+    XML parser does to the attribute value, the reference's parser does
+    too), so compare _parse_hocr, not _title_props directly."""
     if "<" in title or "&" in title or '"' in title:
         return
-    xml = _hocr_with_title(title)
+    xml = hocr_with_title(title)
     try:
         _texts, _last, kprops, *_ = _parse_hocr(xml)
         kernel, kernel_err = kprops[0], None

@@ -1,7 +1,7 @@
 """Round-3 fixes pinned by test (VERDICT r2 + ADVICE r2 items).
 
-- native hocr_title_to_map crash-parity guard (ADVICE #3): titles the Java
-  reference crashes on → NULL from the twin, ValueError from the kernel;
+- the kernel's title parser raises exactly on the titles the Java reference
+  crashes on and builds the oracle's map otherwise (kernel vs oracle);
 - simhash_near_pairs rejects n_bands != 4 (ADVICE #2);
 - token_props x_wconf survives fractional confidences (ADVICE #5);
 - golden oracle dir is derived from the package location (ADVICE #4);
@@ -11,25 +11,10 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from page_evaluator_spark.operators.parse import _title_props
 
-# Titles HOCRToken.java:20-29 parses fine (well-formed per the Java split;
-# ";"/";;" split to the EMPTY array → empty Properties, no crash).
-TITLE_GOOD = ["bbox 393 604 442 620; x_wconf 85", "a 1;b 2 3;  c x y z  ",
-              "bbox 1 2 3 4;", "a 1;;", "a 1;;;", "a 1 ; b 2", "a  1",
-              ";", ";;",
-              # repeated keys: java.util.Properties last-put-wins — must NOT
-              # abort under Spark's default mapKeyDedupPolicy=EXCEPTION
-              "bbox 1 2 3 4; bbox 5 6 7 8", "a 1;a 2;a 3"]
-
-# Titles the reference CRASHES on (StringIndexOutOfBounds): empty title,
-# leading/interior empty segment, whitespace-only trailing segment, segment
-# with no post-trim literal space (tabs don't count for indexOf(" ")).
-# Trailing \n/\r: Java's $ would match before the terminator — anchors are \z.
-TITLE_BAD = ["", " ", "; ", "a 1; ", "a 1;;b 2", ";a 1", "a 1; ;b 2",
-             "abc", "a\t1", "a 1;b", "a 1;\n", "a 1;\r", ";;\n"]
+from .test_parse_kernel import TITLE_BAD, TITLE_GOOD, _title_kernel_vs_oracle
 
 
 def test_kernel_title_props_good_and_bad():
@@ -40,21 +25,16 @@ def test_kernel_title_props_good_and_bad():
             _title_props(t)
 
 
-def test_native_title_map_crash_parity(spark):
-    """The native twin returns NULL exactly where the kernel raises — lenient
-    divergence on malformed titles (ADVICE r2 #3) is closed."""
-    from page_evaluator_spark.functions.textnorm import hocr_title_to_map
-
-    cases = TITLE_GOOD + TITLE_BAD
-    df = spark.createDataFrame([(t,) for t in cases], "title string")
-    got = {r["title"]: r["m"]
-           for r in df.withColumn("m", hocr_title_to_map(F.col("title"))).collect()}
+def test_native_title_map_crash_parity():
+    """The kernel raises exactly where the Java reference crashes and builds
+    the same Properties map otherwise (its native twin is gone; the parity
+    is now kernel vs oracle through the same hOCR route)."""
     for t in TITLE_GOOD:
-        assert got[t] is not None, repr(t)
-        assert dict(got[t]) == _title_props(t), repr(t)
+        kernel, expected = _title_kernel_vs_oracle(t)
+        assert expected is not None, repr(t)
+        assert kernel == expected, repr(t)
     for t in TITLE_BAD:
-        assert got[t] is None, repr(t)
-
+        assert _title_kernel_vs_oracle(t) == (None, None), repr(t)
 
 def test_simhash_rejects_unsupported_band_count(spark):
     from page_evaluator_spark.operators.dedup import simhash_near_pairs
@@ -123,32 +103,3 @@ def test_ensure_min_parallelism_memoizes_probe(spark, sf01_dir, monkeypatch):
     assert probes["n"] == 1
     skew.ensure_min_parallelism(spark.range(10).toDF("x"))  # unkeyed: probes
     assert probes["n"] == 2
-
-
-def test_native_title_map_fuzz_parity(spark):
-    """Seeded fuzz over the title grammar's awkward alphabet: the native twin
-    must return NULL exactly when the kernel raises, and the identical map
-    otherwise — for EVERY generated title, not just the hand-picked sets."""
-    import random
-
-    rng = random.Random(1234)
-    alphabet = ["a", "b", "x1", "bbox", "85.3", ";", " ", "  ", "\t", "\x0b",
-                ";;", "; ", " ;", "\n", "\r", "a 1;a 2"]
-    titles = ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 10)))
-              for _ in range(400)]
-    expected = {}
-    for t in titles:
-        try:
-            expected[t] = _title_props(t)
-        except ValueError:
-            expected[t] = None
-
-    from page_evaluator_spark.functions.textnorm import hocr_title_to_map
-
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(titles)],
-                               "i int, title string")
-    got = {r["i"]: r["m"] for r in
-           df.withColumn("m", hocr_title_to_map(F.col("title"))).collect()}
-    for i, t in enumerate(titles):
-        g = got[i] if got[i] is None else dict(got[i])
-        assert g == expected[t], f"{t!r}: native={g} kernel={expected[t]}"

@@ -13,6 +13,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import plan_string
+
 
 # ---------------------------------------------------------------------------
 # VERDICT #2: ngram_jaccard document-frequency cap
@@ -134,7 +136,7 @@ def test_semantic_dedup_known_clusters_and_no_cross_cell_pairs(spark):
     from page_evaluator_spark.operators.similarity import semantic_dedup_pairs
 
     pairs = semantic_dedup_pairs(e, threshold=0.9, n_cells=16, kmeans_rounds=1)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(pairs)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "cell" in plan
 
@@ -598,7 +600,7 @@ def test_ivfpq_candidates_from_probed_cells_only(spark, sf01_dir):
     # plan: candidate generation is an equi-join keyed by cell
     df = ivfpq_ann_topk(e, q, k=10, kmeans_rounds=1)
     df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(df)
     assert "BroadcastHashJoin [cell" in plan or "ShuffledHashJoin [cell" in plan \
         or "SortMergeJoin [cell" in plan, plan[:1200]
 

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from page_evaluator_spark.operators.graph import PR_FXP, pagerank_int
 
+from .conftest import plan_string
+
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src: string, dst: string")
@@ -371,31 +373,27 @@ def test_stream_incremental_dedup_matches_batch_and_resumes(spark, sf01_dir, tmp
 # them viable at 100 TB — regressions here matter more than wall time)
 # ---------------------------------------------------------------------------
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_r5_plan_shapes(spark, sf01_dir):
     from page_evaluator_spark import queries as Q
 
     # DSIR + repeated_substrings: top-k must be TakeOrderedAndProject
     # (per-partition heaps), never a one-partition global rank window
     for name in ("dsir_importance_sample", "repeated_substrings"):
-        plan = _plan(Q.QUERIES[name](spark, sf01_dir))
+        plan = plan_string(Q.QUERIES[name](spark, sf01_dir))
         assert "TakeOrderedAndProject" in plan, name
     # DSIR's 256-row ratio table must broadcast, not sort-merge
-    plan = _plan(Q.QUERIES["dsir_importance_sample"](spark, sf01_dir))
+    plan = plan_string(Q.QUERIES["dsir_importance_sample"](spark, sf01_dir))
     assert "SortMergeJoin" not in plan
     # mixture: the |sources|-row target table joins broadcast; no cartesian
-    plan = _plan(Q.QUERIES["domain_mixture_sample"](spark, sf01_dir))
+    plan = plan_string(Q.QUERIES["domain_mixture_sample"](spark, sf01_dir))
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan
     # source prior: the final composed plan (candidate bands + rollup join;
     # the PageRank rounds live behind their lineage truncation) must stay
     # equi-join-only — no cartesian anywhere
-    plan = _plan(Q.QUERIES["curation_source_prior"](spark, sf01_dir))
+    plan = plan_string(Q.QUERIES["curation_source_prior"](spark, sf01_dir))
     assert "CartesianProduct" not in plan
     # captions: single window pass, no join of any kind
-    plan = _plan(Q.QUERIES["ocr_media_captions"](spark, sf01_dir))
+    plan = plan_string(Q.QUERIES["ocr_media_captions"](spark, sf01_dir))
     assert "Join" not in plan and "Window" in plan
 
 

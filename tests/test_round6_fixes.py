@@ -12,9 +12,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from .conftest import plan_string
 
 
 def _mix_docs(spark, seed=11):
@@ -71,7 +69,7 @@ def test_mixture_windows_never_partition_by_source_alone(spark):
 
     d = _mix_docs(spark)
     for df in (domain_mixture_sample(d), domain_mixture_keep(d)):
-        plan = _plan(df)
+        plan = plan_string(df)
         specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
         assert specs, "expected the boundary-shard window in the plan"
         for spec in specs:
@@ -113,7 +111,7 @@ def test_repeated_substrings_counting_shuffle_carries_hashes_only(spark):
         [(i, "the quick brown fox jumps over the lazy dog again") for i in range(6)],
         "doc_id: long, text: string")
     counts = _span_hash_counts(_span_windows(d, 24, "text", "doc_id"), 2)
-    plan = _plan(counts)
+    plan = plan_string(counts)
     assert "xxhash64" in plan
     for part in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "span" not in part, f"counting shuffle carries span text: {part}"
@@ -402,7 +400,7 @@ def test_exact_substring_position_shuffles_carry_hashes_only(spark):
     d = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog again") for i in range(4)],
         "doc_id: long, text: string")
-    plan = _plan(_dup_window_positions(d, 24, 2, "text", "doc_id"))
+    plan = plan_string(_dup_window_positions(d, 24, 2, "text", "doc_id"))
     for part in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "span" not in part and "t#" not in part, \
             f"position shuffle carries text: {part}"
@@ -468,7 +466,7 @@ def test_interleaved_pack_cost_is_projection_no_explode(spark):
     corpus-sized shuffles are the shard window and the seq_id agg."""
     from page_evaluator_spark.operators.media import pack_interleaved_sequences
 
-    plan = _plan(pack_interleaved_sequences(_interleaved_docs(spark)))
+    plan = plan_string(pack_interleaved_sequences(_interleaved_docs(spark)))
     assert "Generate" not in plan, plan
     assert "Window" in plan
 

@@ -16,9 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from .conftest import plan_string
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +151,7 @@ def test_repeated_substrings_single_explode_in_final_plan(spark):
          for i in range(30)], "doc_id long, text string")
     out = repeated_substrings(docs, width=24, min_docs=2, top_k=10)
     out.collect()
-    plan = _plan(out).split("== Initial Plan ==")[0]
+    plan = plan_string(out).split("== Initial Plan ==")[0]
     # exactly one window explode: the recount pass; the counting aggregate
     # ran inside the materialized (checkpointed) counts relation, which
     # appears as a scan (ExistingRDD), not a Generate
@@ -172,8 +170,7 @@ def test_parse_kernel_output_is_column_pruned(spark):
         [(1, [("text", "some words here", None, 0)])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    plan = evaluate_documents(docs).page_scores._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_string(evaluate_documents(docs).page_scores)
     assert "MapInArrow" in plan, plan
     import re
     args = re.search(r"MapInArrow .*?#\d+, \[([^\]]*)\]", plan)
