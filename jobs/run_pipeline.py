@@ -65,9 +65,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.lexicon:
         from page_evaluator_spark.operators.parse import parse_documents
+        from page_evaluator_spark.plans.pipeline import BRANCH_COLUMNS
 
         lex = catalog.read(args.lexicon)
-        rates = page_match_rates(parse_documents(docs, repartition=args.repartition), lex)
+        parsed = parse_documents(docs, repartition=args.repartition,
+                                 columns=BRANCH_COLUMNS["lexicon_match_rates"])
+        rates = page_match_rates(parsed, lex)
         catalog.append(rates, f"{args.output}/lexicon_match_rates", run_id=run_id)
 
     # docs scored by THIS invocation: the counts its own part writes observed

@@ -13,10 +13,10 @@ Input column contract: the trimmed, hyphen-joined, NFC, non-empty token text
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .textnorm import clean_token
+from .textnorm import clean_token_sql, sql_string
 
 # Java patterns (OCRPage.java:16-19); CANON_EQ dropped per NFC rule.  The
 # reference applies the first three via Matcher.matches() (whole-input
@@ -39,45 +39,49 @@ CATEGORIES = [
 ]
 
 
-def category_expr(tok: Column) -> Column:
-    """token text → category (OCRPage.java:64-121, exact cascade order).
+def category_sql(tok: str = "text") -> str:
+    """Token text (the SQL expression ``tok``) → category, as SQL text
+    (OCRPage.java:64-121, exact cascade order).
 
-    ``rlike`` is find() semantics; the first three patterns are ^…\\z-anchored
-    (true matches() equivalence, see above) and the repeated-chars pattern is
+    The one definition of the cascade: ``category_expr`` and ``score_pages``
+    both use this text, and building it costs no py4j round trip.  RLIKE is
+    find() semantics; the first three patterns are ^…\\z-anchored (true
+    matches() equivalence, see above) and the repeated-chars pattern is
     deliberately unanchored (find(), OCRPage.java:82-86).
     """
-    norm = F.lower(tok)  # OCRPage.java:53 (ROOT-locale intent)
-    clean = clean_token(norm)  # OCRPage.java:54,140-145
-    non_alpha = F.regexp_count(clean, F.lit(NON_ALPHA_RE))  # OCRPage.java:89-92
+    norm = f"lower({tok})"  # OCRPage.java:53 (ROOT-locale intent)
+    clean = clean_token_sql(norm)  # OCRPage.java:54,140-145
+    non_alpha = f"regexp_count({clean}, {sql_string(NON_ALPHA_RE)})"  # :89-92
     return (
-        F.when(tok.rlike(PUNCT_TOKEN_RE), "punct")                    # :64-68
-        .when(tok.rlike(NUMBER_OBJECT_RE), "number_objects")          # :70-74
-        .when(tok.rlike(ONE_ALPHA_RE), "single_letter")               # :76-80
-        .when(norm.rlike(REPEATED_4PLUS_RE), "ge4_repeated")          # :82-86
-        .when(non_alpha == F.length(clean), "len_gt1_nonalpha")       # :94-97
-        .when(F.length(clean) < 3, "clean_short")                     # :100-103
-        .when(non_alpha == 0, "clean_all_alpha")                      # :105-107
-        .when(non_alpha == 1, "clean_one_nonalpha")                   # :110-112
-        .when(non_alpha == 2, "clean_two_nonalpha")                   # :114-116
-        .otherwise("clean_3plus_nonalpha")                            # :118-120
+        "CASE"
+        f" WHEN {tok} RLIKE {sql_string(PUNCT_TOKEN_RE)} THEN 'punct'"              # :64-68
+        f" WHEN {tok} RLIKE {sql_string(NUMBER_OBJECT_RE)} THEN 'number_objects'"   # :70-74
+        f" WHEN {tok} RLIKE {sql_string(ONE_ALPHA_RE)} THEN 'single_letter'"        # :76-80
+        f" WHEN {norm} RLIKE {sql_string(REPEATED_4PLUS_RE)} THEN 'ge4_repeated'"   # :82-86
+        f" WHEN {non_alpha} = length({clean}) THEN 'len_gt1_nonalpha'"              # :94-97
+        f" WHEN length({clean}) < 3 THEN 'clean_short'"                             # :100-103
+        f" WHEN {non_alpha} = 0 THEN 'clean_all_alpha'"                             # :105-107
+        f" WHEN {non_alpha} = 1 THEN 'clean_one_nonalpha'"                          # :110-112
+        f" WHEN {non_alpha} = 2 THEN 'clean_two_nonalpha'"                          # :114-116
+        " ELSE 'clean_3plus_nonalpha' END"                                          # :118-120
     )
 
 
-def with_scores(stats: DataFrame) -> DataFrame:
-    """Attach correctable/quality scores (OCRPageStats.java:120-136).
+def category_expr(tok: str = "text") -> Column:
+    """The cascade over the column (or SQL expression) ``tok`` as a Column."""
+    return F.expr(category_sql(tok))
 
-    0/0 → NaN → -1.0 sentinel.  The numerator is a subset of the denominator
-    pool, so denominator 0 ⇒ numerator 0 (never +Inf).
-    """
-    num = (F.col("clean_all_alpha") + F.col("clean_one_nonalpha")
-           + F.col("clean_two_nonalpha")).cast("double")
-    ignored = F.col("number_objects") + F.col("punct") + F.col("single_letter")
-    corr_den = (F.col("token_count") - ignored - F.col("clean_short")).cast("double")
-    return stats.withColumn(
-        "correctable_score",
-        F.when(corr_den == 0, F.lit(-1.0)).otherwise(num / corr_den).cast("float"),
-    ).withColumn(
-        "quality_score",
-        F.when(F.col("token_count") == 0, F.lit(-1.0))
-         .otherwise(num / F.col("token_count")).cast("float"),
-    )
+
+# Correctable/quality scores over the per-doc counters (OCRPageStats.java:
+# 120-136), as SQL select items.  0/0 → NaN → -1.0 sentinel.  The numerator
+# is a subset of the denominator pool, so denominator 0 ⇒ numerator 0 (never
+# +Inf).
+_NUM = "CAST(clean_all_alpha + clean_one_nonalpha + clean_two_nonalpha AS DOUBLE)"
+_CORR_DEN = ("CAST(token_count - (number_objects + punct + single_letter)"
+             " - clean_short AS DOUBLE)")
+SCORES_SQL = (
+    f"CAST(CASE WHEN {_CORR_DEN} = 0 THEN -1.0D ELSE {_NUM} / {_CORR_DEN} END AS FLOAT)"
+    " AS correctable_score",
+    f"CAST(CASE WHEN token_count = 0 THEN -1.0D ELSE {_NUM} / token_count END AS FLOAT)"
+    " AS quality_score",
+)

@@ -24,14 +24,24 @@ _WS_CC = "\\p{javaWhitespace}\\p{Zs}"
 SIMPLE_TOKENIZER_RE = f"\\p{{L}}+|\\p{{Nd}}+|([^\\p{{L}}\\p{{Nd}}{_WS_CC}])\\1*"
 
 
-def clean_token(norm: Column) -> Column:
-    """OCRPage.cleanToken (OCRPage.java:140-145).
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal.  Backslash is the SQL escape
+    character (spark.sql.parser.escapedStringLiterals=false, the default), so
+    a Java regex's backslashes are doubled and quotes escaped; every other
+    character, line terminators included, stands for itself."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def clean_token_sql(norm: str) -> str:
+    """OCRPage.cleanToken (OCRPage.java:140-145) over the SQL expression
+    ``norm``, as SQL text.
 
     Java uses replaceFirst; Spark regexp_replace replaces all matches, but
     both patterns are anchored so the results coincide (the only extra match
     is a zero-width match at the anchor, replaced by "") — pinned by tests.
     """
-    return F.regexp_replace(F.regexp_replace(norm, CLEAN_LEADING_RE, ""), CLEAN_TRAILING_RE, "")
+    return (f"regexp_replace(regexp_replace({norm}, {sql_string(CLEAN_LEADING_RE)}, ''), "
+            f"{sql_string(CLEAN_TRAILING_RE)}, '')")
 
 
 def tokenize_txt(text: Column) -> Column:

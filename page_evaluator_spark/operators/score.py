@@ -13,25 +13,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.classify import CATEGORIES, category_expr, with_scores
+from ..functions.classify import CATEGORIES, SCORES_SQL, category_sql
 
-SCORE_COLUMNS = ["doc_id", "token_count", *CATEGORIES,
-                 "correctable_score", "quality_score"]
+# word rows carry a category, every other row a null one
+_CATEGORY_SQL = f"CASE WHEN kind = 'word' THEN {category_sql('text')} END AS category"
 
 
-def with_category(parsed: DataFrame) -> DataFrame:
-    """All parsed rows → + category column (null for non-word rows)."""
-    return parsed.withColumn(
-        "category",
-        F.when(F.col("kind") == "word", category_expr(F.col("text"))))
+def _counter_sql(name: str, cond: str) -> str:
+    # sum(CASE …), not count_if: the counters stay nullable ints
+    return f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS INT) AS {name}"
+
+
+# all counters in ONE aggregate expression: each Column built on the driver
+# is ~3 py4j round trips, a struct of eleven sums is one
+_COUNTERS_SQL = "struct({}) AS c".format(", ".join(
+    [_counter_sql("token_count", "category IS NOT NULL"),
+     *(_counter_sql(c, f"category = '{c}'") for c in CATEGORIES)]))
 
 
 def score_pages(parsed: DataFrame) -> DataFrame:
-    """Parsed relation → page_scores (FIXTURES.md §2)."""
-    is_word = F.col("category").isNotNull()
-    aggs = [F.sum(F.when(is_word, 1).otherwise(0)).cast("int").alias("token_count")]
-    for cat in CATEGORIES:
-        aggs.append(F.sum(F.when(F.col("category") == cat, 1).otherwise(0))
-                    .cast("int").alias(cat))
-    stats = with_category(parsed).groupBy("doc_id").agg(*aggs)
-    return with_scores(stats).select(*SCORE_COLUMNS)
+    """Parsed relation (doc_id, kind, text) → page_scores (FIXTURES.md §2).
+
+    select → groupBy.agg → select, every expression SQL text, so building
+    the plan costs a few dozen py4j round trips.
+    """
+    stats = (parsed.selectExpr("doc_id", _CATEGORY_SQL).groupBy("doc_id")
+             .agg(F.expr(_COUNTERS_SQL)).selectExpr("doc_id", "c.*"))
+    return stats.selectExpr("*", *SCORES_SQL)

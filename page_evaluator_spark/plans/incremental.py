@@ -8,13 +8,14 @@ is one commit, in this order:
 1. the part is parsed once into a persisted relation;
 2. its three outputs (page_scores, spans_out, quarantine) are appended
    through the Catalog facade CONCURRENTLY, one thread per table, all over
-   that one persisted parse (the threads keep the caller's job group,
-   description and tags);
-3. only when all three appends succeeded, one lineage row is appended.  Its
-   counts come from the writes themselves: a ``DataFrame.observe`` on each
-   output collects n_docs / n_tokens (page_scores) and n_spans (spans_out) /
-   n_quarantined (quarantine, both in the ``metrics`` map), so no extra job
-   re-reads the part to count it.
+   that one persisted parse (the threads keep the caller's job group and
+   tags, and describe their jobs as ``part {N}: {table}``);
+3. only when all three appends succeeded, one lineage row is appended
+   (described ``part {N}: lineage``).  Its counts come from the writes
+   themselves: a ``DataFrame.observe`` on each output collects n_docs /
+   n_tokens (page_scores) and n_spans (spans_out) / n_quarantined
+   (quarantine, both in the ``metrics`` map), so no extra job re-reads the
+   part to count it.
 
 A failed output append re-raises (the first failure, in table order) and
 leaves the part without a lineage row, i.e. pending.  An interrupted run
@@ -40,7 +41,9 @@ pruning) — one extra full write instead of n_parts full scans.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
@@ -54,6 +57,10 @@ LINEAGE_SCHEMA = ("run_id string, part_id int, n_docs bigint, n_tokens bigint, "
                   "committed_at timestamp, metrics map<string,string>")
 # the per-part output tables, in commit (and failure-report) order
 OUTPUTS = ("page_scores", "spans_out", "quarantine")
+# local property behind SparkContext.setJobDescription: each part's jobs are
+# described "part {N}: {table}" / "part {N}: lineage" so an event log alone
+# says which layer a job belongs to
+JOB_DESCRIPTION = "spark.job.description"
 
 
 def part_id_expr(n_parts: int):
@@ -166,9 +173,10 @@ class IncrementalRunner:
                     out.parsed.unpersist()
                 # lineage commit LAST: a crash before this line leaves the part
                 # uncommitted and it will be re-done (idempotent per-part dirs)
-                self.catalog.append(self._lineage_row(run_id, part, counts),
-                                    self.lineage_ref, run_id=commit,
-                                    replace_where=owns)
+                with self._described(f"part {part}: lineage"):
+                    self.catalog.append(self._lineage_row(run_id, part, counts),
+                                        self.lineage_ref, run_id=commit,
+                                        replace_where=owns)
                 self.part_counts[part] = counts
                 done.append(part)
         return done
@@ -195,10 +203,16 @@ class IncrementalRunner:
             self.catalog.append(df.observe(observations[name], *metrics[name]),
                                 self._ref(name), run_id=commit, replace_where=owns)
 
-        # wrapped here, in the caller's thread: the wrapper captures the
-        # caller's local properties (job group, description) and tags now
-        target = inheritable_thread_target(self.spark)(append)
-        futures = [pool.submit(target, name) for name in OUTPUTS]
+        futures = []
+        for name in OUTPUTS:
+            # wrapped here, in the caller's thread: each wrapper captures its
+            # own copy of the caller's local properties (job group, and this
+            # table's description) and tags now.  One wrapper shared by the
+            # three threads would hand them ONE properties object, so a
+            # description set inside a thread would leak into its siblings.
+            with self._described(f"part {part}: {name}"):
+                target = inheritable_thread_target(self.spark)(append)
+            futures.append(pool.submit(target, name))
         wait(futures)
         for f in futures:
             f.result()
@@ -206,6 +220,19 @@ class IncrementalRunner:
         for obs in observations.values():
             counts.update({k: int(v or 0) for k, v in obs.get.items()})
         return counts
+
+    @contextmanager
+    def _described(self, text: str) -> Iterator[None]:
+        """Run the block with job description ``text``, then restore the
+        caller's.  The job group is left alone (perfbench groups jobs by
+        spark.jobGroup.id)."""
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty(JOB_DESCRIPTION)
+        sc.setJobDescription(text)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(JOB_DESCRIPTION, caller)
 
     def _lineage_row(self, run_id: str, part: int, counts: dict[str, int]) -> DataFrame:
         """The part's one lineage row, typed as LINEAGE_SCHEMA, built natively

@@ -3,8 +3,8 @@
 Designed for a 1000-executor cluster reading 100 TB; tested on local[N].
 Every knob here exists for a reason at scale:
   * AQE on (runtime coalescing + skew-join splitting),
-  * bounded Arrow batches so a batch of large documents cannot OOM a Python
-    worker (parse-UDF memory ∝ batch_rows × doc_size, SURVEY.md §4.1),
+  * Arrow batches bounded in rows and bytes, so a batch of large documents
+    cannot OOM a Python worker (parse-UDF memory ∝ batch bytes, SURVEY.md §4.1),
   * shuffle partitions sized for the local test harness (overridden by AQE),
   * Arrow-optimized Python UDF transport throughout,
   * on local masters, Python workers that import pyspark from the driver's
@@ -21,6 +21,9 @@ import sys
 import tempfile
 
 from pyspark.sql import SparkSession
+
+# Arrow input batch byte cap (spark.sql.execution.arrow.maxBytesPerBatch).
+ARROW_BATCH_BYTES = 1 << 20
 
 
 def _worker_python_wrapper() -> str | None:
@@ -193,15 +196,15 @@ def get_spark(app_name: str = "page-evaluator-spark", master: str | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Cap Arrow batch row count: parse-UDF batches hold whole page texts,
-        # so the bound is rows × page_size, not rows alone.
+        # Cap Arrow batches by rows AND bytes: parse-UDF input batches hold
+        # whole page texts, so rows alone bound a batch at rows × page_size.
+        # A batch closes at whichever cap it reaches first — the byte cap for
+        # hOCR pages (tens of KiB each), the row cap for short TXT spans.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         # 128 MB input splits — reasonable parquet scan granularity at 100 TB.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # java.util.Properties.put is last-wins; str_to_map must match
-        # (HOCRToken.java:20-29 title parse — duplicate keys keep the last)
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # throughput GC: the pipeline allocates short-lived strings at a high
         # rate across many task threads; ParallelGC burns measurably less CPU

@@ -70,13 +70,15 @@ def run_scores_stream(spark: SparkSession, docs_path: str,
     """
     from ..operators.parse import explode_docs, parse_spans
     from ..operators.score import score_pages
+    from ..plans.pipeline import BRANCH_COLUMNS
 
     schema = spark.read.parquet(docs_path).schema
     stream = spark.readStream.schema(schema).parquet(docs_path)
     # EXACTLY the batch plan (explode_outer + marker rows + null-category agg,
     # score.py), so zero-span / media-only / quarantined docs still emit the
     # -1.0/-1.0 sentinel score row — streaming == batch, pinned by test.
-    scored = score_pages(parse_spans(explode_docs(stream)))
+    scored = score_pages(parse_spans(explode_docs(stream),
+                                     columns=BRANCH_COLUMNS["page_scores"]))
     name = f"stream_scores_{uuid.uuid4().hex[:8]}"
     q = (scored.writeStream.format("memory").queryName(name)
          .outputMode("complete")
@@ -364,6 +366,7 @@ def run_scores_stream_to_catalog(spark: SparkSession, docs_path: str,
     """
     from ..operators.parse import explode_docs, parse_spans
     from ..operators.score import score_pages
+    from ..plans.pipeline import BRANCH_COLUMNS
     from ..sources.catalog import Catalog
 
     cat = Catalog(spark)
@@ -371,8 +374,9 @@ def run_scores_stream_to_catalog(spark: SparkSession, docs_path: str,
     stream = spark.readStream.schema(schema).parquet(docs_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scores = (score_pages(parse_spans(explode_docs(batch_df)))
-                  .withColumn("_batch_id", F.lit(batch_id)))
+        parsed = parse_spans(explode_docs(batch_df),
+                             columns=BRANCH_COLUMNS["page_scores"])
+        scores = score_pages(parsed).withColumn("_batch_id", F.lit(batch_id))
         cat.append(scores, out_ref, run_id=f"batch{batch_id}",
                    replace_where=f"_batch_id = {batch_id}")
 

@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from page_evaluator_spark.functions.classify import category_expr
-from page_evaluator_spark.functions.textnorm import clean_token, tokenize_txt
+from page_evaluator_spark.functions.textnorm import clean_token_sql, tokenize_txt
 from page_evaluator_spark.operators.parse import _tokenize_txt
 
 from . import oracle
@@ -44,7 +44,7 @@ def test_native_classify_matches_oracle(spark):
     toks = [t for t in toks if t]
     df = spark.createDataFrame([(t,) for t in toks], "text string")
     got = {r["text"]: r["cat"]
-           for r in df.withColumn("cat", category_expr(F.col("text"))).collect()}
+           for r in df.withColumn("cat", category_expr("text")).collect()}
     mismatches = [(t, got[t], oracle.classify_token(t))
                   for t in set(toks) if got[t] != oracle.classify_token(t)]
     assert mismatches == []
@@ -54,7 +54,7 @@ def test_native_clean_matches_oracle(spark):
     toks = [t for t in _random_tokens(400, seed=7) if t]
     df = spark.createDataFrame([(t,) for t in toks], "text string")
     got = {r["text"]: r["clean"]
-           for r in df.withColumn("clean", clean_token(F.col("text"))).collect()}
+           for r in df.withColumn("clean", F.expr(clean_token_sql("text"))).collect()}
     for t in set(toks):
         assert got[t] == oracle.clean_token(t), repr(t)
 
@@ -180,3 +180,27 @@ def test_hocr_page_fuzz_parity(spark):
         for n in oracle.COUNTER_NAMES:
             assert got[n] == getattr(exp["counters"], n), (d["doc_id"], n)
         assert sorted(spans.get(d["doc_id"], [])) == exp["spans_out"], d["doc_id"]
+
+
+# SQL-literal escaping of the cascade: tokens with a quote, a backslash, a
+# percent sign or U+2028 (a line terminator Java trim keeps), and the
+# literals themselves round-tripped through the SQL parser.
+_ESCAPE_TOKENS = ["'", "it's", "''''", "\\", "a\\b", "\\\\\\\\", "12%", "%", "50%'",
+                  "%%%%", "a\u2028", "12\u2028", "\u2028", "x'\\%\u2028y", "don\\'t"]
+
+
+def test_cascade_sql_escaping_matches_oracle(spark):
+    from page_evaluator_spark.functions import classify
+    from page_evaluator_spark.functions.textnorm import (CLEAN_LEADING_RE,
+                                                          CLEAN_TRAILING_RE, sql_string)
+
+    literals = [classify.PUNCT_TOKEN_RE, classify.NUMBER_OBJECT_RE, classify.ONE_ALPHA_RE,
+                classify.REPEATED_4PLUS_RE, classify.NON_ALPHA_RE, CLEAN_LEADING_RE,
+                CLEAN_TRAILING_RE, *_ESCAPE_TOKENS]
+    row = spark.sql("SELECT " + ", ".join(f"{sql_string(s)} AS c{i}"
+                                          for i, s in enumerate(literals))).first()
+    assert list(row) == literals
+    df = spark.createDataFrame([(t,) for t in _ESCAPE_TOKENS], "text string")
+    got = {r["text"]: r["cat"] for r in df.withColumn("cat", category_expr("text")).collect()}
+    assert {t: got[t] for t in _ESCAPE_TOKENS} == \
+        {t: oracle.classify_token(t) for t in _ESCAPE_TOKENS}

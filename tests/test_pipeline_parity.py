@@ -78,3 +78,79 @@ def test_nested_markup_fixture(spark):
     assert spans == ["word.", "hyphen"]
     exp = oracle.doc_expected(docs[0]["spans"])
     assert [s[2] for s in exp["spans_out"]] == spans
+
+
+# ---------------------------------------------------------------------------
+# The lean production pass: what cache_parsed persists, and what building the
+# page_scores plan costs on the driver.
+# ---------------------------------------------------------------------------
+
+_SPANS = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
+
+def _hocr_docs(spark):
+    from page_evaluator_spark.corpus import make_hocr
+
+    return spark.createDataFrame([
+        ("h1", [("hocr", make_hocr([["Quality", "of-"], ["mercy", "85%"]]), None, 0),
+                ("image", None, "img://h1/1", 1),
+                ("hocr", make_hocr([["not", "strained"]], page_id="page_2",
+                                   engine="ocropus 0.4"), None, 2)]),
+        ("h2", [("hocr", make_hocr([["a", "b"]], bad_title_at=2), None, 0),
+                ("text", "plain words here", None, 1)]),
+    ], _SPANS)
+
+
+def test_cached_parse_holds_only_the_writer_columns(spark):
+    """cache_parsed persists the union of the columns page_scores, spans_out
+    and quarantine read — seven of the thirteen PARSED_SCHEMA columns."""
+    out = evaluate_documents(_hocr_docs(spark), cache_parsed=True)
+    try:
+        assert out.parsed.columns == ["doc_id", "span_offset", "pos", "kind", "text",
+                                      "media_ref", "error"]
+    finally:
+        out.parsed.unpersist()
+
+
+def test_cached_page_meta_and_token_props_equal_uncached(spark):
+    """page_meta / token_props read columns the cache does not hold; on
+    cached outputs they get their own pruned parse with the same rows."""
+    docs = _hocr_docs(spark)
+    cached = evaluate_documents(docs, cache_parsed=True)
+    plain = evaluate_documents(docs)
+    try:
+        for branch in ("page_meta", "token_props"):
+            got = sorted(map(repr, getattr(cached, branch).collect()))
+            want = sorted(map(repr, getattr(plain, branch).collect()))
+            assert got == want and want, branch
+            assert getattr(cached, branch).schema == getattr(plain, branch).schema
+    finally:
+        cached.parsed.unpersist()
+    meta = {r["span_offset"]: r["page_id"] for r in plain.page_meta.collect()
+            if r["doc_id"] == "h1"}
+    assert meta == {0: "page_1", 2: "page_2"}
+
+
+def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
+    """Building page_scores over a parsed relation (no action) costs a few
+    dozen py4j commands — the Column-per-counter form took ~1,400.  Counted
+    at the py4j connection, so this guards driver plan-build cost without
+    timing anything."""
+    from py4j.clientserver import ClientServerConnection
+
+    from page_evaluator_spark.operators.parse import parse_documents
+    from page_evaluator_spark.operators.score import score_pages
+
+    parsed = parse_documents(_hocr_docs(spark), columns=("doc_id", "kind", "text"))
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return real(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    scores = score_pages(parsed)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 60, len(sent)
+    assert scores.columns[:2] == ["doc_id", "token_count"]

@@ -239,3 +239,33 @@ def test_failed_concurrent_append_leaves_part_pending(spark, docs, tmp_path):
     quarantined = runner2.quarantine_rows()
     assert quarantined.count() == quarantined.select("doc_id", "span_ord").distinct().count()
     assert quarantined.count() == expected.quarantine.count() > 0
+
+
+def test_part_jobs_are_described_per_layer(spark, docs, tmp_path, monkeypatch):
+    """Each part's appends run under the descriptions 'part {N}: {table}' and
+    its lineage commit under 'part {N}: lineage', while the job group stays
+    the caller's; the caller's own description is back after the run."""
+    from page_evaluator_spark.plans.incremental import OUTPUTS
+    from page_evaluator_spark.sources.catalog import Catalog
+
+    sc = spark.sparkContext
+    seen = []
+    real = Catalog.append
+
+    def recording(self, df, ref, *args, **kwargs):
+        seen.append((ref.rsplit("/", 1)[-1], sc.getLocalProperty("spark.job.description"),
+                     sc.getLocalProperty("spark.jobGroup.id")))
+        return real(self, df, ref, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "append", recording)
+    runner = IncrementalRunner(spark, str(tmp_path / "out"), n_parts=3)
+    sc.setJobGroup("described", "caller's description")
+    try:
+        done = runner.run(docs, run_id="r1")
+        assert sc.getLocalProperty("spark.job.description") == "caller's description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(done) == [0, 1, 2]
+    want = {(t, f"part {p}: {t}", "described") for p in done for t in (*OUTPUTS, "lineage")}
+    assert sorted(seen) == sorted(want)

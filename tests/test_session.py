@@ -239,3 +239,27 @@ def test_session_workers_import_from_directory(spark):
             base = os.path.basename(entry)
             assert base != "pyspark.zip", entry
             assert not (base.startswith("py4j-") and base.endswith("-src.zip")), entry
+
+
+def _batch_sizes(batches):
+    import pyarrow as pa
+
+    for rb in batches:
+        yield pa.RecordBatch.from_pydict({"rows": [rb.num_rows], "nbytes": [rb.nbytes]})
+
+
+def test_arrow_input_batches_are_byte_capped(spark):
+    """Under get_spark's defaults a mapInArrow over ~64 KiB page texts sees
+    input batches of at most about ARROW_BATCH_BYTES, far below the 4,096-row
+    cap (which alone would put all 64 pages, 4 MiB, in one batch)."""
+    from pyspark.sql import functions as F
+
+    from page_evaluator_spark.session import ARROW_BATCH_BYTES
+
+    pages = spark.range(0, 64, numPartitions=1).select(
+        F.repeat(F.lit("x"), 64 * 1024).alias("text"))
+    sizes = pages.mapInArrow(_batch_sizes, "rows long, nbytes long").collect()
+    assert sum(r.rows for r in sizes) == 64
+    assert len(sizes) >= 4, sizes
+    # a batch closes once it reaches the cap, so it may hold one page more
+    assert max(r.nbytes for r in sizes) <= ARROW_BATCH_BYTES + 80 * 1024, sizes
