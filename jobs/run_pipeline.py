@@ -70,8 +70,10 @@ def main(argv: list[str] | None = None) -> int:
         lex = catalog.read(args.lexicon)
         parsed = parse_documents(docs, repartition=args.repartition,
                                  columns=BRANCH_COLUMNS["lexicon_match_rates"])
+        # the rates cover the whole input on every invocation, so a resume
+        # replaces the table instead of appending a second copy
         rates = page_match_rates(parsed, lex)
-        catalog.append(rates, f"{args.output}/lexicon_match_rates", run_id=run_id)
+        catalog.overwrite(rates, f"{args.output}/lexicon_match_rates")
 
     # docs scored by THIS invocation: the counts its own part writes observed
     n_docs = sum(runner.part_counts[p]["n_docs"] for p in done)

@@ -1,6 +1,7 @@
 """Corpus-curation operators a large-scale training-data pipeline needs on
 top of pair-wise dedup: duplicate CLUSTERS (connected components), canonical
-selection, deterministic stratified sampling, and token-budget packing.
+selection, deterministic stratified and mixture sampling, and token-budget
+packing.
 
 Scale notes:
   * connected components — iterative min-label propagation on the candidate-
@@ -9,10 +10,7 @@ Scale notes:
     2-4 for boilerplate/dup families), so few iterations; each iteration is
     one shuffle on the label join, lineage truncated per round — reliable
     checkpoint() when a checkpoint dir is configured (cluster-safe),
-    localCheckpoint() otherwise.  The large-star/small-star variant
-    (connected_components_star, provably O(log n) rounds with non-growing
-    edge sets) is implemented alongside for adversarial-diameter graphs —
-    both equivalence-pinned against union-find ground truth.
+    localCheckpoint() otherwise.  Pinned against union-find ground truth.
   * stratified sampling — deterministic md5-hash thresholding, NOT rand():
     reproducible across runs, retries and cluster sizes, and exactly
     re-derivable in SQL for the oracle.
@@ -94,86 +92,6 @@ def connected_components(pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         f"with pointer doubling this needs a component diameter > 2^{max_iter}")
-
-
-def connected_components_star(pairs: DataFrame, src: str = "doc_a",
-                              dst: str = "doc_b", max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014) —
-    the adversarial-scale alternative to min-label propagation: provably
-    O(log n) rounds with edge-set size that never grows beyond the input.
-
-    large-star(u): link every strictly-greater neighbor of u to
-    m = min(Γ(u) ∪ {u});  small-star(u): link every ≤-neighbor and u itself
-    to the min of that set.  At fixpoint every component is a star centered
-    at its minimum node; labels read directly off the edges.  Each half-round
-    is one groupBy(min) + one join — the same shuffle primitives as the
-    pointer-doubling variant (equivalence-pinned by test), but with
-    per-round edge-count monotonicity that survives adversarial diameters.
-    """
-    def _mins(sym: DataFrame) -> DataFrame:
-        return (sym.groupBy("u").agg(F.min("v").alias("minv"))
-                .select("u", F.least(F.col("u"), F.col("minv")).alias("m")))
-
-    def _edge_sig(df: DataFrame) -> tuple[int, int]:
-        # ONE action per round: (count, order-independent checksum).  An
-        # unchanged signature nominates a fixpoint, which is then verified
-        # EXACTLY (checksum collisions can't fake convergence) — the exact
-        # exceptAll shuffle is paid once at the end, not every round.
-        row = df.agg(F.count("*").alias("n"),
-                     F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                                F.lit(0)).alias("chk")).collect()[0]
-        # decimal sum: exact and order-independent, never overflows (ANSI
-        # mode makes a plain long sum of 64-bit hashes abort the job)
-        return int(row["n"]), int(row["chk"])
-
-    edges = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .where(F.col("u") != F.col("v")).distinct())
-    sig = _edge_sig(edges)
-    for _ in range(max_iter):
-        sym = (edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-               .distinct())
-        # large-star
-        large = (sym.where(F.col("v") > F.col("u"))
-                 .join(_mins(sym), "u")
-                 .select(F.col("m").alias("u"), "v")
-                 .where(F.col("u") != F.col("v")).distinct())
-        sym2 = (large.union(large.select(F.col("v").alias("u"), F.col("u").alias("v")))
-                .distinct())
-        # small-star over the ≤ neighborhood (plus u itself via least())
-        le = sym2.where(F.col("v") < F.col("u"))
-        small_m = (le.groupBy("u").agg(F.min("v").alias("minv"))
-                   .select("u", F.least(F.col("u"), F.col("minv")).alias("m")))
-        small = (le.join(small_m, "u")
-                 .select(F.col("m").alias("nu"), F.col("v"), F.col("u").alias("ou"))
-                 .select(F.explode(F.array(
-                     F.struct(F.col("nu").alias("u"), F.col("v").alias("v")),
-                     F.struct(F.col("nu").alias("u"), F.col("ou").alias("v")))).alias("e"))
-                 .select("e.u", "e.v")
-                 .where(F.col("u") != F.col("v")).distinct())
-        new_edges = _truncate_lineage(small)
-        # both sets are distinct, so a verified equal set means fixpoint
-        new_sig = _edge_sig(new_edges)
-        changed = (new_sig != sig) or new_edges.exceptAll(edges).count() > 0
-        sig = new_sig
-        edges = new_edges
-        if not changed:
-            # fixpoint: stars centered at component minima — (center, node)
-            nodes = edges.select(F.col("v").alias("doc_id"),
-                                 F.col("u").alias("cluster_id"))
-            centers = edges.select(F.col("u").alias("doc_id"),
-                                   F.col("u").alias("cluster_id")).distinct()
-            labels = nodes.unionByName(centers).distinct()
-            # self-loop-only nodes were dropped by the u != v entry filter but
-            # ARE labeled (with themselves) by connected_components — keep the
-            # two variants row-for-row interchangeable
-            all_nodes = (pairs.select(F.col(src).alias("doc_id"))
-                         .union(pairs.select(F.col(dst).alias("doc_id"))).distinct())
-            singletons = (all_nodes.join(labels, "doc_id", "left_anti")
-                          .withColumn("cluster_id", F.col("doc_id")))
-            return labels.unionByName(singletons)
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds")
 
 
 def dedup_clusters(docs: DataFrame, text_col: str = "text",
@@ -326,7 +244,8 @@ def unigram_lm_scores(docs: DataFrame, head_nll: float = 6.0, tail_nll: float = 
 def _lm_doc_nll(docs: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """(doc_id, _sc fixed-point cost sum, n_tokens) under the self-trained
-    unigram LM — the shared core of scoring and cutoff calibration."""
+    unigram LM — the shared core of unigram_lm_scores and the curation
+    job's lm_filter stage (which calibrates its cutoff from it)."""
     from .skew import ensure_min_parallelism
 
     toks = (ensure_min_parallelism(docs)
@@ -344,34 +263,6 @@ def _lm_doc_nll(docs: DataFrame, text_col: str = "text",
             .groupBy("doc_id")
             .agg(F.sum("cost").alias("_sc"),
                  F.count("*").cast("int").alias("n_tokens")))
-
-
-def calibrate_lm_cutoffs(docs: DataFrame, head_frac: float = 1 / 3,
-                         tail_frac: float = 2 / 3, text_col: str = "text",
-                         id_col: str = "doc_id") -> tuple[float, float]:
-    """The CCNet 'cutoffs computed on a sample' step: approximate NLL
-    quantiles of the corpus (approx_percentile sketch — mergeable, one pass,
-    no global sort; run on a sample/partition of the corpus offline) whose
-    outputs feed unigram_lm_scores' FIXED thresholds.  Returns
-    (head_nll, tail_nll), each nudged one ulp ABOVE the quantile: the bucket
-    rule is strict-< and corpora have NLL atoms (many docs share one score),
-    so a cutoff sitting exactly on an atom would otherwise push the whole
-    atom into the worse bucket instead of keeping at-quantile docs."""
-    import math
-
-    per_doc = _lm_doc_nll(docs, text_col, id_col)
-    nll = (F.col("_sc").cast("double")
-           / (F.col("n_tokens").cast("double") * F.lit(float(LM_FXP))))
-    row = (per_doc.select(nll.alias("nll"))
-           .agg(F.percentile_approx("nll", [head_frac, tail_frac], 10_000)
-                .alias("q")).collect()[0])
-    if row["q"] is None:
-        raise ValueError(
-            "calibrate_lm_cutoffs: the corpus yielded no tokenized documents "
-            "(every text NULL/whitespace-only?) — no NLL distribution to "
-            "calibrate against")
-    return (math.nextafter(float(row["q"][0]), math.inf),
-            math.nextafter(float(row["q"][1]), math.inf))
 
 
 def assign_packed_seq_ids(costed: DataFrame, budget: int,
@@ -423,39 +314,6 @@ def pack_token_budget(docs: DataFrame, budget: int = 512, n_shards: int = 16,
                  F.sum("n_tokens").cast("bigint").alias("total_tokens")))
 
 
-def source_mixture_targets(docs: DataFrame, alpha_num: int = 1, alpha_den: int = 2,
-                           budget_pct: int = 50, text_col: str = "text",
-                           source_col: str = "source") -> list[tuple[str, int, int]]:
-    """Temperature-scaled corpus mixture targets (the multilingual-training
-    α-sampling rule, e.g. mBERT/XLM-R's p^α rebalancing): per-source token
-    share p_s is flattened to p_s^α (α = alpha_num/alpha_den, default 0.5)
-    and renormalized, then a global token budget (budget_pct% of corpus
-    tokens) is split across sources proportionally.
-
-    Returns [(source, total_tokens, target_tokens)] sorted by source — a
-    dimension-table collect (|sources| rows, like the IVF centroid seeds).
-    Float steps are pinned to one evaluation order (fold over sources sorted
-    by name; left-assoc B*w/W) so the Python values are bit-identical to the
-    DuckDB twin's list_reduce fold.  Only α ∈ {1/2, 1} keeps the power exact
-    (sqrt is correctly rounded; pow() is not) — guarded."""
-    _mixture_alpha_guard(alpha_num, alpha_den)
-    n_tok = F.regexp_count(F.col(text_col), F.lit(PORTABLE_TOKEN_RE))
-    rows = (docs.groupBy(F.col(source_col).alias("source"))
-            .agg(F.coalesce(F.sum(n_tok.cast("long")), F.lit(0))
-                 .alias("toks"))
-            .collect())
-    # fail loudly on NULL sources (code-review r5): they cannot take part in
-    # per-source quotas (the shard-class inner join would silently drop
-    # them) and a None key breaks the deterministic sorted fold below
-    if any(r["source"] is None for r in rows):
-        raise ValueError(
-            f"source_mixture_targets: NULL values in '{source_col}' — assign "
-            f"an explicit bucket (e.g. 'unknown') before mixture sampling")
-    return _targets_from_totals(sorted((r["source"], int(r["toks"]))
-                                       for r in rows),
-                                alpha_den, budget_pct)
-
-
 def _mixture_alpha_guard(alpha_num: int, alpha_den: int) -> None:
     if (alpha_num, alpha_den) not in ((1, 2), (1, 1)):
         raise ValueError("alpha must be 1/2 or 1: x**0.5 (sqrt) and x**1 are "
@@ -464,10 +322,10 @@ def _mixture_alpha_guard(alpha_num: int, alpha_den: int) -> None:
 
 def _targets_from_totals(totals: list[tuple[str, int]], alpha_den: int,
                          budget_pct: int) -> list[tuple[str, int, int]]:
-    """The pure-Python quota math behind source_mixture_targets, shared with
-    the sharded selection path (which derives per-source totals from the
-    same collect that classifies shards).  `totals` must be sorted by
-    source — the float fold order IS the cross-engine contract."""
+    """The pure-Python per-source quota math of the sharded selection path
+    (which derives per-source totals from the same collect that classifies
+    shards).  `totals` must be sorted by source — the float fold order IS
+    the cross-engine contract."""
     import math
 
     grand = sum(t for _, t in totals)
@@ -480,7 +338,7 @@ def _targets_from_totals(totals: list[tuple[str, int]], alpha_den: int,
     # as ivf_kmeans_centroids: fail loudly, don't drift in the last bit.
     if grand >= 1 << 53:
         raise ValueError(
-            f"source_mixture_targets: corpus token total {grand} exceeds "
+            f"domain_mixture_sample: corpus token total {grand} exceeds "
             f"2^53 — the Python t/grand share and the DuckDB "
             f"double-cast division are no longer guaranteed bit-identical; "
             f"compute targets with a fixed-point rational share instead")
@@ -652,7 +510,7 @@ def domain_mixture_sample(docs: DataFrame, alpha_num: int = 1, alpha_den: int = 
                           budget_pct: int = 50, text_col: str = "text",
                           source_col: str = "source", id_col: str = "doc_id"
                           ) -> DataFrame:
-    """Deterministic mixture resampling to the source_mixture_targets quota:
+    """Deterministic mixture resampling to a per-source token quota:
     within each source, docs are ordered by (md5(id), id) — a fixed
     pseudo-random shuffle — and kept while the running token count stays
     within the source's target.  The keep set is therefore a pure function

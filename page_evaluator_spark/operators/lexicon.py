@@ -69,8 +69,3 @@ def page_match_rates(parsed: DataFrame, lexicon: DataFrame) -> DataFrame:
             .withColumn("match_rate",
                         F.round(F.col("n_matched") / F.col("n_tokens"), 6)))
 
-
-def scores_with_match_rates(page_scores: DataFrame, match_rates: DataFrame) -> DataFrame:
-    """page_scores ⋈ lexicon match rates (left join keeps empty/media docs)."""
-    return (page_scores.join(match_rates.select("doc_id", "n_matched", "match_rate"),
-                             "doc_id", "left"))

@@ -112,62 +112,6 @@ def bpe_merges_df(docs: DataFrame, n_merges: int = 8,
         rows, "rank: int, pair: string, merged: string, freq: long")
 
 
-def bpe_encode_counts_kernel(docs: DataFrame, n_merges: int = 8,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             merges: list[tuple[int, str, str, int]] | None = None
-                             ) -> DataFrame:
-    """The ENCODE path for production-sized merge tables (VERDICT r5 #6):
-    identical output to bpe_encode_counts, but the merge loop runs inside
-    an Arrow-batched mapInPandas kernel instead of K chained replace
-    expressions.
-
-    Crossover guideline: the projection form is the fast path while K is
-    small (fully codegen'd, zero Python) — to a few hundred merges.  At
-    the ~30k merges a real tokenizer ships, 30k chained string expressions
-    cannot codegen (Janino method-size limits) and expression-tree
-    construction alone is quadratic — use this kernel.
-
-    Scale shape: merges apply to the DISTINCT-WORD table (vocabulary-sized,
-    ≪ corpus — each unique word is encoded once, not once per occurrence),
-    then the per-word symbol counts join back to the corpus word stream by
-    word (AQE broadcasts the vocabulary side when it fits).  Python
-    str.replace is the same leftmost non-overlapping replace as Spark's
-    F.replace / DuckDB's replace — the training semantics, verbatim."""
-    import pandas as pd
-
-    from .skew import ensure_min_parallelism
-
-    if merges is None:
-        merges = bpe_train(docs, n_merges, text_col)
-    reps = []
-    for _rank, pair, merged, _freq in merges:
-        a, b = pair.split(" ")
-        reps.append((f" {a}  {b} ", f" {merged} "))
-
-    def encode(batches):
-        for pdf in batches:
-            w = pdf["word"]
-            spaced = w.str.replace("(.)", r" \1 ", regex=True)
-            for pat, rep in reps:
-                spaced = spaced.str.replace(pat, rep, regex=False)
-            n = spaced.str.strip().str.split("  ").str.len()
-            yield pd.DataFrame({"word": w, "n": n.astype("int32")})
-
-    words = (ensure_min_parallelism(docs)
-             .select(F.col(id_col).alias("doc_id"),
-                     F.explode(F.regexp_extract_all(
-                         F.lower(F.col(text_col)),
-                         F.lit(PORTABLE_TOKEN_RE), 0)).alias("word")))
-    enc = words.select("word").distinct().mapInPandas(
-        encode, "word string, n int")
-    return (words.join(enc, "word")
-            .select("doc_id", F.length("word").alias("n_chars"), "n")
-            .groupBy("doc_id")
-            .agg(F.count("*").cast("bigint").alias("n_words"),
-                 F.sum("n_chars").cast("bigint").alias("n_base_syms"),
-                 F.sum("n").cast("bigint").alias("n_bpe_syms")))
-
-
 def bpe_encode_counts(docs: DataFrame, n_merges: int = 8,
                       text_col: str = "text", id_col: str = "doc_id"
                       ) -> DataFrame:

@@ -3864,8 +3864,9 @@ def oracle_sql() -> dict[str, str]:
         "interleaved_datasheet": _DATASHEET_SQL,
         "streaming_events_daily": _STREAMING_SQL,
         "streaming_click_to_purchase": _SS_JOIN_SQL,
-        # rows-only by design (the ONLY 2 of 62): events_approx_distinct and
-        # events_approx_percentiles — engine-specific sketches (HLL / KLL)
+        # rows-only by design (the only 2 of the 91 queries):
+        # events_approx_distinct and events_approx_percentiles —
+        # engine-specific sketches (HLL / KLL)
         # whose exact outputs no other engine reproduces; each carries an
         # error-bound test in tests/ instead.  ocr_* twins are golden parquet
         # derived from the pure-Python oracle (fixtures/make_goldens.py);

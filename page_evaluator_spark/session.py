@@ -44,7 +44,7 @@ def _worker_python_wrapper() -> str | None:
     itself imports pyspark from a real directory, (b) its version equals the
     JVM-side Spark version shipped in $SPARK_HOME (else workers could run
     different code), (c) the interpreter path is shebang-safe and (d) the
-    script can be stored safely (``_private_script``).  py4j's zip is
+    script can be stored safely (``private_file``).  py4j's zip is
     stripped only when the driver's py4j is a directory install too — in the
     stock ``$SPARK_HOME/python`` layout py4j exists only as that zip.
     """
@@ -103,20 +103,23 @@ def _worker_python_wrapper() -> str | None:
         'os.environ["PYTHONPATH"] = os.pathsep.join(parts)\n'
         f"os.execv({python!r}, [{python!r}] + sys.argv[1:])\n"
     )
-    return _private_script(script)
+    return private_file(script.encode(), "pageeval_worker_python", executable=True)
 
 
-def _private_script(script: str) -> str | None:
-    """Store ``script`` as an executable only the current user can have
-    written, and return its path (None when that cannot be guaranteed).
+def private_file(data: bytes, stem: str, suffix: str = "",
+                 executable: bool = False) -> str | None:
+    """Store ``data`` as a file only the current user can have written, and
+    return its path (None when that cannot be guaranteed).
 
     The directory ``<tempdir>/pageeval-<uid>`` must be a real directory
     (lstat: not a symlink) owned by this uid with no group/other bits; the
-    file name is a digest of the script, so it is stable across processes
-    and hash seeds and never piles up.  An existing file is reused only when
-    it is a regular file owned by this uid with the same content; otherwise
-    a fresh copy is created with O_EXCL|O_NOFOLLOW under a random name and
-    renamed into place (rename replaces a planted symlink, never follows it).
+    file is ``<stem>_<digest of data><suffix>``, so its name is stable
+    across processes and hash seeds and never piles up.  An existing file is
+    reused only when it is a regular file owned by this uid with the same
+    content (and, for ``executable``, the u+x bit); otherwise a fresh copy
+    (mode 0700 executable, 0600 otherwise) is created with O_EXCL|O_NOFOLLOW
+    under a random name and renamed into place (rename replaces a planted
+    file or symlink, never follows it).
     """
     uid = os.getuid()
     folder = os.path.join(tempfile.gettempdir(), f"pageeval-{uid}")
@@ -127,8 +130,7 @@ def _private_script(script: str) -> str | None:
         return None
     if not stat.S_ISDIR(st.st_mode) or st.st_uid != uid or st.st_mode & 0o077:
         return None
-    data = script.encode()
-    name = f"pageeval_worker_python_{hashlib.sha256(data).hexdigest()[:16]}"
+    name = f"{stem}_{hashlib.sha256(data).hexdigest()[:16]}{suffix}"
     path = os.path.join(folder, name)
     try:
         fd = os.open(path, os.O_RDONLY | os.O_NOFOLLOW)
@@ -138,16 +140,18 @@ def _private_script(script: str) -> str | None:
         with os.fdopen(fd, "rb") as fh:
             st = os.fstat(fh.fileno())
             if (stat.S_ISREG(st.st_mode) and st.st_uid == uid
-                    and st.st_mode & stat.S_IXUSR and fh.read() == data):
+                    and (st.st_mode & stat.S_IXUSR or not executable)
+                    and fh.read() == data):
                 return path
+    mode = 0o700 if executable else 0o600
     tmp = os.path.join(folder, f".{name}.{os.urandom(8).hex()}")
     try:
-        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY | os.O_NOFOLLOW, 0o700)
+        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY | os.O_NOFOLLOW, mode)
     except OSError:
         return None
     try:
         with os.fdopen(fd, "wb") as fh:
-            os.fchmod(fh.fileno(), 0o700)  # umask may have cleared u+x
+            os.fchmod(fh.fileno(), mode)  # umask may have cleared u+x
             fh.write(data)
         os.replace(tmp, path)
     except OSError:

@@ -172,78 +172,6 @@ def test_benchmark_contamination_counts_and_plan(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan[:1500]
 
 
-def test_connected_components_star_equivalence(spark):
-    """Large-star/small-star CC == pointer-doubling CC on known and random
-    graphs (the adversarial-scale variant, now implemented not just
-    documented)."""
-    import random
-
-    from page_evaluator_spark.operators.curation import (
-        connected_components,
-        connected_components_star,
-    )
-
-    def run_both(edges):
-        pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
-        a = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
-        b = {r["doc_id"]: r["cluster_id"]
-             for r in connected_components_star(pairs).collect()}
-        return a, b
-
-    # chain (adversarial diameter) + cycle + pair + a self-loop-only node
-    # (the star variant must label it with itself, like pointer doubling)
-    a, b = run_both([(f"n{i:03d}", f"n{i+1:03d}") for i in range(30)]
-                    + [("p", "q"), ("q", "r"), ("r", "p"), ("x", "y"),
-                       ("solo", "solo")])
-    assert a == b
-    assert b["n030"] == "n000" and b["r"] == "p" and b["solo"] == "solo"
-
-    # seeded random graphs
-    rng = random.Random(7)
-    for trial in range(3):
-        nodes = [f"v{trial}{i:02d}" for i in range(40)]
-        edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(45)]
-        edges = [(s, d) for s, d in edges if s != d]
-        a, b = run_both(edges)
-        assert a == b, f"trial {trial}"
-
-
-def test_connected_components_star_ground_truth(spark):
-    """Star-CC against a pure-Python union-find on a seeded graph."""
-    import random
-
-    from page_evaluator_spark.operators.curation import connected_components_star
-
-    rng = random.Random(99)
-    nodes = [f"g{i:03d}" for i in range(60)]
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(55)]
-    edges = [(s, d) for s, d in edges if s != d]
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edges:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[max(rs, rd)] = min(rs, rd)
-    # canonical min per component
-    comp = {}
-    for n in parent:
-        comp.setdefault(find(n), []).append(n)
-    want = {n: min(members) for root, members in comp.items() for n in members}
-
-    pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components_star(pairs).collect()}
-    assert got == want
-
-
 def test_remove_boilerplate_lines_known(spark):
     """Inter-doc boilerplate removal (r3): a line in >= min_docs distinct docs
     is stripped everywhere, whitespace-only lines survive, dup lines within

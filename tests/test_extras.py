@@ -9,17 +9,12 @@ import pytest
 
 from page_evaluator_spark.corpus import corpus_to_spark_df, gen_corpus
 
-from .conftest import plan_string
+from .conftest import REPO, plan_string
 
 
 def test_lexicon_match_rates(spark):
-    from page_evaluator_spark.operators.lexicon import (
-        page_match_rates,
-        scores_with_match_rates,
-        synthetic_lexicon,
-    )
+    from page_evaluator_spark.operators.lexicon import page_match_rates, synthetic_lexicon
     from page_evaluator_spark.operators.parse import parse_documents
-    from page_evaluator_spark.operators.score import score_pages
 
     docs = corpus_to_spark_df(spark, gen_corpus(25, seed=3))
     parsed = parse_documents(docs)
@@ -34,8 +29,6 @@ def test_lexicon_match_rates(spark):
     r1 = rows["f001_hocr_canonical"]
     assert r1["n_matched"] >= 2
 
-    joined = scores_with_match_rates(score_pages(parsed), rates)
-    assert joined.count() == docs.count()
     # broadcast hint visible in the physical plan
     plan = plan_string(rates)
     assert "Broadcast" in plan
@@ -127,9 +120,6 @@ def test_media_features_plumbing(spark):
 
 def test_cli_job_end_to_end(spark, tmp_path):
     """The spark-submit entry point, driven through its argparse surface."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
     from page_evaluator_spark.corpus import gen_corpus, write_corpus_parquet
     from jobs.run_pipeline import parse_args
 
@@ -203,7 +193,7 @@ def test_entry_schema_stable(spark):
     """Driver smoke contract: entry() returns >0 rows with a stable schema."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("_entry", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("_entry", REPO / "__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     df = mod.entry(spark)

@@ -135,7 +135,12 @@ def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
     """Building page_scores over a parsed relation (no action) costs a few
     dozen py4j commands — the Column-per-counter form took ~1,400.  Counted
     at the py4j connection, so this guards driver plan-build cost without
-    timing anything."""
+    timing anything.  Only this thread's commands count: py4j's finalizer
+    thread sends the detach commands of JavaObjects freed anywhere (earlier
+    tests included) in batches at its own pace, and they are no part of the
+    plan build."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     from page_evaluator_spark.operators.parse import parse_documents
@@ -144,9 +149,11 @@ def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
     parsed = parse_documents(_hocr_docs(spark), columns=("doc_id", "kind", "text"))
     sent = []
     real = ClientServerConnection.send_command
+    me = threading.get_ident()
 
     def counting(self, command, *args, **kwargs):
-        sent.append(command)
+        if threading.get_ident() == me:
+            sent.append(command)
         return real(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)

@@ -269,3 +269,32 @@ def test_part_jobs_are_described_per_layer(spark, docs, tmp_path, monkeypatch):
     assert sorted(done) == [0, 1, 2]
     want = {(t, f"part {p}: {t}", "described") for p in done for t in (*OUTPUTS, "lineage")}
     assert sorted(seen) == sorted(want)
+
+
+def test_lexicon_rates_are_written_once_across_resumes(spark, tmp_path, monkeypatch):
+    """run_pipeline.py --lexicon rates the whole input on every invocation;
+    an interrupted run plus its resume (each with its own default run id)
+    must leave one lexicon_match_rates row per doc that has words."""
+    from jobs import run_pipeline
+    from page_evaluator_spark import session
+    from page_evaluator_spark.corpus import write_corpus_parquet
+    from page_evaluator_spark.operators.lexicon import page_match_rates, synthetic_lexicon
+    from page_evaluator_spark.operators.parse import parse_documents
+
+    inp, lex, out = (str(tmp_path / n) for n in ("docs", "lex", "out"))
+    write_corpus_parquet(inp, gen_corpus(6, seed=5, include_fixtures=True))
+    synthetic_lexicon(spark, n_extra=50).write.parquet(lex)
+    # main() builds its session through get_spark and stops it at the end:
+    # hand it the shared test session and keep that session alive
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    argv = ["--input", inp, "--output", out, "--n-parts", "2", "--lexicon", lex, "-q"]
+    assert run_pipeline.main(argv + ["--max-parts", "1"]) == 0
+    assert run_pipeline.main(argv) == 0
+
+    rates = spark.read.parquet(f"{out}/lexicon_match_rates")
+    expected = page_match_rates(parse_documents(spark.read.parquet(inp)),
+                                spark.read.parquet(lex))
+    assert rates.count() == rates.select("doc_id").distinct().count()
+    assert sorted(r["doc_id"] for r in rates.collect()) == sorted(
+        r["doc_id"] for r in expected.collect())

@@ -200,10 +200,10 @@ def test_domain_mixture_partitioning_invariant(spark):
 
 
 def test_mixture_targets_reject_unsupported_alpha(spark):
-    from page_evaluator_spark.operators.curation import source_mixture_targets
+    from page_evaluator_spark.operators.curation import domain_mixture_sample
 
     with pytest.raises(ValueError, match="alpha"):
-        source_mixture_targets(_mix_docs(spark), alpha_num=3, alpha_den=4)
+        domain_mixture_sample(_mix_docs(spark), alpha_num=3, alpha_den=4)
 
 
 def test_dsir_selects_target_like_docs_and_is_deterministic(spark):
@@ -340,34 +340,6 @@ def test_minhash_band_keys_expr_matches_agg_path(spark, sf01_dir):
     assert agg == row
 
 
-def test_stream_incremental_dedup_matches_batch_and_resumes(spark, sf01_dir, tmp_path):
-    from page_evaluator_spark.operators.dedup import cross_corpus_minhash_pairs
-    from page_evaluator_spark.streaming.jobs import run_stream_incremental_dedup
-
-    d = spark.read.parquet(f"{sf01_dir}/documents.parquet")
-    new = d.where(F.col("doc_id") % 2 == 1)
-    ref = d.where(F.col("doc_id") % 2 == 0)
-    expected = sorted(map(tuple, cross_corpus_minhash_pairs(new, ref)
-                          .select("new_id", "ref_id").collect()))
-
-    land = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    out_ref = str(tmp_path / "pairs_out")
-    # first arrival: half the new corpus
-    new.where(F.col("doc_id") % 4 == 1).write.mode("append").parquet(land)
-    got1 = sorted(map(tuple,
-                      run_stream_incremental_dedup(spark, land, ref, ckpt,
-                                                   out_ref).collect()))
-    assert set(got1) <= set(expected)
-    # second arrival, SAME checkpoint: the rest lands; accumulated result
-    # must equal the batch cross-corpus join over everything
-    new.where(F.col("doc_id") % 4 == 3).write.mode("append").parquet(land)
-    got2 = sorted(map(tuple,
-                      run_stream_incremental_dedup(spark, land, ref, ckpt,
-                                                   out_ref).collect()))
-    assert got2 == expected
-
-
 # ---------------------------------------------------------------------------
 # r5: plan-shape pins for the new window queries (the properties that keep
 # them viable at 100 TB — regressions here matter more than wall time)
@@ -443,12 +415,12 @@ def test_curation_mixture_and_dsir_stages(spark, tmp_path):
 
 
 def test_mixture_rejects_null_sources_and_cli_ranges(spark, tmp_path):
-    from page_evaluator_spark.operators.curation import source_mixture_targets
+    from page_evaluator_spark.operators.curation import domain_mixture_sample
 
     d = spark.createDataFrame([("1", "hello world", None), ("2", "hi", "a")],
                               "doc_id: string, text: string, source: string")
     with pytest.raises(ValueError, match="NULL"):
-        source_mixture_targets(d)
+        domain_mixture_sample(d)
 
     from jobs.run_curation import parse_args
 

@@ -33,13 +33,18 @@ def _brute_mixture_keep(docs):
     partitioned by source alone.  Kept as the test-only semantics oracle
     for the sharded selection."""
     from page_evaluator_spark.functions.textstats import PORTABLE_TOKEN_RE
-    from page_evaluator_spark.operators.curation import source_mixture_targets
+    from page_evaluator_spark.operators.curation import _targets_from_totals
 
-    targets = source_mixture_targets(docs)
-    tgt = docs.sparkSession.createDataFrame(
-        targets, "source: string, total_tokens: long, target_tokens: long")
     n_tok = F.size(F.regexp_extract_all(F.col("text"),
                                         F.lit(PORTABLE_TOKEN_RE), 0))
+    # per-source quotas from one plain groupBy (the sharded path derives
+    # its totals from per-shard stats instead)
+    toks = F.regexp_count(F.col("text"), F.lit(PORTABLE_TOKEN_RE)).cast("long")
+    totals = sorted((r["source"], int(r["toks"])) for r in docs.groupBy("source")
+                    .agg(F.coalesce(F.sum(toks), F.lit(0)).alias("toks")).collect())
+    tgt = docs.sparkSession.createDataFrame(
+        _targets_from_totals(totals, 2, 50),
+        "source: string, total_tokens: long, target_tokens: long")
     base = docs.select(F.col("doc_id"), "source",
                        n_tok.cast("long").alias("n_tok"),
                        F.md5(F.col("doc_id").cast("string")).alias("shuf"))
@@ -236,74 +241,6 @@ def test_ingest_run_id_validation():
 
     with pytest.raises(SystemExit):
         parse_args(["--new", "x", "--output", "y", "--run-id", "d'1"])
-
-
-# ---------------------------------------------------------------------------
-# r6: vectorized BPE encode kernel for production merge-table sizes
-# ---------------------------------------------------------------------------
-
-def test_bpe_encode_kernel_equals_projection(spark):
-    """VERDICT r5 #6: the mapInPandas encode must equal the K-chained-replace
-    projection at K=8 (the pinned crossover test), including multi-space /
-    repeated-char words where the delimiter anchoring matters."""
-    from page_evaluator_spark.operators.tokenizer import (
-        bpe_encode_counts,
-        bpe_encode_counts_kernel,
-        bpe_train,
-    )
-
-    rng = random.Random(9)
-    vocab = ["banana", "bandana", "aaaa", "abab", "low", "lower", "lowest",
-             "new", "newer", "newest", "wide", "wider"]
-    rows = [(i, " ".join(rng.choice(vocab) for _ in range(12)))
-            for i in range(25)]
-    d = spark.createDataFrame(rows, "doc_id: long, text: string")
-    merges = bpe_train(d, n_merges=8)
-    assert len(merges) == 8
-    proj = sorted(map(tuple, bpe_encode_counts(d, n_merges=8).collect()))
-    kern = sorted(map(tuple, bpe_encode_counts_kernel(
-        d, merges=merges).collect()))
-    assert proj == kern
-
-
-def test_bpe_encode_kernel_handles_large_merge_table(spark):
-    """The kernel's reason to exist: a merge-table size where building the
-    chained projection is already impractical.  Correctness cross-checked
-    against a per-word pure-Python replay."""
-    from page_evaluator_spark.operators.tokenizer import (
-        bpe_encode_counts_kernel,
-    )
-
-    # synthetic 600-merge table over a tiny alphabet (ranks beyond what the
-    # corpus contains simply never fire — same as a shipped table)
-    merges = []
-    syms = ["a", "b", "c", "d"]
-    rank = 0
-    for x in syms:
-        for y in syms:
-            for z in [""] + syms:
-                if rank >= 600:
-                    break
-                merges.append((rank, f"{x + z if z else x} {y}",
-                               (x + z if z else x) + y, 1))
-                rank += 1
-    rows = [(1, "abcd aabb abab dcba"), (2, "aaaa bbbb"), (3, "a b c d")]
-    d = spark.createDataFrame(rows, "doc_id: long, text: string")
-    out = {r["doc_id"]: (r["n_words"], r["n_base_syms"], r["n_bpe_syms"])
-           for r in bpe_encode_counts_kernel(d, merges=merges).collect()}
-
-    def replay(word):
-        s = "".join(f" {ch} " for ch in word)
-        for _r, pair, merged, _f in merges:
-            a, b = pair.split(" ")
-            s = s.replace(f" {a}  {b} ", f" {merged} ")
-        return len(s.strip().split("  "))
-
-    for did, text in rows:
-        words = text.split()
-        exp = (len(words), sum(len(w) for w in words),
-               sum(replay(w) for w in words))
-        assert out[did] == exp, did
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,9 @@ zipimporters make the per-task ``importlib.invalidate_caches()`` re-read each
 archive's central directory — ~125 ms/task measured) and substitutes the
 driver's directory-form pyspark, so the exact same code executes via
 FileFinder imports.  The wrapper is a script in a per-user private
-directory; these tests pin both the mechanics and the storage's safety.
+directory; these tests pin both the mechanics and the storage's safety.  The
+package zip that ``ensure_shipped`` hands to ``addPyFile`` is stored the same
+way.
 """
 
 from __future__ import annotations
@@ -263,3 +265,63 @@ def test_arrow_input_batches_are_byte_capped(spark):
     assert len(sizes) >= 4, sizes
     # a batch closes once it reaches the cap, so it may hold one page more
     assert max(r.nbytes for r in sizes) <= ARROW_BATCH_BYTES + 80 * 1024, sizes
+
+
+class _FakeContext:
+    """Records what ensure_shipped hands to SparkContext.addPyFile."""
+
+    def __init__(self):
+        self.py_files: list[str] = []
+
+    def addPyFile(self, path):  # noqa: N802 (SparkContext's name)
+        self.py_files.append(path)
+
+
+_SESSIONS: list = []  # keeps fake sessions alive: ensure_shipped keys by id()
+
+
+def _ship_to_fresh_context() -> str:
+    from types import SimpleNamespace
+
+    from page_evaluator_spark.shipping import ensure_shipped
+
+    session = SimpleNamespace(sparkContext=_FakeContext())
+    ensure_shipped(session)
+    (path,) = session.sparkContext.py_files
+    _SESSIONS.append(session)
+    return path
+
+
+def test_package_zip_is_one_private_file_per_version(private_tmp):
+    """Fresh contexts share one digest-named zip in the 0700 per-user dir
+    (the old pid/context-named 0644 zip piled up in the shared tempdir)."""
+    import zipfile
+
+    first, second = _ship_to_fresh_context(), _ship_to_fresh_context()
+    folder = private_tmp / f"pageeval-{os.getuid()}"
+    assert first == second
+    assert os.path.dirname(first) == str(folder)
+    assert os.listdir(folder) == [os.path.basename(first)]
+    assert os.stat(first).st_mode & 0o777 == 0o600
+    with zipfile.ZipFile(first) as zf:
+        assert "page_evaluator_spark/shipping.py" in zf.namelist()
+
+
+def test_foreign_file_at_zip_name_is_replaced_not_shipped(private_tmp):
+    from page_evaluator_spark.shipping import package_zip
+
+    path = _ship_to_fresh_context()
+    with open(path, "wb") as fh:
+        fh.write(b"PK not the package")
+    assert _ship_to_fresh_context() == path
+    with open(path, "rb") as fh:
+        assert fh.read() == package_zip()
+
+
+def test_package_zip_is_never_shipped_from_unsafe_dir(private_tmp):
+    folder = private_tmp / f"pageeval-{os.getuid()}"
+    folder.mkdir()
+    os.chmod(folder, 0o777)
+    with pytest.raises(RuntimeError, match="private"):
+        _ship_to_fresh_context()
+    assert os.listdir(folder) == []

@@ -1,47 +1,8 @@
-"""File-mode sources (SURVEY.md §2 S2) and the catalog IO facade."""
+"""The catalog IO facade."""
 
 from __future__ import annotations
 
-from page_evaluator_spark.corpus import make_hocr
 from page_evaluator_spark.sources.catalog import Catalog
-from page_evaluator_spark.sources.files import read_media_files, read_page_files
-
-
-def test_read_hocr_page_files(spark, tmp_path):
-    """One file per page (the reference's input unit, Main.java:36) → the
-    documents model → identical scores as the span-table path."""
-    from page_evaluator_spark.plans.pipeline import evaluate_documents
-
-    (tmp_path / "p1.hocr").write_text(make_hocr([["Quality", "eſti-"], ["mation"]]),
-                                      encoding="utf-8")
-    (tmp_path / "p2.hocr").write_text(make_hocr([["whereunto", "!!"]]), encoding="utf-8")
-    docs = read_page_files(spark, str(tmp_path / "*.hocr"), kind="hocr")
-    rows = {r["doc_id"]: r for r in docs.collect()}
-    assert set(rows) == {"p1.hocr", "p2.hocr"}
-    assert rows["p1.hocr"]["spans"][0]["kind"] == "hocr"
-
-    scores = {r["doc_id"]: r for r in
-              evaluate_documents(docs).page_scores.collect()}
-    assert scores["p1.hocr"]["token_count"] == 2  # Quality + eſtimation
-    assert scores["p2.hocr"]["len_gt1_nonalpha"] == 1
-
-
-def test_read_txt_page_files(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("is not estima-\ntion now\n", encoding="utf-8")
-    docs = read_page_files(spark, str(tmp_path / "*.txt"), kind="text")
-    from page_evaluator_spark.plans.pipeline import evaluate_documents
-
-    out = evaluate_documents(docs).spans_out.orderBy("ord").collect()
-    assert [r["text"] for r in out] == ["is", "not", "estimation", "now"]
-
-
-def test_read_media_files(spark, tmp_path):
-    (tmp_path / "x.bin").write_bytes(b"\x89PNGfake")
-    docs = read_media_files(spark, str(tmp_path / "*.bin"))
-    r = docs.collect()[0]
-    assert r["doc_id"] == "x.bin"
-    assert bytes(r["media_bytes"]) == b"\x89PNGfake"
-    assert r["spans"][0]["kind"] == "image"
 
 
 def test_catalog_append_read(spark, tmp_path):
@@ -58,79 +19,3 @@ def test_catalog_append_read(spark, tmp_path):
     cat.append(df, ref, run_id="c2")
     assert cat.read(ref).count() == 4
 
-
-def test_pageeval_python_datasource(spark, tmp_path):
-    """format('pageeval') (Spark 4 Python DataSource API): per-file format
-    dispatch by extension, deterministic size-balanced input partitions, and
-    pipeline outputs identical to the wholetext compatibility path."""
-    from page_evaluator_spark.plans.pipeline import evaluate_documents
-    from page_evaluator_spark.sources.pagesource import PageEvalDataSource
-
-    (tmp_path / "p1.hocr").write_text(make_hocr([["Quality", "eſti-"], ["mation"]]),
-                                      encoding="utf-8")
-    (tmp_path / "p2.hocr").write_text(make_hocr([["whereunto", "!!"]]), encoding="utf-8")
-    (tmp_path / "a.txt").write_text("is not estima-\ntion now\n", encoding="utf-8")
-    (tmp_path / "weird.dat").write_text("???", encoding="utf-8")
-
-    spark.dataSource.register(PageEvalDataSource)
-    docs = (spark.read.format("pageeval").option("numPartitions", 3)
-            .load(str(tmp_path)))
-    rows = {r["doc_id"]: r for r in docs.collect()}
-    assert set(rows) == {"p1.hocr", "p2.hocr", "a.txt", "weird.dat"}
-    assert rows["p1.hocr"]["spans"][0]["kind"] == "hocr"
-    assert rows["a.txt"]["spans"][0]["kind"] == "text"
-    assert rows["weird.dat"]["spans"][0]["kind"] == "unknown"
-    assert docs.rdd.getNumPartitions() == 3
-
-    res = evaluate_documents(docs)
-    scores = {r["doc_id"]: r for r in res.page_scores.collect()}
-    assert scores["p1.hocr"]["token_count"] == 2
-    out = [r["text"] for r in
-           res.spans_out.where("doc_id = 'a.txt'").orderBy("ord").collect()]
-    assert out == ["is", "not", "estimation", "now"]
-    # unknown format quarantined (Main.java unsupported-format parity)
-    quar = {r["doc_id"] for r in res.quarantine.collect()}
-    assert "weird.dat" in quar
-
-    # identical rows to the wholetext path for the same hocr files
-    legacy = {r["doc_id"]: r["spans"] for r in
-              read_page_files(spark, str(tmp_path / "*.hocr"), kind="hocr").collect()}
-    for d in ("p1.hocr", "p2.hocr"):
-        assert rows[d]["spans"] == legacy[d]
-
-
-def test_pageeval_streaming_datasource(spark, tmp_path):
-    """readStream.format('pageeval'): lexicographic-watermark offsets — a
-    second trigger with the same checkpoint ingests ONLY files named above
-    the watermark (O(1) offset state vs the built-in source's seen-file
-    map)."""
-    from page_evaluator_spark.sources.pagesource import PageEvalDataSource
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    spark.dataSource.register(PageEvalDataSource)
-
-    def run_once():
-        q = (spark.readStream.format("pageeval").option("numPartitions", 2)
-             .load(str(land))
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    (land / "batch1_a.txt").write_text("alpha beta", encoding="utf-8")
-    (land / "batch1_b.txt").write_text("gamma", encoding="utf-8")
-    got1 = run_once()
-    assert {r["doc_id"] for r in got1.collect()} == {"batch1_a.txt", "batch1_b.txt"}
-
-    (land / "batch2_c.txt").write_text("delta", encoding="utf-8")
-    got2 = run_once()
-    rows = got2.collect()
-    assert {r["doc_id"] for r in rows} == {"batch1_a.txt", "batch1_b.txt", "batch2_c.txt"}
-    assert len(rows) == 3  # batch1 files NOT re-ingested
-    by_id = {r["doc_id"]: r for r in rows}
-    assert by_id["batch2_c.txt"]["spans"][0]["text"] == "delta"
-    assert by_id["batch2_c.txt"]["spans"][0]["kind"] == "text"

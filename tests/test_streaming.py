@@ -1,17 +1,11 @@
-"""Structured Streaming surfaces: AvailableNow batch-equivalence, incremental
-file-source resume (only new files processed), and watermark append-mode
-late-data semantics."""
+"""Structured Streaming: the AvailableNow daily aggregate equals its batch
+form."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from page_evaluator_spark.corpus import gen_corpus, write_corpus_parquet
-from page_evaluator_spark.streaming.jobs import (
-    run_events_daily_availablenow,
-    run_scores_stream,
-    run_watermarked_event_windows,
-)
+from page_evaluator_spark.streaming.jobs import run_events_daily_availablenow
 
 
 def test_streaming_daily_matches_batch(spark, sf_dir):
@@ -25,274 +19,3 @@ def test_streaming_daily_matches_batch(spark, sf_dir):
     b = {(r["day"], r["event_type"]): (r["n"], r["sum_value"]) for r in batch.collect()}
     assert g == b
 
-
-def test_scores_stream_incremental_resume(spark, tmp_path):
-    """File-source checkpoint = ingest-tier resume: second batch of files is
-    processed without re-reading the first."""
-    land = tmp_path / "landing"
-    land.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    batch1 = gen_corpus(10, seed=1, include_fixtures=False)
-    write_corpus_parquet(str(land / "b1.parquet"), batch1)
-
-    out1 = run_scores_stream(spark, str(land), ckpt)
-    assert out1.count() == len(batch1)
-
-    batch2 = gen_corpus(7, seed=2, include_fixtures=False)
-    # distinct doc ids for the second landing batch
-    for d in batch2:
-        d["doc_id"] = "x" + d["doc_id"]
-    write_corpus_parquet(str(land / "b2.parquet"), batch2)
-
-    out2 = run_scores_stream(spark, str(land), ckpt)
-    # complete-mode memory sink over resumed checkpoint: state includes BOTH
-    # batches, but the second trigger only READ the new file (checkpoint log)
-    assert out2.count() == len(batch1) + len(batch2)
-
-    import os
-
-    # the file-source commit log proves batch 2 saw only the new file
-    src_log = os.path.join(ckpt, "sources", "0")
-    entries = sorted(e for e in os.listdir(src_log) if not e.startswith("."))
-    assert len(entries) == 2
-    with open(os.path.join(src_log, entries[-1])) as f:
-        last = f.read()
-    assert "b2.parquet" in last and "b1.parquet" not in last
-
-
-def test_watermark_append_withholds_open_window(spark, sf_dir):
-    """Append mode emits only watermark-finalized windows; the trailing day
-    (within the 2-day watermark of max event time) must be withheld."""
-    got = run_watermarked_event_windows(spark, f"{sf_dir}/events.parquet",
-                                        window="1 day", watermark="2 days")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    emitted_days = {r["win_start"] for r in got.select("win_start").distinct().collect()}
-    all_days = {r["d"] for r in ev.select(F.date_trunc("day", "ts").alias("d"))
-                .distinct().collect()}
-    assert emitted_days  # something was finalized
-    assert emitted_days < all_days  # trailing open window(s) withheld
-    import datetime
-
-    for d in emitted_days:
-        assert (max_ts - d) > datetime.timedelta(days=2)
-
-
-def test_stateful_first_seen_dedup(spark, tmp_path):
-    """applyInPandasWithState: streaming exact-dedup emits each content hash
-    once, across restarts (state persisted in the checkpoint)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from page_evaluator_spark.streaming.jobs import run_stateful_first_seen
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(name, rows):
-        pq.write_table(pa.table(pd.DataFrame(rows, columns=["doc_id", "text"])),
-                       str(land / name))
-
-    out_dir = str(tmp_path / "dedup_out")
-    write("b1.parquet", [("d1", "alpha beta"), ("d2", "gamma delta"),
-                         ("d3", "alpha  beta ")])  # d3 = dup of d1 post-normalize
-    out1 = run_stateful_first_seen(spark, str(land), ckpt, out_dir)
-    rows1 = {r["content_hash"]: r["first_doc_id"] for r in out1.collect()}
-    assert len(rows1) == 2  # two distinct hashes, dup suppressed
-
-    write("b2.parquet", [("d4", "alpha beta"),      # dup of batch-1 hash
-                         ("d5", "epsilon zeta")])   # new
-    out2 = run_stateful_first_seen(spark, str(land), ckpt, out_dir)
-    rows2 = {r["content_hash"]: r["first_doc_id"] for r in out2.collect()}
-    # resumed query: batch-1 dup suppressed by persisted state; only the new
-    # hash is appended to the sink
-    assert len(rows2) == 3
-    new_hashes = set(rows2) - set(rows1)
-    assert len(new_hashes) == 1
-    assert rows2[new_hashes.pop()] == "d5"
-
-
-def test_streaming_session_windows_match_batch_closed_sessions(spark, sf_dir):
-    """Native session windows under a watermark: every emitted (closed)
-    session must equal the batch session_window result for that key, and
-    trailing open sessions must be withheld."""
-    from page_evaluator_spark.streaming.jobs import run_session_windows_stream
-
-    got = run_session_windows_stream(spark, f"{sf_dir}/events.parquet",
-                                     gap="30 minutes", watermark="1 day")
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp_ltz")))
-    batch = (ev.groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("win"))
-             .agg(F.count("*").alias("n_events"),
-                  F.round(F.sum("value"), 2).alias("sum_value"))
-             .select("user_id", F.col("win.start").alias("session_start"),
-                     F.col("win.end").alias("session_end"), "n_events", "sum_value"))
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in batch.collect()}
-    assert g, "no sessions emitted"
-    assert g <= b, "streaming emitted a session batch does not have"
-    withheld = b - g
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    import datetime
-
-    # only sessions still open under the watermark may be withheld
-    for row in withheld:
-        assert (max_ts - row[2]) <= datetime.timedelta(days=1), row
-
-
-def test_streaming_catalog_sink_exactly_once(spark, tmp_path):
-    """foreachBatch → Catalog sink (r3): restart from checkpoint scores only
-    NEW files; a replayed batch id REPLACES its rows instead of duplicating
-    (at-least-once delivery × idempotent keyed write = exactly-once)."""
-    from page_evaluator_spark.corpus import corpus_to_spark_df, gen_corpus
-    from page_evaluator_spark.sources.catalog import Catalog
-    from page_evaluator_spark.streaming.jobs import run_scores_stream_to_catalog
-
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "scores_table")
-    ckpt = str(tmp_path / "ckpt")
-    docs = gen_corpus(20, seed=21, include_fixtures=False)
-    corpus_to_spark_df(spark, docs[:12]).write.mode("append").parquet(land)
-
-    got1 = run_scores_stream_to_catalog(spark, land, ckpt, out)
-    ids1 = {r["doc_id"] for r in got1.select("doc_id").collect()}
-    assert len(ids1) == 12 and got1.count() == 12
-
-    # new files arrive; SAME checkpoint → only they are processed, no dups
-    corpus_to_spark_df(spark, docs[12:]).write.mode("append").parquet(land)
-    got2 = run_scores_stream_to_catalog(spark, land, ckpt, out)
-    assert got2.count() == 20
-    assert got2.select("doc_id").distinct().count() == 20
-
-    # crash-replay simulation: re-append a batch under an ALREADY-USED batch
-    # id — the keyed write must REPLACE that batch's rows, not add to them
-    cat = Catalog(spark)
-    batch_ids = [r["_batch_id"] for r in
-                 got2.select("_batch_id").distinct().collect()]
-    replay_id = batch_ids[0]
-    # a real replay RECOMPUTES the batch — materialize here so the write does
-    # not lazily read the very directory it overwrites
-    replay_pdf = got2.where(F.col("_batch_id") == replay_id).toPandas()
-    replay_rows = spark.createDataFrame(replay_pdf, got2.schema)
-    n_total = got2.count()
-    cat.append(replay_rows, out, run_id=f"batch{replay_id}",
-               replace_where=f"_batch_id = {replay_id}")
-    again = cat.read(out)
-    assert again.count() == n_total  # unchanged — replaced, not duplicated
-    assert again.select("doc_id").distinct().count() == 20
-
-
-def test_dropdup_within_watermark_batch_equality_and_resume(spark, tmp_path):
-    """Built-in bounded-state streaming dedup (r4): equals batch
-    dropDuplicates(key) when all duplicates arrive within the watermark, and
-    a checkpoint restart still drops duplicates of earlier keys."""
-    import datetime as dt
-
-    from page_evaluator_spark.streaming.jobs import run_dropdup_within_watermark
-
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "deduped")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def ev(eid, minute, etype="click"):
-        return (eid, 7, etype, t0 + dt.timedelta(minutes=minute), 1.0)
-
-    schema = "event_id: long, user_id: long, event_type: string, ts: timestamp, value: double"
-    # batch 1: e1 duplicated in-batch (producer retry), e2/e3 unique
-    b1 = [ev(1, 0), ev(1, 1), ev(2, 2), ev(3, 3)]
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(land)
-    got1 = run_dropdup_within_watermark(spark, land, ckpt, out)
-    assert got1.count() == 3
-    assert {r["event_id"] for r in got1.collect()} == {1, 2, 3}
-
-    # batch 2 (same checkpoint): replays e2 within the watermark + new e4 —
-    # only e4 flows; the restart read just the new file and kept e2's state
-    b2 = [ev(2, 4), ev(4, 5)]
-    spark.createDataFrame(b2, schema).write.mode("append").parquet(land)
-    got2 = run_dropdup_within_watermark(spark, land, ckpt, out)
-    assert got2.count() == 4
-    assert {r["event_id"] for r in got2.collect()} == {1, 2, 3, 4}
-
-    # batch equality: keys match batch dropDuplicates over everything landed
-    batch_keys = {r["event_id"] for r in
-                  spark.read.parquet(land).dropDuplicates(["event_id"]).collect()}
-    assert {r["event_id"] for r in got2.collect()} == batch_keys
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas (r4, the Spark-4 arbitrary-state API):
-    per-user totals accumulate across restarts from the checkpoint; the
-    latest emission per user equals a batch recompute over everything."""
-    import datetime as dt
-
-    import pytest
-
-    from page_evaluator_spark.streaming.jobs import run_running_totals_tws, tws_available
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas needs the protobuf package "
-                    "(absent in this container, no network to install)")
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "totals")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 5, 1, 9, 0, 0)
-    schema = "event_id: long, user_id: long, event_type: string, ts: timestamp, value: double"
-
-    def ev(eid, uid, val):
-        return (eid, uid, "click", t0, float(val))
-
-    spark.createDataFrame([ev(1, 1, 1.5), ev(2, 1, 2.25), ev(3, 2, 10.0)], schema) \
-        .write.mode("append").parquet(land)
-    got1 = {r["user_id"]: r for r in
-            run_running_totals_tws(spark, land, ckpt, out).collect()}
-    assert got1[1]["n_events"] == 2 and got1[1]["sum_value"] == 3.75
-    assert got1[2]["n_events"] == 1 and got1[2]["sum_value"] == 10.0
-
-    # second batch, same checkpoint: user 1's state continues, user 3 is new
-    spark.createDataFrame([ev(4, 1, 0.25), ev(5, 3, 7.0)], schema) \
-        .write.mode("append").parquet(land)
-    all_rows = run_running_totals_tws(spark, land, ckpt, out).collect()
-    # r5: the function dedups the append sink to the latest row per user
-    assert len(all_rows) == len({r["user_id"] for r in all_rows})
-    latest = {r["user_id"]: r for r in all_rows}
-    assert latest[1]["n_events"] == 3 and latest[1]["sum_value"] == 4.0
-    assert latest[2]["n_events"] == 1 and latest[3]["sum_value"] == 7.0
-
-    # batch equality over everything landed
-    import pyspark.sql.functions as FF
-    batch = {r["user_id"]: r for r in
-             spark.read.parquet(land).groupBy("user_id")
-             .agg(FF.count("*").alias("n"),
-                  (FF.sum(FF.round(FF.col("value") * 100).cast("long")) / 100.0)
-                  .alias("v")).collect()}
-    for uid, r in latest.items():
-        assert r["n_events"] == batch[uid]["n"] and r["sum_value"] == batch[uid]["v"]
-
-
-def test_stream_static_broadcast_enrich(spark, sf_dir):
-    """Stream-static broadcast join (r4): streaming events enriched with a
-    bounded dimension equal the batch join over the same data — including
-    the LEFT-join path (users missing from the dimension keep flowing with
-    a NULL tier instead of being dropped)."""
-    from page_evaluator_spark.streaming.jobs import run_stream_static_enrich
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the dimension deliberately covers only 2/3 of users
-    dim = (events.select("user_id").distinct()
-           .where(F.col("user_id") % 3 != 2)
-           .withColumn("tier", F.when(F.col("user_id") % 3 == 0, "gold")
-                       .otherwise("standard")))
-    got = run_stream_static_enrich(spark, f"{sf_dir}/events.parquet", dim)
-    cents = F.round(F.col("value") * 100).cast("long")
-    batch = (events.join(F.broadcast(dim), "user_id", "left")
-             .groupBy("user_id", "tier")
-             .agg(F.count("*").alias("n"),
-                  (F.sum(cents) / 100.0).alias("sum_value")))
-    g = {(r["user_id"], r["tier"]): (r["n"], r["sum_value"]) for r in got.collect()}
-    b = {(r["user_id"], r["tier"]): (r["n"], r["sum_value"]) for r in batch.collect()}
-    assert g == b and len(g) > 0
-    # unmatched users surface with NULL tier — an inner join would drop them
-    assert any(t is None for _, t in g)
