@@ -98,26 +98,10 @@ def main(out_dir: Path | str = GOLDEN_DIR) -> None:
           pa.schema([("doc_id", s), ("token_count", i32),
                      ("quality_score", f32), ("correctable_score", f32)]))
 
-    # media spans INPUT (not output): the media_features oracle re-derives the
-    # deterministic sha256 features in DuckDB SQL from this input
+    # media spans INPUT (not output): the media_frame_sample oracle re-derives
+    # the deterministic sha256 frame counts and shas in DuckDB SQL from this input
     write("media_spans.parquet", media_rows,
           pa.schema([("doc_id", s), ("media_ref", s), ("kind", s)]))
-
-    # full spans INPUT (r6): the raw exploded corpus, explode_outer semantics
-    # (a doc with an EMPTY spans array keeps one all-NULL row so per-doc
-    # GROUP BYs still see it — f017_no_spans).  media_content_dedup and
-    # interleaved_pack re-derive their whole answer in DuckDB SQL from this,
-    # so those twins stay independent computations, not golden outputs.
-    span_input_rows = []
-    for d in docs:
-        if not d["spans"]:
-            span_input_rows.append([d["doc_id"], None, None, None, None])
-        for sp in d["spans"]:
-            span_input_rows.append([d["doc_id"], sp["kind"], sp["text"],
-                                    sp["media_ref"], sp["offset"]])
-    write("spans_input.parquet", span_input_rows,
-          pa.schema([("doc_id", s), ("kind", s), ("text", s),
-                     ("media_ref", s), ("offset", pa.int32())]))
 
     # caption adjacency (r5): for each media span, the next non-media span
     # with non-null text in document order (stable sort by offset — ties keep

@@ -8,7 +8,7 @@ Public API:
                                      {page_scores, spans_out, quarantine,
                                       page_meta, token_props, parsed}
   IncrementalRunner(spark, out_dir)  resumable lineage-tracked execution
-  queries / oracle_sql               the 50-query driver window plus 41
+  queries / oracle_sql               the 50-query driver window plus 28
                                      parked queries, with their DuckDB twins
                                      (queries module)
 """

@@ -16,12 +16,10 @@ engine to the web-document case with readability-style density heuristics):
      (long, link-light blocks = main content; nav/footers are link-dense);
   5. output = kept blocks joined with '\\n' (+ trailing '\\n' when non-empty).
 
-Two implementations, cross-checked by tests:
-  * ``extract_main_text`` — pure Python, used inside the Arrow parse kernel
-    (span kind 'html' → main text → TXT tokenizer path);
-  * ``extract_main_text_expr`` — the SAME rule as a native Catalyst
-    expression tree (split → transform → filter → array_join), fully
-    codegen'd, for SQL-side use and as the plan-quality showcase.
+``extract_main_text`` implements the rule in pure Python inside the Arrow
+parse kernel (span kind 'html' → main text → TXT tokenizer path);
+``block_diagnostics_expr`` exposes the per-block evidence as a native
+Catalyst expression (split → transform), fully codegen'd.
 """
 
 from __future__ import annotations
@@ -92,8 +90,7 @@ def block_diagnostics_expr(html: Column) -> Column:
     order) of structs (text_len, link_len) for every DOM block the rule
     sees — the readability-style density evidence behind each keep/drop
     decision, exposed so extraction behavior is inspectable instead of a
-    yes/no.  Same split/clean machinery as extract_main_text_expr; fully
-    codegen'd."""
+    yes/no.  Fully codegen'd."""
     body = F.regexp_replace(html, RE_DROP, "")
     blocks = F.split(body, RE_BLOCK_SEP)
     return F.transform(blocks, lambda b: F.struct(
@@ -102,18 +99,3 @@ def block_diagnostics_expr(html: Column) -> Column:
             F.regexp_extract_all(b, F.lit(RE_ANCHOR), 1), ""))).alias("link_len")))
 
 
-def extract_main_text_expr(html: Column) -> Column:
-    """The same frozen rule as a native, codegen'd Catalyst expression."""
-    body = F.regexp_replace(html, RE_DROP, "")
-    blocks = F.split(body, RE_BLOCK_SEP)
-    scored = F.transform(blocks, lambda b: F.struct(
-        _clean_expr(b).alias("text"),
-        _clean_expr(F.array_join(
-            F.regexp_extract_all(b, F.lit(RE_ANCHOR), 1), "")).alias("link_text"),
-    ))
-    kept = F.filter(scored, lambda s: (
-        (F.length(s["text"]) >= MIN_BLOCK_CHARS)
-        & (F.length(s["link_text"]).cast("double")
-           <= F.lit(MAX_LINK_DENSITY) * F.length(s["text"]).cast("double"))))
-    joined = F.array_join(F.transform(kept, lambda s: s["text"]), "\n")
-    return F.when(F.size(kept) > 0, F.concat(joined, F.lit("\n"))).otherwise(F.lit(""))

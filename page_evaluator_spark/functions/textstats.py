@@ -52,14 +52,6 @@ def ws_token_count(text: Column) -> Column:
             .otherwise(F.regexp_count(t, F.lit(r"\s+")) + 1).cast("int")
 
 
-def regex_token_count(text: Column) -> Column:
-    """BPE-ish regex token count: letter runs / digit runs / single symbols.
-
-    regexp_count == size(regexp_extract_all(...)) without materializing the
-    match array."""
-    return F.regexp_count(text, F.lit(PORTABLE_TOKEN_RE)).cast("int")
-
-
 def punct_ratio(text: Column) -> Column:
     """ASCII-punctuation chars / non-space chars (0.0 for empty).
 

@@ -1,6 +1,6 @@
 """Corpus-curation operators a large-scale training-data pipeline needs on
 top of pair-wise dedup: duplicate CLUSTERS (connected components), canonical
-selection, deterministic stratified and mixture sampling, and token-budget
+selection, deterministic mixture sampling, and token-budget
 packing.
 
 Scale notes:
@@ -11,7 +11,7 @@ Scale notes:
     one shuffle on the label join, lineage truncated per round — reliable
     checkpoint() when a checkpoint dir is configured (cluster-safe),
     localCheckpoint() otherwise.  Pinned against union-find ground truth.
-  * stratified sampling — deterministic md5-hash thresholding, NOT rand():
+  * mixture sampling — deterministic md5-hash ordering, NOT rand():
     reproducible across runs, retries and cluster sizes, and exactly
     re-derivable in SQL for the oracle.
   * token-budget packing — sort by a stable key, prefix-sum token counts,
@@ -100,19 +100,6 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
     appears in a candidate pair, with its cluster's canonical (min) doc_id."""
     pairs = minhash_lsh_candidates(docs, text_col=text_col, id_col=id_col)
     return connected_components(pairs)
-
-
-def stratified_sample(docs: DataFrame, strata_col: str, rates: dict[str, int],
-                      default_pct: int = 0, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic per-stratum sampling: keep a row iff
-    md5-bucket(id) < pct(stratum).  Rates are integer percents (0-100)."""
-    pct = F.lit(default_pct)
-    expr = None
-    for value, p in sorted(rates.items()):
-        cond = F.col(strata_col) == value
-        expr = F.when(cond, p) if expr is None else expr.when(cond, p)
-    pct = expr.otherwise(default_pct) if expr is not None else pct
-    return docs.where(doc_hash_bucket(F.col(id_col)) < pct)
 
 
 def benchmark_contamination(docs: DataFrame, benchmark_grams: DataFrame,
@@ -265,42 +252,24 @@ def _lm_doc_nll(docs: DataFrame, text_col: str = "text",
                  F.count("*").cast("int").alias("n_tokens")))
 
 
-def assign_packed_seq_ids(costed: DataFrame, budget: int,
-                          cost_col: str) -> DataFrame:
-    """THE sharded prefix-sum bin assignment (shared by pack_token_budget and
-    media.pack_interleaved_sequences — hold the idiom in ONE place so the
-    window definition, the 2^40 bins-per-shard constant, and the
-    overflow-by-one contract cannot diverge between the text and multimodal
-    packers or their DuckDB twins).
-
-    Input must carry (doc_id, shard, <cost_col>); within a shard, stable
-    order (doc_id), prefix-sum of cost, local bin = (cumsum - cost) div
-    budget; seq_id = shard * 2^40 + local bin (2^40 bins/shard ≈ 5×10^14
-    tokens per shard at budget 512 — no collision at any realistic scale;
-    raise n_shards, not the multiplier, beyond that).  A bin may overflow by
-    at most one doc: every bin's total cost < budget + (its last doc's
-    cost), because the bin's start offset ≥ bin·budget and its last doc
-    starts below (bin+1)·budget — exact greedy packing is inherently
-    sequential; the per-shard prefix sum is the scalable contract."""
-    from pyspark.sql import Window
-
-    w = (Window.partitionBy("shard").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return costed.withColumn(
-        "seq_id",
-        F.col("shard") * F.lit(1 << 40)
-        + F.floor((F.sum(cost_col).over(w) - F.col(cost_col)) / budget))
-
-
 def pack_token_budget(docs: DataFrame, budget: int = 512, n_shards: int = 16,
                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Assign docs to training-sequence bins of ~`budget` tokens.
 
     SHARDED packing (a global ordered window would be one task at 100 TB):
-    docs hash into n_shards independent streams; the bin math (and the
-    overflow-by-one contract) lives in assign_packed_seq_ids, shared with
-    the multimodal packer.  Returns (seq_id, n_docs, total_tokens).
+    docs hash into n_shards independent streams.  Within a shard, stable
+    order (doc_id), prefix-sum of tokens, local bin = (cumsum - n_tokens)
+    div budget; seq_id = shard * 2^40 + local bin (2^40 bins/shard ≈ 5×10^14
+    tokens per shard at budget 512 — no collision at any realistic scale;
+    raise n_shards, not the multiplier, beyond that).  A bin may overflow by
+    at most one doc: every bin's total < budget + (its last doc's tokens),
+    because the bin's start offset ≥ bin·budget and its last doc starts
+    below (bin+1)·budget — exact greedy packing is inherently sequential;
+    the per-shard prefix sum is the scalable contract.
+    Returns (seq_id, n_docs, total_tokens).
     """
+    from pyspark.sql import Window
+
     from .skew import ensure_min_parallelism
 
     n_tok = F.regexp_count(F.col(text_col), F.lit(PORTABLE_TOKEN_RE))
@@ -308,7 +277,12 @@ def pack_token_budget(docs: DataFrame, budget: int = 512, n_shards: int = 16,
             .select(F.col(id_col).alias("doc_id"),
                     doc_hash_bucket(F.col(id_col), n_shards).alias("shard"),
                     n_tok.cast("long").alias("n_tokens")))
-    packed = assign_packed_seq_ids(toks, budget, "n_tokens")
+    w = (Window.partitionBy("shard").orderBy("doc_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    packed = toks.withColumn(
+        "seq_id",
+        F.col("shard") * F.lit(1 << 40)
+        + F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / budget))
     return (packed.groupBy("seq_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_tokens").cast("bigint").alias("total_tokens")))

@@ -10,9 +10,7 @@ Scale design notes:
   * MinHash+LSH = shingle explode → per-doc signature (array_min over a
     transform — no shuffle) → band-key explode → self-join on band key.
     The self-join is banded so candidate pairs ≪ n²; AQE skew-join splits
-    hot buckets (e.g. boilerplate-heavy shards);
-  * SimHash = fixed 64-bit signature per doc; near-dup candidates via exact
-    signature-band match (rotation buckets), no n² anywhere.
+    hot buckets (e.g. boilerplate-heavy shards).
 """
 
 from __future__ import annotations
@@ -247,130 +245,6 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
             .select("doc_a", "doc_b", "n_common", "jaccard"))
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        k: int = 8, w: int = 4) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
-    scheme): rolling window minima over k-gram hashes — the brief's
-    'document fingerprinting (rolling hash)' operator, fully native.
-
-    Char k-grams of the normalized text → 32-bit md5-half hash per gram →
-    minimum of each w-window → sorted distinct selection.  Any two documents
-    sharing a run of ≥ k+w-1 chars share a fingerprint; the selection is
-    position-independent, so it's robust to reordering of unrelated parts.
-    Engine-portable (md5) — exact DuckDB twin in queries.py.
-
-    Returns (doc_id, fps array<long>).  DataFrame-level on purpose: the hash
-    array MUST be materialized behind an exchange before the window-min pass —
-    as one nested expression Catalyst inlines the array into every slice and
-    recomputes ~n_grams md5s PER WINDOW (measured 100× slower).  The shuffle
-    carries 8 bytes per char, linear.
-    """
-    t = normalized_text(F.col(text_col))
-    n_grams = F.greatest(F.length(t) - F.lit(k - 1), F.lit(0))
-    # sequence endpoints clamped ≥ start (Spark's sequence(0,-1) counts DOWN);
-    # bogus gram hashes for short docs are discarded by the when() guards
-    hashes = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_grams - 1, F.lit(0))),
-        lambda i: F.conv(F.substring(F.md5(t.substr(i + 1, F.lit(k))), 1, 8), 16, 10)
-        .cast("long"))
-    staged = (docs.select(F.col(id_col).alias("doc_id"),
-                          hashes.alias("hashes"), n_grams.alias("n_grams"))
-              .repartition("doc_id"))  # exchange = materialization boundary
-    n_wins = F.greatest(F.col("n_grams") - F.lit(w - 1), F.lit(0))
-    mins = F.transform(F.sequence(F.lit(0), F.greatest(n_wins - 1, F.lit(0))),
-                       lambda j: F.array_min(F.slice(F.col("hashes"), j + 1, w)))
-    sel = (F.when(F.col("n_grams") >= w, F.array_sort(F.array_distinct(mins)))
-           .when(F.col("n_grams") > 0, F.array(F.array_min(F.col("hashes"))))
-           .otherwise(F.array().cast("array<long>")))
-    return staged.select("doc_id", sel.alias("fps"))
-
-
-def _simhash_word(hashes: Column) -> Column:
-    """32 bits of a SimHash word from an array of 32-bit token hashes.
-
-    Per bit: +1 if set else -1 summed over tokens (aggregate fold); signature
-    bit = sign of the sum.  All longs, no UDF, no shuffle.
-    """
-    def _bit_sum(mask: int):
-        # factory closure — PySpark introspects lambda arity, so a default-arg
-        # lambda would be misread as a (element, index) binary lambda
-        return F.aggregate(
-            hashes, F.lit(0),
-            lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(mask)) != 0, 1).otherwise(-1))
-
-    sig = F.lit(0).cast("long")
-    for bit in range(32):
-        sig = sig + F.when(_bit_sum(1 << bit) > 0,
-                           F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
-
-
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Per-doc 64-bit SimHash as two 32-bit words (sig_hi, sig_lo).
-
-    Token hash = the two 32-bit halves of md5(token) — engine-portable (md5 is
-    identical in DuckDB, and 32-bit values avoid signed-64 overflow in either
-    engine), deterministic across cluster sizes.  Token-less docs are excluded
-    (they have no signature, matching the SQL twin's unnest semantics).
-    """
-    from .skew import ensure_min_parallelism
-
-    def _half(start: int):
-        # md5 evaluated once per token into _md5s; halves parsed per word
-        return F.transform(F.col("_md5s"),
-                           lambda h: F.conv(F.substring(h, start, 8), 16, 10).cast("long"))
-
-    docs = ensure_min_parallelism(docs)
-    # lower(text) directly — the normalized_text collapse is a no-op on the
-    # token stream (see token_shingles, r7)
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)),
-                                F.lit(PORTABLE_TOKEN_RE), 0)
-    return (docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
-            .where(F.size("_toks") > 0)
-            .select("doc_id",
-                    F.transform(F.col("_toks"), lambda t: F.md5(t)).alias("_md5s"))
-            .select("doc_id",
-                    _simhash_word(_half(1)).alias("sig_hi"),
-                    _simhash_word(_half(9)).alias("sig_lo")))
-
-
-def simhash_near_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       max_hamming: int = 3, n_bands: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64 bits into 4 16-bit keys; pairs
-    agreeing on ≥1 band are candidates, then exact Hamming filter.  Fully
-    expressible in ANSI SQL (md5 halves + bit ops) — see _SIMHASH_SQL twin.
-
-    The banding is hardwired to 4×16 bits (the two 32-bit signature words
-    split at bit 16); a different n_bands would need a different word split,
-    so anything else is rejected rather than silently delivering 4-band
-    recall."""
-    if n_bands != 4:
-        raise ValueError(
-            f"simhash_near_pairs implements exactly 4 16-bit bands over the "
-            f"64-bit signature; got n_bands={n_bands}")
-    sigs = simhash_signatures(docs, text_col, id_col)
-    words = [F.col("sig_lo"), F.shiftright("sig_lo", 16), F.col("sig_hi"),
-             F.shiftright("sig_hi", 16)]
-    banded = sigs.select(
-        "doc_id", "sig_hi", "sig_lo",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(str(b)), (w.bitwiseAND(F.lit(0xFFFF))).cast("string"))
-            for b, w in enumerate(words)])).alias("band_key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (a.join(b, "band_key")
-             .where(F.col("a.doc_id") < F.col("b.doc_id"))
-             .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                     F.col("a.sig_hi").alias("ha"), F.col("a.sig_lo").alias("la"),
-                     F.col("b.sig_hi").alias("hb"), F.col("b.sig_lo").alias("lb"))
-             .distinct())
-    hamming = (F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-               + F.bit_count(F.col("la").bitwiseXOR(F.col("lb"))))
-    return (pairs.withColumn("hamming", hamming.cast("int"))
-            .where(F.col("hamming") <= max_hamming)
-            .select("doc_a", "doc_b", "hamming"))
-
-
 def _span_windows(docs: DataFrame, width: int, text_col: str,
                   id_col: str) -> DataFrame:
     """(doc_id, span): every width-char window of the normalized text.
@@ -382,7 +256,7 @@ def _span_windows(docs: DataFrame, width: int, text_col: str,
     between the normalization projection and the per-row substr, the
     normalization regex is structurally evaluated once per DOC row, so the
     Catalyst nested-array recompute trap (inlined into a transform lambda it
-    re-ran per window — measured 100× on winnow_fingerprints) cannot bite
+    re-ran per window — measured 100× on a winnowing pass) cannot bite
     and the r6 full-text repartition("doc_id") materialization barrier is
     GONE: no corpus-text exchange remains anywhere in this operator (pinned
     equal-time with/without the barrier at 10× sf0.1 on equal parallelism).

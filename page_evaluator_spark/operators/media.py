@@ -1,15 +1,15 @@
 """Multimodal span processing: image/audio/video as opaque binary + metadata.
 
 The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas signatures,
-partitioning) is real and tested; the codec kernels are stubbed behind
-import-guards because no image/audio libraries ship in this container —
-`decode_stub=True` substitutes a deterministic fake so the dataflow is
+partitioning) is real and tested; the codec is stubbed behind an import
+guard because no image/audio libraries are installed — `decode_stub=True`
+substitutes deterministic sha256-derived frame counts so the dataflow is
 exercisable end-to-end.
 
 At 100 TB the pattern is: media bytes live in object storage referenced by
 ``media_ref``; this stage maps metadata + (optionally inlined) bytes through
-Arrow batches, emitting fixed-size feature rows — the shuffle only ever sees
-features, never raw media.
+Arrow batches, emitting fixed-size rows — the shuffle only ever sees
+metadata, never raw media.
 """
 
 from __future__ import annotations
@@ -20,29 +20,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_FEATURES_SCHEMA = (
-    "doc_id string, media_ref string, media_kind string, "
-    "byte_len bigint, content_sha int, width int, height int, "
-    "n_frames int, feature array<float>, decode_error string"
-)
-
-_FEATURE_DIM = 8
-
-
-def _fake_decode(ref: str, kind: str) -> dict:
-    """Deterministic stand-in for a real decoder (PIL/ffmpeg not available).
-
-    Derives stable pseudo-metadata from the media_ref hash so tests are
-    reproducible.  A real deployment replaces ONLY this function.
-    """
-    h = hashlib.sha256((ref or "").encode()).digest()
-    return {
-        "width": 64 + h[0] % 192 if kind in ("image", "figure") else None,
-        "height": 64 + h[1] % 192 if kind in ("image", "figure") else None,
-        "n_frames": 1 + h[2] % 300 if kind == "video" else None,
-        "feature": [round(b / 255.0, 6) for b in h[:_FEATURE_DIM]],
-    }
 
 
 def _decode_real(ref: str, kind: str) -> dict:
@@ -55,88 +32,16 @@ def _decode_real(ref: str, kind: str) -> dict:
     raise NotImplementedError("real decoder wiring is deployment-specific")
 
 
-def extract_media_features(media_rows: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """(doc_id, media_ref, kind) rows → feature rows via Arrow-batched mapInPandas."""
-    decode = _fake_decode if decode_stub else _decode_real
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "media_ref", "media_kind", "byte_len",
-                                    "content_sha", "width", "height", "n_frames",
-                                    "feature", "decode_error")}
-            for doc_id, ref, kind in zip(pdf["doc_id"], pdf["media_ref"], pdf["kind"]):
-                rows["doc_id"].append(doc_id)
-                rows["media_ref"].append(ref)
-                rows["media_kind"].append(kind)
-                rows["byte_len"].append(len(ref or ""))
-                rows["content_sha"].append(
-                    int.from_bytes(hashlib.sha256((ref or "").encode()).digest()[:3], "big"))
-                try:
-                    meta = decode(ref, kind)
-                    rows["width"].append(meta["width"])
-                    rows["height"].append(meta["height"])
-                    rows["n_frames"].append(meta["n_frames"])
-                    rows["feature"].append(meta["feature"])
-                    rows["decode_error"].append(None)
-                except NotImplementedError as e:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["n_frames"].append(None)
-                    rows["feature"].append(None)
-                    rows["decode_error"].append(str(e))
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_frames", "content_sha"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return media_rows.mapInPandas(kernel, schema=MEDIA_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = ("doc_id string, media_ref string, media_kind string, "
-                  "out_width int, out_height int, resized_sha string, decode_error string")
-
 FRAMES_SCHEMA = ("doc_id string, media_ref string, media_kind string, "
                  "frame_idx int, frame_sha string")
-
-
-def resize_media(media_rows: DataFrame, width: int = 224, height: int = 224,
-                 decode_stub: bool = True) -> DataFrame:
-    """Resize kernel plumbing (brief: 'decode / feature-extract / resize /
-    frame-sample as Pandas UDFs over mapInPandas').  The pixel work is the
-    deterministic stub (no imaging libs in this container); the Arrow batch
-    shape, schema and partitioning are the real deployment surface —
-    a real deployment swaps ONLY the per-ref body."""
-    if not decode_stub:
-        _decode_real("", "image")  # raises NotImplementedError with guidance
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "media_ref", "media_kind",
-                                   "out_width", "out_height", "resized_sha",
-                                   "decode_error")}
-            for doc_id, ref, kind in zip(pdf["doc_id"], pdf["media_ref"], pdf["kind"]):
-                out["doc_id"].append(doc_id)
-                out["media_ref"].append(ref)
-                out["media_kind"].append(kind)
-                out["out_width"].append(width)
-                out["out_height"].append(height)
-                out["resized_sha"].append(
-                    hashlib.sha256(f"{ref or ''}|{width}x{height}".encode()).hexdigest())
-                out["decode_error"].append(None)
-            o = pd.DataFrame(out)
-            o["out_width"] = o["out_width"].astype("Int32")
-            o["out_height"] = o["out_height"].astype("Int32")
-            yield o
-
-    return media_rows.mapInPandas(kernel, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media_rows: DataFrame, every_n: int = 30,
                   decode_stub: bool = True) -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled frame index.
 
-    Frame counts come from the same deterministic stub metadata the feature
-    kernel uses (video → 1 + sha[2] % 300 frames; stills → 1 frame), so the
+    Frame counts come from deterministic stub metadata (video →
+    1 + sha256(ref)[2] % 300 frames; stills → 1 frame), so the
     fan-out shape — a 300-frame video becomes ~10 rows — is exercised for
     real even though the decoded pixels are stubbed."""
     if not decode_stub:
@@ -172,106 +77,3 @@ def media_spans(docs: DataFrame) -> DataFrame:
             .select("doc_id", "media_ref", "kind"))
 
 
-def media_content_dedup(docs: DataFrame) -> DataFrame:
-    """Exact media-blob dedup across the interleaved corpus — the media
-    analogue of ``dedup.exact_duplicates``, and the op that pays for itself
-    first at 100 TB, where bytes are dominated by CDN-duplicated images
-    embedded in many pages.
-
-    In production the fingerprint is sha256 of the decoded object bytes
-    (computed next to the object store, never shuffled).  In this container
-    the decode is the deterministic fake (the ``_fake_decode`` doctrine
-    above): the trailing ``media_ref`` path segment stands in for the
-    object-store content id, which repeats across documents exactly like
-    CDN-duplicated media does, and its string length stands in for the
-    blob's byte length.  A real deployment replaces ONLY the two stand-in
-    expressions, not the plan.
-
-    Scale shape: ONE map-side-combined groupBy on the fixed-width 64-hex
-    fingerprint; the canonical first occurrence is a min over
-    (doc_id, media_ref) structs inside the SAME agg — no second pass, no
-    window, and raw media bytes never enter a shuffle.
-
-    Returns (content_sha, n_refs, n_docs, canonical_doc, canonical_ref,
-    byte_len, bytes_saved) — bytes_saved = (n_refs - 1) * byte_len, the
-    storage reclaimed by keeping one copy per fingerprint.
-    """
-    # trailing path segment; \z not $ (the $-anchor matches before a final
-    # line terminator — the r3 doctrine for every new Java-regex anchor)
-    content = F.regexp_extract("media_ref", r"([^/]+)\z", 1)
-    fingerprinted = media_spans(docs).select(
-        "doc_id", "media_ref",
-        F.sha2(content, 256).alias("content_sha"),
-        F.length(content).cast("long").alias("byte_len"))
-    agg = (fingerprinted
-           .groupBy("content_sha")
-           .agg(F.count("*").alias("n_refs"),
-                F.countDistinct("doc_id").alias("n_docs"),
-                F.min(F.struct("doc_id", "media_ref")).alias("canon"),
-                F.max("byte_len").alias("byte_len")))
-    return agg.select(
-        "content_sha",
-        F.col("n_refs").cast("bigint").alias("n_refs"),
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        F.col("canon.doc_id").alias("canonical_doc"),
-        F.col("canon.media_ref").alias("canonical_ref"),
-        "byte_len",
-        ((F.col("n_refs") - 1) * F.col("byte_len")).cast("bigint")
-        .alias("bytes_saved"))
-
-
-def pack_interleaved_sequences(docs: DataFrame, budget: int = 256,
-                               media_tokens: int = 64,
-                               n_shards: int = 16) -> DataFrame:
-    """Pack interleaved text+media documents into ~``budget``-token training
-    sequences — the multimodal twin of ``curation.pack_token_budget`` and
-    the last step before a Flamingo/MM1-style interleaved corpus ships.
-
-    Cost model: every non-media span's text is tokenized with
-    PORTABLE_TOKEN_RE (production would tokenize the EXTRACTED text; the
-    raw span text is the deterministic contract here), and every media span
-    costs a fixed ``media_tokens`` — the vision-encoder patch budget an
-    image occupies in the training sequence.
-
-    Scale shape: per-doc costs are a pure codegen'd projection over the
-    spans array (F.aggregate / F.filter — no explode, no shuffle); bin
-    assignment is curation.assign_packed_seq_ids — the ONE sharded
-    prefix-sum definition shared with pack_token_budget (a single global
-    ordered window would serialize the corpus through one task; the
-    overflow-by-one contract is documented there).
-
-    Returns per-sequence (seq_id, n_docs, text_tokens, media_spans,
-    total_cost).
-    """
-    from ..functions.textstats import PORTABLE_TOKEN_RE
-    from .curation import assign_packed_seq_ids, doc_hash_bucket
-    from .parse import MEDIA_KINDS
-    from .skew import ensure_min_parallelism
-
-    zero = F.lit(0).cast("long")
-    # NULL-spans guard (ADVICE r6): F.size(NULL array) is -1 and
-    # F.aggregate over NULL is NULL — a span-less upstream doc would
-    # otherwise contribute a NEGATIVE media count / NULL cost and corrupt
-    # its bin assignment; greatest/coalesce make it cost 0, matching the
-    # DuckDB twin's coalesce(..., 0).  Identical on every non-NULL array.
-    text_toks = F.coalesce(F.aggregate(
-        F.col("spans"), zero,
-        lambda acc, s: acc + F.when(
-            (~s["kind"].isin(*MEDIA_KINDS)) & s["text"].isNotNull(),
-            F.regexp_count(s["text"], F.lit(PORTABLE_TOKEN_RE))
-            .cast("long")).otherwise(zero)), zero)
-    n_media = F.greatest(zero, F.size(F.filter(
-        F.col("spans"), lambda s: s["kind"].isin(*MEDIA_KINDS))).cast("long"))
-    costed = (ensure_min_parallelism(docs)
-              .select("doc_id",
-                      doc_hash_bucket(F.col("doc_id"), n_shards).alias("shard"),
-                      text_toks.alias("text_tokens"),
-                      n_media.alias("n_media"))
-              .withColumn("cost", F.col("text_tokens")
-                          + F.lit(media_tokens) * F.col("n_media")))
-    packed = assign_packed_seq_ids(costed, budget, "cost")
-    return (packed.groupBy("seq_id")
-            .agg(F.count("*").cast("bigint").alias("n_docs"),
-                 F.sum("text_tokens").cast("bigint").alias("text_tokens"),
-                 F.sum("n_media").cast("bigint").alias("media_spans"),
-                 F.sum("cost").cast("bigint").alias("total_cost")))

@@ -4,15 +4,13 @@ Three tiers (SURVEY-mandated scale path):
   * brute-force cosine top-k — the exactness baseline; broadcast the (small)
     query set, score every row, per-query top-k via window.  Linear scan,
     embarrassingly parallel, no shuffle except the final per-query top-k.
-  * LSH-bucketed ANN (random signed projections) — at 100 TB the scan itself
-    is the bottleneck; hyperplane-LSH buckets shrink candidates to the probed
-    buckets only.  Deterministic projections (seeded hash) so results are
-    reproducible across runs/cluster sizes.
   * IVF (inverted-file) ANN — the coarse-quantizer shape real vector stores
     use: assign every vector to its nearest centroid ONCE (a pure projection
     against broadcast/inlined centroids — zero shuffle), probe the nprobe
     nearest cells per query, exact-score only those cells' members.  Candidate
     fraction ≈ nprobe / n_cells of the corpus.
+  * IVF-PQ ANN — IVF probing plus product-quantization codes, so each probed
+    candidate is scored from m small-int codes via per-query lookup tables.
 
 All dot products are native (zip_with + aggregate fold, sequential
 left-to-right in doubles — deterministic, and co-expressible in SQL).
@@ -68,74 +66,6 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                     F.round("cosine_sim", 6).alias("cosine_sim")))
 
 
-def _projection_vectors(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (seeded, engine-independent)."""
-    import random
-
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Signed-projection LSH bucket id: bit i = sign(vec · plane_i)."""
-    bits = []
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(_to_double(vec), F.array(*[F.lit(x) for x in p]), lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket.cast("int")
-
-
-def lsh_bucket_keys(vec: Column, tables: list[list[list[float]]]) -> Column:
-    """Multi-table LSH keys: one "t:bucket" string per hash table.
-
-    Standard (L tables × k planes) construction: a pair collides if it shares
-    ANY table's bucket — recall grows with L, candidate count stays ≪ n²."""
-    return F.array(*[
-        F.concat_ws(":", F.lit(str(t)), lsh_bucket(vec, planes).cast("string"))
-        for t, planes in enumerate(tables)
-    ])
-
-
-def _lsh_tables(dim: int, n_tables: int, n_planes: int, seed: int) -> list[list[list[float]]]:
-    return [_projection_vectors(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-
-
-def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-                 n_tables: int = 8, n_planes: int = 4, dim: int = 64, seed: int = 42,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 query_id_col: str = "query_id") -> DataFrame:
-    """Approximate top-k: score only rows sharing an LSH bucket with the query
-    in ≥1 of the L hash tables.
-
-    Scan shrinkage ≈ 2^n_planes / n_tables; recall tunable via (L, k) — more
-    tables = higher recall, more planes = fewer candidates per table.
-    """
-    tables = _lsh_tables(dim, n_tables, n_planes, seed)
-    from .skew import ensure_min_parallelism
-
-    e = (ensure_min_parallelism(embeddings)
-         .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("e_vec"))
-         .withColumn("bucket", F.explode(lsh_bucket_keys(F.col("e_vec"), tables))))
-    q = F.broadcast(
-        queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .withColumn("bucket", F.explode(lsh_bucket_keys(F.col("q_vec"), tables))))
-    cand = (e.join(q, "bucket")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "q_vec", "e_vec")
-            .dropDuplicates(["query_id", "neighbor_id"]))
-    scored = cand.withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("e_vec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
-
-
 def _cosine_to_lit(vec: Column, const: list[float]) -> Column:
     """cosine(vec, literal centroid) — same fold order as cosine()."""
     c = F.array(*[F.lit(float(x)) for x in const])
@@ -168,11 +98,11 @@ def ivf_centroids(embeddings: DataFrame, n_cells: int,
                   ) -> list[tuple[int, list[float]]]:
     """Deterministic coarse quantizer: the n_cells lowest-id vectors.
 
-    A tiny dimension-table collect (n_cells × dim floats — like the inlined
-    LSH hyperplanes, not a data collect).  Production would refine these with
-    k-means rounds (each round = one broadcast-assign projection + one
-    groupBy(cell) mean agg — the same primitives, omitted here so results stay
-    run-order-independent and SQL-re-derivable)."""
+    A tiny dimension-table collect (n_cells × dim floats, not a data
+    collect).  Production would refine these with k-means rounds (each
+    round = one broadcast-assign projection + one groupBy(cell) mean agg —
+    the same primitives, omitted here so results stay run-order-independent
+    and SQL-re-derivable)."""
     if n_cells < 1:
         raise ValueError(f"ivf_centroids needs n_cells >= 1, got {n_cells}")
     rows = (embeddings.where(F.col(id_col) < n_cells)
@@ -183,7 +113,6 @@ def ivf_centroids(embeddings: DataFrame, n_cells: int,
         # sparse/string ids or a corpus smaller than n_cells we'd silently
         # return too few (possibly zero) centroids and downstream cell
         # expressions would build empty arrays — fail loudly instead
-        # (mirrors simhash_near_pairs' explicit n_bands guard)
         raise ValueError(
             f"ivf_centroids seeds from the {n_cells} lowest integer ids and "
             f"found only {len(rows)} vectors with {id_col} < {n_cells}; the "
@@ -387,7 +316,7 @@ def pq_code_expr(vec: Column, codebook_j: list[list[float]], j: int, sub: int,
     Python constant and x[j]·c a plain fold on the RAW vector, so the norm
     fold is referenced once per codeword (O(dim) each) instead of inside a
     transform lambda, where Catalyst would inline and recompute it PER
-    ELEMENT (the O(dim²) nested-array trap winnow_fingerprints documents).
+    ELEMENT (the O(dim²) nested-array trap).
     The SQL twin orders by the same expression with the same fold shapes, so
     codes match bit-for-bit.
 
@@ -408,62 +337,6 @@ def pq_code_expr(vec: Column, codebook_j: list[list[float]], j: int, sub: int,
     return F.when(F.size(vec) == dim, code).otherwise(
         F.raise_error(F.concat(F.lit(f"pq encode: expected {dim}-dim vector, got "),
                                F.size(vec).cast("string"), F.lit(" dims"))))
-
-
-def pq_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-                m: int = 8, n_codes: int = 16,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "query_id") -> DataFrame:
-    """Product-quantization ANN (ADC — asymmetric distance computation): the
-    memory-bound tier of the vector stack (brute < LSH < IVF < PQ).
-
-    The corpus is ENCODED once — m small-int codes per vector (4 information
-    bits each at n_codes=16; byte-packed that is m bytes vs m·(dim/m)·4
-    bytes of floats, a 32× scan reduction here — the property that lets 10¹²
-    vectors fit a cluster's RAM) — by a pure projection against inlined
-    codebooks over unit-normalized vectors.  Scoring is true ADC: each query
-    precomputes an m × n_codes LOOKUP TABLE of sub-dots ONCE (a projection
-    on the tiny broadcast query side), and every (query × corpus) pair costs
-    m array lookups + adds — O(m), not O(dim); the reconstruction dot of
-    normalized vectors approximates their COSINE, the stack's common metric.
-    Deterministic end-to-end (sequential folds, argmin tiebreak → lowest
-    code) → exact DuckDB twin; recall is bounded by quantization error,
-    pinned by a recall test vs brute force.
-    """
-    from .skew import ensure_min_parallelism
-
-    cbs = pq_codebooks(embeddings, m, n_codes, id_col, vec_col)
-    sub = len(cbs[0][0])
-    dim = m * sub
-    e = ensure_min_parallelism(embeddings).select(
-        F.col(id_col).alias("neighbor_id"),
-        *[pq_code_expr(F.col(vec_col), cbs[j], j, sub, dim=dim).alias(f"code_{j}")
-          for j in range(m)])
-    # per-query LUTs: lut_j[c] = dot(normalized query subvec j, codebook_j[c]),
-    # computed once per query row before the join
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       _unit_normalize_small(F.col(vec_col)).alias("_qn"),
-                       F.size(vec_col).alias("_qd"))
-    for j in range(m):
-        qsub = F.slice(F.col("_qn"), j * sub + 1, sub)
-        q = q.withColumn(f"lut_{j}",
-                         F.array(*[_dot_to_lit(qsub, cv) for cv in cbs[j]]))
-    guard = F.when(F.col("_qd") == dim, F.lit(True)).otherwise(
-        F.raise_error(F.concat(F.lit(f"pq query: expected {dim}-dim vector, got "),
-                               F.col("_qd").cast("string"), F.lit(" dims"))))
-    q = F.broadcast(q.where(guard).drop("_qn", "_qd"))
-    score = None
-    for j in range(m):
-        term = F.element_at(F.col(f"lut_{j}"), F.col(f"code_{j}") + 1)
-        score = term if score is None else score + term
-    scored = (e.crossJoin(q)
-              .where(F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("pq_score", score))
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("pq_score", 6).alias("pq_score")))
 
 
 def ivfpq_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
@@ -586,23 +459,3 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.5,
     return out.withColumn("keep", F.col("vec_id") == F.col("cluster_id"))
 
 
-def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                             n_tables: int = 8, n_planes: int = 4, dim: int = 64,
-                             seed: int = 42, id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-table LSH + threshold."""
-    tables = _lsh_tables(dim, n_tables, n_planes, seed)
-    from .skew import ensure_min_parallelism
-
-    e = (ensure_min_parallelism(embeddings)
-         .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-         .withColumn("bucket", F.explode(lsh_bucket_keys(F.col("vec"), tables))))
-    a, b = e.alias("a"), e.alias("b")
-    return (a.join(b, "bucket")
-            .where(F.col("a.vid") < F.col("b.vid"))
-            .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"),
-                    F.col("a.vec").alias("va"), F.col("b.vec").alias("vb"))
-            .dropDuplicates(["vec_a", "vec_b"])
-            .withColumn("cosine_sim", cosine(F.col("va"), F.col("vb")))
-            .where(F.col("cosine_sim") >= threshold)
-            .select("vec_a", "vec_b", F.round("cosine_sim", 6).alias("cosine_sim")))

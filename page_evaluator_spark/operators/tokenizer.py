@@ -103,15 +103,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     return merges
 
 
-def bpe_merges_df(docs: DataFrame, n_merges: int = 8,
-                  text_col: str = "text") -> DataFrame:
-    """The learned merge table as a DataFrame: (rank, pair, merged, freq)."""
-    spark = docs.sparkSession
-    rows = bpe_train(docs, n_merges, text_col)
-    return spark.createDataFrame(
-        rows, "rank: int, pair: string, merged: string, freq: long")
-
-
 def bpe_encode_counts(docs: DataFrame, n_merges: int = 8,
                       text_col: str = "text", id_col: str = "doc_id"
                       ) -> DataFrame:

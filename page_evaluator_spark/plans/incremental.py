@@ -95,7 +95,25 @@ class IncrementalRunner:
 
     # --- resume logic ----------------------------------------------------
     def committed_parts(self) -> set[int]:
-        return {r["part_id"] for r in self.lineage().select("part_id").distinct().collect()}
+        """Part ids the lineage records, read in one job.
+
+        Raises ValueError when the lineage was committed under a different
+        ``n_parts``: part ids mean different doc sets under another part
+        count, so resuming would duplicate some documents and never score
+        others.  Lineage rows without an ``n_parts`` metric (written before
+        it was recorded) are not checked."""
+        rows = (self.lineage()
+                .select("part_id", F.col("metrics")["n_parts"].alias("n_parts"))
+                .distinct().collect())
+        recorded = {int(r["n_parts"]) for r in rows if r["n_parts"] is not None}
+        if recorded - {self.n_parts}:
+            raise ValueError(
+                f"{self.out_dir} was committed with n_parts="
+                f"{'/'.join(map(str, sorted(recorded)))}; resuming it with "
+                f"n_parts={self.n_parts} would assign documents to different "
+                f"parts. Resume with the recorded n_parts or use a new output "
+                f"directory.")
+        return {r["part_id"] for r in rows}
 
     def pending_parts(self) -> list[int]:
         committed = self.committed_parts()
@@ -108,10 +126,11 @@ class IncrementalRunner:
         stand-in for Iceberg bucket(n_parts, doc_id)).
 
         Idempotent: reused on resume when the staged write completed
-        (_SUCCESS present) AND it was staged with the SAME n_parts — a resume
-        under a different --n-parts re-stages, since the old _part layout
-        would assign docs to the wrong parts.  (Resume semantics assume the
-        same logical input across invocations, as lineage does.)
+        (_SUCCESS present) AND it was staged with the SAME n_parts — a run
+        under a different --n-parts (possible only while no part is
+        committed, see committed_parts) re-stages, since the old _part
+        layout would assign docs to the wrong parts.  (Resume semantics
+        assume the same logical input across invocations, as lineage does.)
         """
         import json
 
@@ -132,13 +151,13 @@ class IncrementalRunner:
         return self.spark.read.parquet(staged)
 
     # --- execution ---------------------------------------------------------
-    def run(self, docs: DataFrame, run_id: str, max_parts: int | None = None,
-            stage_input: bool | None = None) -> list[int]:
+    def run(self, docs: DataFrame, run_id: str,
+            max_parts: int | None = None) -> list[int]:
         """Process pending parts (optionally capped — simulates interruption).
 
-        stage_input (default: auto — stage when >1 part is pending and the
-        output root is a path) controls the write-once/prune-per-part staging;
-        on Iceberg the input table's own bucket(doc_id) layout replaces it.
+        The input is staged (written once, pruned per part) when more than
+        one part is pending and the output root is a path; on Iceberg the
+        input table's own bucket(doc_id) layout replaces it.
         Returns the list of parts committed by THIS invocation; their counts
         are in ``part_counts``.
         """
@@ -147,9 +166,7 @@ class IncrementalRunner:
         pending = self.pending_parts()
         if max_parts is not None:
             pending = pending[:max_parts]
-        if stage_input is None:
-            stage_input = len(pending) > 1 and "/" in self.out_dir
-        if stage_input:
+        if len(pending) > 1 and "/" in self.out_dir:
             docs_p = self._stage_docs(docs)
         else:
             docs_p = docs.withColumn("_part", part_id_expr(self.n_parts))
@@ -238,6 +255,7 @@ class IncrementalRunner:
         """The part's one lineage row, typed as LINEAGE_SCHEMA, built natively
         (no Python-side rows to parallelize and re-schema)."""
         metrics = {"pipeline": "evaluate_documents",
+                   "n_parts": str(self.n_parts),
                    "n_spans": str(counts["n_spans"]),
                    "n_quarantined": str(counts["n_quarantined"])}
         return self.spark.range(1, numPartitions=1).select(

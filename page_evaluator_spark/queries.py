@@ -687,22 +687,6 @@ GROUP BY word ORDER BY cnt DESC, word LIMIT 20
 # Text analysis / curation (documents table)
 # ---------------------------------------------------------------------------
 
-def doc_token_counts(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id",
-                    TS.ws_token_count(F.col("text")).alias("ws_tokens"),
-                    TS.regex_token_count(F.col("text")).alias("regex_tokens"))
-
-
-_TOKCOUNT_SQL = r"""
-SELECT doc_id,
-       CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                 ELSE len(string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')) END AS INT) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N} \t\n\x0B\f\r]')) AS INT)
-         AS regex_tokens
-FROM documents
-"""
-
 
 def doc_quality(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
@@ -1101,7 +1085,6 @@ mh AS (
 )"""
 
 
-
 def dedup_minhash_pairs(spark, sf_dir):
     return (DD.minhash_lsh_candidates(load(spark, sf_dir, "documents"))
             .orderBy("doc_a", "doc_b"))
@@ -1228,18 +1211,6 @@ ORDER BY m.doc_id LIMIT {limit}
 """
 
 
-def bpe_merges(spark, sf_dir):
-    """Tokenizer training (r4): the first 8 BPE merges learned from the
-    corpus word-frequency table — an iterative Spark job whose per-round
-    state is vocabulary-sized, never the corpus.  Deterministic (integer
-    counts, lexicographic ties, both engines' replace() is leftmost
-    non-overlapping) → the twin re-derives every round as chained CTEs."""
-    from .operators.tokenizer import bpe_merges_df
-
-    return bpe_merges_df(load(spark, sf_dir, "documents"), n_merges=8) \
-        .orderBy("rank")
-
-
 def _bpe_chain(n_merges: int) -> str:
     """The training CTE chain of operators/tokenizer.py::bpe_train: one
     (pairs → best → merged-vocab) triple per round.  vocab{r}/best{r} are
@@ -1273,21 +1244,11 @@ WITH toks AS (
 ){''.join(rounds)}"""
 
 
-def _bpe_sql(n_merges: int = 8) -> str:
-    """Generated twin of operators/tokenizer.py::bpe_train."""
-    finals = "\nUNION ALL\n".join(
-        f"SELECT {r - 1} AS rank, pair, replace(pair, ' ', '') AS merged, "
-        f"CAST(total AS BIGINT) AS freq FROM best{r}" for r in range(1, n_merges + 1))
-    return _bpe_chain(n_merges) + f"""
-SELECT CAST(rank AS INT) AS rank, pair, merged, freq FROM ({finals})
-ORDER BY rank
-"""
-
-
 def bpe_token_counts(spark, sf_dir):
     """Tokenizer encode pass (r5): the corpus-trained merge table applied
     back to every document — per-doc word count, base symbol count (chars)
-    and post-merge symbol count.  Train = the bpe_merges iterative job;
+    and post-merge symbol count.  Train = operators/tokenizer.py::bpe_train,
+    an iterative job;
     encode = K chained delimiter-anchored replaces, a pure projection (see
     operators/tokenizer.py::bpe_encode_counts)."""
     from .operators.tokenizer import bpe_encode_counts
@@ -1543,64 +1504,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-def simhash_near_pairs(spark, sf_dir):
-    """SimHash near-dup pairs — md5-derived 2×32-bit signature, so the FULL
-    derivation (hash → per-bit vote → sign → bands → join → Hamming) has an
-    exact DuckDB twin."""
-    return (DD.simhash_near_pairs(load(spark, sf_dir, "documents"), max_hamming=16)
-            .orderBy("doc_a", "doc_b"))
-
-
-def _simhash_sql(max_hamming: int = 16) -> str:
-    """Generated twin of operators/dedup.py simhash_near_pairs: 64 per-bit
-    vote sums + signature reassembly, inlined (no loops in SQL)."""
-    hi_bits = ",\n         ".join(
-        f"sum(CASE WHEN (hi >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS hi_{b}"
-        for b in range(32))
-    lo_bits = ",\n         ".join(
-        f"sum(CASE WHEN (lo >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS lo_{b}"
-        for b in range(32))
-    sig_hi = " + ".join(
-        f"CASE WHEN hi_{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(32))
-    sig_lo = " + ".join(
-        f"CASE WHEN lo_{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(32))
-    return rf"""
-WITH norm AS (
-  SELECT doc_id, lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS t FROM documents
-), toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(t, '[\p{{L}}]+|[\p{{N}}]+|[^\p{{L}}\p{{N}} \t\n\x0B\f\r]')) AS tok
-  FROM norm
-), hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS hi,
-         ('0x' || substr(md5(tok), 9, 8))::BIGINT AS lo
-  FROM toks
-), bits AS (
-  SELECT doc_id,
-         {hi_bits},
-         {lo_bits}
-  FROM hashed GROUP BY doc_id
-), sigs AS (
-  SELECT doc_id, ({sig_hi}) AS sig_hi, ({sig_lo}) AS sig_lo FROM bits
-), banded AS (
-  SELECT doc_id, sig_hi, sig_lo, unnest([
-    '0:' || CAST(sig_lo & 65535 AS VARCHAR),
-    '1:' || CAST((sig_lo >> 16) & 65535 AS VARCHAR),
-    '2:' || CAST(sig_hi & 65535 AS VARCHAR),
-    '3:' || CAST((sig_hi >> 16) & 65535 AS VARCHAR)]) AS band_key
-  FROM sigs
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.sig_hi AS ha, a.sig_lo AS la, b.sig_hi AS hb, b.sig_lo AS lb
-  FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) AS INT) AS hamming
-FROM pairs
-WHERE bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) <= {max_hamming}
-ORDER BY doc_a, doc_b
-"""
-
-
 # ---------------------------------------------------------------------------
 # Corpus curation: dup clusters, sampling, packing, tf-idf
 # ---------------------------------------------------------------------------
@@ -1626,29 +1529,6 @@ _CLUSTERS_SQL = ("WITH RECURSIVE " + _SHINGLE_CTE[len("WITH "):]
   SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
 )
 SELECT s AS doc_id, least(s, min(d)) AS cluster_id FROM reach GROUP BY s ORDER BY doc_id
-"""
-
-_SAMPLE_RATES = {"en": 60, "de": 30}
-_SAMPLE_DEFAULT = 10
-
-
-def stratified_sample(spark, sf_dir):
-    """Deterministic hash-thresholded stratified sampling (md5 bucket, not
-    rand() — reproducible across runs/retries/cluster sizes)."""
-    from .operators.curation import stratified_sample as _ss
-
-    d = load(spark, sf_dir, "documents")
-    return (_ss(d, "lang", _SAMPLE_RATES, default_pct=_SAMPLE_DEFAULT)
-            .select("doc_id", "lang").orderBy("doc_id"))
-
-
-def _sample_sql() -> str:
-    cases = " ".join(f"WHEN lang = '{k}' THEN {v}" for k, v in sorted(_SAMPLE_RATES.items()))
-    return f"""
-SELECT doc_id, lang FROM documents
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
-      < (CASE {cases} ELSE {_SAMPLE_DEFAULT} END)
-ORDER BY doc_id
 """
 
 
@@ -1849,47 +1729,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY lang
                                    ORDER BY score DESC, term) AS rank
       FROM scored)
 WHERE rank <= 5 ORDER BY lang, rank
-"""
-
-
-def doc_winnow_fp(spark, sf_dir):
-    """Winnowing (rolling-hash) fingerprints — the MOSS scheme, native:
-    k-gram md5-half hashes → w-window minima → sorted distinct selection.
-    Projected as (count, digest) for the harness; the selection itself backs
-    shared-run detection at scale."""
-    from .operators.dedup import winnow_fingerprints
-
-    d = load(spark, sf_dir, "documents")
-    fps = winnow_fingerprints(d, k=8, w=4)
-    return fps.select(
-        "doc_id",
-        F.size("fps").alias("n_fps"),
-        F.md5(F.array_join(F.transform("fps", lambda x: x.cast("string")), ","))
-        .alias("fp_digest"))
-
-
-_WINNOW_SQL = r"""
-WITH norm AS (
-  SELECT doc_id, lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS t FROM documents
-), g AS (
-  SELECT doc_id, t, greatest(length(t) - 7, 0) AS n_grams FROM norm
-), h AS (
-  SELECT doc_id, n_grams, greatest(n_grams - 3, 0) AS n_wins,
-         [('0x' || substr(md5(substr(t, i, 8)), 1, 8))::BIGINT
-          FOR i IN range(1, greatest(n_grams, 1) + 1)] AS hashes
-  FROM g
-), sel AS (
-  SELECT doc_id,
-         CASE WHEN n_grams >= 4 THEN
-                list_sort(list_distinct([list_min(hashes[j:j+3])
-                                         FOR j IN range(1, n_wins + 1)]))
-              WHEN n_grams > 0 THEN [list_min(hashes)]
-              ELSE CAST([] AS BIGINT[]) END AS s
-  FROM h
-)
-SELECT doc_id, CAST(len(s) AS INT) AS n_fps,
-       md5(array_to_string([CAST(x AS VARCHAR) FOR x IN s], ',')) AS fp_digest
-FROM sel
 """
 
 
@@ -2599,22 +2438,6 @@ WHERE rank <= 10 ORDER BY query_id, rank
 """
 
 
-def lsh_ann_topk(spark, sf_dir):
-    """LSH-bucketed ANN (scale path).  Approximate vs brute force, but fully
-    DETERMINISTIC (seeded hyperplanes, sequential double folds), so the whole
-    construction — buckets, candidate join, cosine, rank — has an exact DuckDB
-    twin with the plane constants inlined."""
-    e = load(spark, sf_dir, "embeddings")
-    return (SIM.lsh_ann_topk(e, _queries_df(spark, sf_dir), k=10)
-            .orderBy("query_id", "rank"))
-
-
-def embedding_near_dups(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via LSH buckets (same exact twin)."""
-    return (SIM.embedding_near_dup_pairs(load(spark, sf_dir, "embeddings"), threshold=0.5)
-            .orderBy("vec_a", "vec_b"))
-
-
 def ivf_ann_topk(spark, sf_dir):
     """IVF (inverted-file) ANN — the coarse-quantizer scale path: zero-shuffle
     nearest-centroid assignment, probe 4 of 16 cells per query, exact cosine
@@ -2689,16 +2512,6 @@ WHERE rank <= 10 ORDER BY query_id, rank
 """
 
 
-def pq_ann_topk(spark, sf_dir):
-    """Product-quantization ANN (r4): corpus encoded to m=8 codes by a pure
-    projection (32× smaller scan at 10¹² vectors), queries scored by the
-    reconstruction dot (ADC).  Deterministic → the twin re-derives codebooks,
-    encoding, and scores exactly."""
-    e = load(spark, sf_dir, "embeddings")
-    return (SIM.pq_ann_topk(e, _queries_df(spark, sf_dir), k=10, m=8, n_codes=16)
-            .orderBy("query_id", "rank"))
-
-
 def _pq_ctes(m: int, sub: int) -> dict:
     """Shared PQ SQL fragments (codebooks, per-subspace argmin assignment,
     encoding joins) — ONE definition consumed by both _pq_ann_sql and
@@ -2734,39 +2547,6 @@ def _pq_ctes(m: int, sub: int) -> dict:
                              for j in range(m)),
         "qsl": sl,
     }
-
-
-def _pq_ann_sql(k: int = 10, m: int = 8, n_codes: int = 16, dim: int | None = None) -> str:
-    """Generated twin of similarity.pq_ann_topk: per-subspace codebooks from
-    the lowest-id seeds, argmin encoding (shared _pq_ctes fragments), ADC
-    reconstruction-dot scores."""
-    dim = dim or EMBEDDING_DIM
-    sub = dim // m
-    c = _pq_ctes(m, sub)
-    score = " + ".join(_dot_sql(c["qsl"]("h.qv", j), f"c{j}.cv") for j in range(m))
-    return f"""
-WITH v AS (
-  SELECT vec_id, vec0,
-         list_transform(vec0, x -> x / sqrt({_dot_sql('vec0', 'vec0')})) AS vecn
-  FROM (SELECT vec_id, embedding::DOUBLE[] AS vec0 FROM embeddings)
-), seeds AS (
-  SELECT CAST(vec_id AS INT) AS code, vecn FROM v WHERE vec_id < {n_codes}
-),
-{c["cbs"]},
-{c["assigns"]},
-enc AS (SELECT a0.vec_id, {c["code_cols"]} FROM a0 {c["enc_joins"]}),
-held AS (SELECT vec_id AS query_id, vecn AS qv FROM v WHERE vec_id < 5),
-scored AS (
-  SELECT h.query_id, e.vec_id AS neighbor_id, {score} AS s
-  FROM enc e CROSS JOIN held h {c["cb_joins"]}
-  WHERE e.vec_id <> h.query_id
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, round(s, 6) AS pq_score
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY s DESC, neighbor_id) AS rank
-      FROM scored)
-WHERE rank <= {k} ORDER BY query_id, rank
-"""
 
 
 def ivfpq_ann_topk(spark, sf_dir):
@@ -2896,28 +2676,6 @@ ORDER BY query_id
 """
 
 
-def _lsh_fold(vec: str, consts: list[float]) -> str:
-    """DuckDB expression for the SAME left-to-right double fold Spark's
-    aggregate() runs: list_reduce starts from the first product, which is
-    IEEE-identical to Spark's 0.0 + p1 seed."""
-    lits = ", ".join(repr(c) for c in consts)  # repr round-trips doubles
-    return (f"list_reduce(list_transform(list_zip({vec}, [{lits}]::DOUBLE[]),"
-            f" x -> x[1] * x[2]), (acc, x) -> acc + x)")
-
-
-def _lsh_bucket_array(vec: str) -> str:
-    """unnest-able array of 't:bucket' keys matching similarity.lsh_bucket_keys
-    (8 tables x 4 planes, seed 42, dim 64 — the query defaults)."""
-    tables = SIM._lsh_tables(dim=64, n_tables=8, n_planes=4, seed=42)
-    keys = []
-    for t, planes in enumerate(tables):
-        bits = " + ".join(
-            f"CASE WHEN {_lsh_fold(vec, p)} >= 0 THEN {1 << i} ELSE 0 END"
-            for i, p in enumerate(planes))
-        keys.append(f"'{t}:' || CAST(({bits}) AS VARCHAR)")
-    return "[" + ", ".join(keys) + "]"
-
-
 def _cosine_sql(a: str, b: str) -> str:
     return (f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))")
 
@@ -2925,28 +2683,6 @@ def _cosine_sql(a: str, b: str) -> str:
 def _dot_sql(a: str, b: str) -> str:
     return (f"list_reduce(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]),"
             f" (acc, x) -> acc + x)")
-
-
-def _lsh_ann_sql() -> str:
-    return f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-), buckets AS (
-  SELECT vec_id, vec, unnest({_lsh_bucket_array('vec')}) AS bucket FROM v
-), cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         q.vec AS qv, e.vec AS ev
-  FROM buckets e JOIN buckets q ON e.bucket = q.bucket
-  WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
-), scored AS (
-  SELECT query_id, neighbor_id, {_cosine_sql('qv', 'ev')} AS cos FROM cand
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, round(cos, 6) AS cosine_sim
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-WHERE rank <= 10 ORDER BY query_id, rank
-"""
 
 
 def semantic_dedup(spark, sf_dir):
@@ -2987,24 +2723,6 @@ SELECT e.vec_id, coalesce(l.cluster_id, e.vec_id) AS cluster_id,
        coalesce(l.cluster_id, e.vec_id) = e.vec_id AS keep
 FROM embeddings e LEFT JOIN labels l USING (vec_id)
 ORDER BY vec_id
-"""
-
-
-def _near_dups_sql(threshold: float = 0.5) -> str:
-    return f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-), buckets AS (
-  SELECT vec_id, vec, unnest({_lsh_bucket_array('vec')}) AS bucket FROM v
-), cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.vec AS va, b.vec AS vb
-  FROM buckets a JOIN buckets b ON a.bucket = b.bucket
-  WHERE a.vec_id < b.vec_id
-), scored AS (
-  SELECT vec_a, vec_b, {_cosine_sql('va', 'vb')} AS cos FROM cand
-)
-SELECT vec_a, vec_b, round(cos, 6) AS cosine_sim
-FROM scored WHERE cos >= {threshold} ORDER BY vec_a, vec_b
 """
 
 
@@ -3101,33 +2819,6 @@ def interleaved_datasheet(spark, sf_dir):
                     "captioned_media", cov.alias("caption_coverage")))
 
 
-def media_content_dedup(spark, sf_dir):
-    """Exact media-blob dedup over the interleaved corpus (r6): group media
-    spans by content fingerprint, count references and distinct documents,
-    keep the canonical first occurrence, and account the storage reclaimed.
-    See operators/media.py::media_content_dedup for the fingerprint
-    stand-in doctrine and the 100 TB shape (one fixed-width hash groupBy).
-    Oracle: full SQL re-derivation in DuckDB over the spans_input golden
-    (an INPUT dump, not a golden output)."""
-    from .operators.media import media_content_dedup as op
-
-    return op(_corpus_df(spark)).orderBy(F.desc("n_refs"), "content_sha")
-
-
-def interleaved_pack(spark, sf_dir):
-    """Multimodal sequence packing (r6): pack interleaved text+media docs
-    into ~256-token training sequences where media spans cost a fixed
-    64-token vision-encoder patch budget.  See operators/media.py::
-    pack_interleaved_sequences for the cost model and the sharded
-    prefix-sum shape.  Oracle: full SQL re-derivation in DuckDB over the
-    spans_input golden."""
-    from .operators.media import pack_interleaved_sequences
-
-    return (pack_interleaved_sequences(_corpus_df(spark), budget=256,
-                                       media_tokens=64, n_shards=16)
-            .orderBy("seq_id"))
-
-
 def ocr_page_scores(spark, sf_dir):
     from .plans.pipeline import evaluate_documents
 
@@ -3146,12 +2837,11 @@ def ocr_quarantine(spark, sf_dir):
     return evaluate_documents(_corpus_df(spark)).quarantine.orderBy("doc_id", "span_ord")
 
 
-# The synthetic HTML wrapper shared by html_main_content / html_block_scores
-# AND both DuckDB twins.  Defined ONCE (ADVICE r5): the SQL literals are
-# derived from these via _sqlq quote-escaping, so the Spark query and its
-# twin cannot drift apart silently.
+# The synthetic HTML wrapper shared by html_block_scores AND its DuckDB
+# twin.  Defined ONCE (ADVICE r5): the SQL literals are derived from these
+# via _sqlq quote-escaping, so the Spark query and its twin cannot drift
+# apart silently.
 _HTML_NAV = "<html><body><div><a href='/'>Home</a> <a href='/a'>About</a></div>"
-_HTML_SCRIPT = "<script>var boiler = 1;</script>"
 _HTML_MID = "</p><p>"
 _HTML_FOOT = "</p><div><a href='/t'>Terms</a></div></body></html>"
 
@@ -3159,79 +2849,6 @@ _HTML_FOOT = "</p><div><a href='/t'>Terms</a></div></body></html>"
 def _sqlq(s: str) -> str:
     """Escape a Python string for embedding in a single-quoted SQL literal."""
     return s.replace("'", "''")
-
-
-def html_main_content(spark, sf_dir):
-    """HTML boilerplate strip (native expression twin): wrap each document in
-    markup with link-dense nav/footer boilerplate, extract main content, and
-    verify only the real text survives.  RE2 DOES support the lazy/dotall
-    patterns (no backrefs/lookarounds needed), so the whole rule has an exact
-    DuckDB twin (_html_main_sql) — verified block-for-block."""
-    from .functions.html import extract_main_text_expr
-
-    d = load(spark, sf_dir, "documents")
-    html = F.concat(
-        F.lit(_HTML_NAV + _HTML_SCRIPT + "<p>"),
-        F.col("text"),
-        F.lit(_HTML_FOOT))
-    main = extract_main_text_expr(html)
-    return d.select(
-        "doc_id",
-        F.length(main).alias("main_len"),
-        F.regexp_count(main, F.lit(TS.PORTABLE_TOKEN_RE)).alias("n_tokens"),
-        (~main.contains("Home") & ~main.contains("Terms") & ~main.contains("boiler"))
-        .alias("boilerplate_free"))
-
-
-def _html_main_sql() -> str:
-    """DuckDB twin of the frozen HTML rule (functions/html.py) applied to the
-    same synthetic wrapper: drop script/style/comments → split on block-close
-    tags/<br> → per block strip tags, unescape entities, collapse whitespace →
-    keep len>=25 & link density <=0.33 → join with newlines.
-
-    The coalesce() around the anchor concat matters: inside a DuckDB list
-    comprehension, array_to_string of a no-match extract yields NULL, which
-    would silently drop link-free blocks.
-    """
-    from .functions.html import _ENTITIES
-
-    pre = _sqlq(_HTML_NAV + _HTML_SCRIPT + "<p>")
-    post = _sqlq(_HTML_FOOT)
-    drop = r"(?is)<script\b.*?</script\s*>|<style\b.*?</style\s*>|<!--.*?-->"
-    sep = (r"(?i)<br\s*/?>|</(?:p|div|li|h1|h2|h3|h4|h5|h6|tr|td|section|article|header|"
-           r"footer|blockquote|table|ul|ol)\s*>")
-    anchors = (r"coalesce(array_to_string(regexp_extract_all(x,"
-               r" '(?is)<a\b[^>]*>(.*?)</a\s*>', 1), ''), '')")
-
-    def clean(col: str) -> str:
-        s = (f"trim(regexp_replace(regexp_replace({col}, '(?s)<[^>]*>', '', 'g'),"
-             f" '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))")
-        for ent, ch in _ENTITIES:
-            ch_sql = ch.replace("'", "''")
-            s = f"replace({s}, '{ent}', '{ch_sql}')"
-        return s
-
-    return f"""
-WITH blocks AS (
-  SELECT doc_id, string_split_regex(
-           regexp_replace('{pre}' || text || '{post}', '{drop}', '', 'g'), '{sep}') AS blks
-  FROM documents
-), scored AS (
-  SELECT doc_id, [{{'t': {clean('x')}, 'l': {clean(anchors)}}} FOR x IN blks] AS sc FROM blocks
-), kept AS (
-  SELECT doc_id, list_transform(list_filter(sc,
-         s -> length(s.t) >= 25 AND CAST(length(s.l) AS DOUBLE) <= 0.33 * CAST(length(s.t) AS DOUBLE)),
-         s -> s.t) AS ks FROM scored
-), mains AS (
-  SELECT doc_id, CASE WHEN len(ks) > 0 THEN array_to_string(ks, chr(10)) || chr(10) ELSE '' END AS main
-  FROM kept
-)
-SELECT doc_id, CAST(length(main) AS INT) AS main_len,
-       CAST(len(regexp_extract_all(main, '{TS.PORTABLE_TOKEN_RE}')) AS INT) AS n_tokens,
-       (NOT contains(main, 'Home') AND NOT contains(main, 'Terms')
-        AND NOT contains(main, 'boiler')) AS boilerplate_free
-FROM mains
-"""
 
 
 def html_block_scores(spark, sf_dir):
@@ -3330,25 +2947,6 @@ def ocr_worst_pages(spark, sf_dir):
             .select("doc_id", "token_count", "quality_score", "correctable_score"))
 
 
-def media_features(spark, sf_dir):
-    """Media feature extraction (Arrow plumbing + deterministic sha256 stub).
-
-    The harness projection renders the float feature vector as a %.6f CSV
-    string — pandas canonicalization cannot sort list cells (r1's only red
-    row), and the fixed-point string is engine-exact, so the DuckDB twin can
-    RE-DERIVE every column from the golden media-span input via sha256.
-    """
-    from .operators.media import extract_media_features, media_spans
-
-    df = extract_media_features(media_spans(_corpus_df(spark)))
-    feature_csv = F.array_join(
-        F.transform("feature", lambda x: F.format_string("%.6f", x.cast("double"))), ",")
-    return (df.select("doc_id", "media_ref", "media_kind", "byte_len", "content_sha",
-                      "width", "height", "n_frames",
-                      feature_csv.alias("feature_csv"), "decode_error")
-            .orderBy("doc_id", "media_ref"))
-
-
 # derived from the package location so the golden oracles work from any
 # checkout path (fixtures/ sits beside the package at the repo root)
 from pathlib import Path as _Path  # noqa: E402
@@ -3366,17 +2964,6 @@ def _synthetic_videos(spark):
         F.lit("video").alias("kind"))
 
 
-def media_resized(spark, sf_dir):
-    """Resize kernel over every media span (Arrow mapInPandas plumbing; pixel
-    work is the documented deterministic stub — operators/media.py).  The
-    DuckDB twin RE-DERIVES resized_sha from the golden media-span input via
-    sha256, independently of the Python kernel."""
-    from .operators.media import media_spans, resize_media
-
-    return (resize_media(media_spans(_corpus_df(spark)), width=224, height=224)
-            .orderBy("doc_id", "media_ref"))
-
-
 def media_frame_sample(spark, sf_dir):
     """Frame sampling with per-frame row FAN-OUT (one input video → ~n/30
     output rows), over corpus media spans plus deterministic synthetic videos.
@@ -3387,17 +2974,6 @@ def media_frame_sample(spark, sf_dir):
     rows = media_spans(_corpus_df(spark)).unionByName(_synthetic_videos(spark))
     return (sample_frames(rows, every_n=30)
             .orderBy("doc_id", "media_ref", "frame_idx"))
-
-
-def _media_resized_sql() -> str:
-    return f"""
-SELECT doc_id, media_ref, kind AS media_kind,
-       CAST(224 AS INT) AS out_width, CAST(224 AS INT) AS out_height,
-       sha256(coalesce(media_ref, '') || '|224x224') AS resized_sha,
-       CAST(NULL AS VARCHAR) AS decode_error
-FROM '{_GOLDEN_DIR}/media_spans.parquet'
-ORDER BY doc_id, media_ref
-"""
 
 
 def _media_frames_sql() -> str:
@@ -3422,36 +2998,6 @@ FROM f ORDER BY doc_id, media_ref, frame_idx
 """
 
 
-def _media_sql() -> str:
-    """Re-derivation twin: DuckDB computes the SAME deterministic sha256-based
-    features from the golden media-span INPUT (fixtures/make_goldens.py) that
-    the Spark kernel computes via hashlib — independent implementations of the
-    stub spec (operators/media.py _fake_decode)."""
-    bytes_ = ",\n       ".join(
-        f"('0x' || substr(hx, {2 * i + 1}, 2))::INT AS b{i}" for i in range(8))
-    feats = ", ".join(f"printf('%.6f', round(b{i} / 255.0, 6))" for i in range(8))
-    return f"""
-WITH m AS (
-  SELECT doc_id, media_ref, kind FROM '{_GOLDEN_DIR}/media_spans.parquet'
-), h AS (
-  SELECT doc_id, media_ref, kind, sha256(coalesce(media_ref, '')) AS hx FROM m
-), b AS (
-  SELECT doc_id, media_ref, kind, hx,
-       {bytes_}
-  FROM h
-)
-SELECT doc_id, media_ref, kind AS media_kind,
-       CAST(length(coalesce(media_ref, '')) AS BIGINT) AS byte_len,
-       CAST(('0x' || substr(hx, 1, 6))::BIGINT AS INT) AS content_sha,
-       CASE WHEN kind IN ('image', 'figure') THEN CAST(64 + b0 % 192 AS INT) END AS width,
-       CASE WHEN kind IN ('image', 'figure') THEN CAST(64 + b1 % 192 AS INT) END AS height,
-       CASE WHEN kind = 'video' THEN CAST(1 + b2 % 300 AS INT) END AS n_frames,
-       array_to_string([{feats}], ',') AS feature_csv,
-       CAST(NULL AS VARCHAR) AS decode_error
-FROM b ORDER BY doc_id, media_ref
-"""
-
-
 # Golden-oracle twins for the OCR pipeline itself: expectations derived from
 # the pure-Python oracle (tests/oracle.py) over the SAME pinned corpus
 # (gen_corpus(100, seed=42)) by fixtures/make_goldens.py — sf-independent.
@@ -3462,69 +3008,6 @@ _OCR_QUAR_SQL = f"SELECT * FROM '{_GOLDEN_DIR}/ocr_quarantine.parquet'"
 _OCR_WORST_SQL = f"SELECT * FROM '{_GOLDEN_DIR}/ocr_worst_pages.parquet'"
 _OCR_CAPTIONS_SQL = f"SELECT * FROM '{_GOLDEN_DIR}/media_captions.parquet'"
 _DATASHEET_SQL = f"SELECT * FROM '{_GOLDEN_DIR}/interleaved_datasheet.parquet'"
-
-# r6 multimodal twins: FULL SQL re-derivations over the spans_input golden
-# (the raw exploded corpus, an INPUT dump written by make_goldens.py with
-# explode_outer semantics) — independent computations, not golden outputs.
-# row_number over (doc_id, media_ref) reproduces Spark's min-struct
-# canonical pick (field-wise lexicographic).  The token regex spells
-# Java's \s class [ \t\n\x0B\f\r] explicitly (RE2 \s omits \x0B — r5
-# doctrine); shard/seq arithmetic mirrors doc_hash_bucket and the
-# pack window exactly (floor() then cast — CAST of DOUBLE rounds in
-# DuckDB but truncates in Spark).
-_MEDIA_DEDUP_SQL = f"""
-WITH f AS (
-  SELECT doc_id, media_ref,
-         sha256(regexp_extract(media_ref, '([^/]+)$', 1)) AS content_sha,
-         CAST(length(regexp_extract(media_ref, '([^/]+)$', 1)) AS BIGINT) AS byte_len
-  FROM '{_GOLDEN_DIR}/spans_input.parquet'
-  WHERE kind IN ('image', 'table', 'figure')
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY content_sha
-                               ORDER BY doc_id, media_ref) AS rn
-  FROM f
-)
-SELECT content_sha,
-       CAST(count(*) AS BIGINT) AS n_refs,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       max(CASE WHEN rn = 1 THEN doc_id END) AS canonical_doc,
-       max(CASE WHEN rn = 1 THEN media_ref END) AS canonical_ref,
-       max(byte_len) AS byte_len,
-       CAST((count(*) - 1) * max(byte_len) AS BIGINT) AS bytes_saved
-FROM r GROUP BY content_sha
-"""
-
-_INTERLEAVED_PACK_SQL = rf"""
-WITH cost AS (
-  SELECT doc_id,
-         CAST(coalesce(sum(CASE WHEN kind NOT IN ('image','table','figure')
-                                 AND text IS NOT NULL
-               THEN len(regexp_extract_all(text,
-                    '[\p{{L}}]+|[\p{{N}}]+|[^\p{{L}}\p{{N}} \t\n\x0B\f\r]')) END), 0)
-              AS BIGINT) AS text_tokens,
-         CAST(coalesce(sum(CASE WHEN kind IN ('image','table','figure')
-                           THEN 1 END), 0) AS BIGINT) AS n_media
-  FROM '{_GOLDEN_DIR}/spans_input.parquet' GROUP BY doc_id
-), packed AS (
-  SELECT doc_id, text_tokens, n_media,
-         text_tokens + 64 * n_media AS cost,
-         ('0x' || substr(md5(doc_id), 1, 8))::BIGINT % 16 AS shard
-  FROM cost
-), seq AS (
-  SELECT text_tokens, n_media, cost,
-         shard * 1099511627776
-         + CAST(floor((sum(cost) OVER (PARTITION BY shard ORDER BY doc_id
-                        ROWS UNBOUNDED PRECEDING) - cost) / 256.0) AS BIGINT)
-           AS seq_id
-  FROM packed
-)
-SELECT seq_id,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(text_tokens) AS BIGINT) AS text_tokens,
-       CAST(sum(n_media) AS BIGINT) AS media_spans,
-       CAST(sum(cost) AS BIGINT) AS total_cost
-FROM seq GROUP BY seq_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -3649,50 +3132,25 @@ EXTRA_LAST_GREEN: dict[str, str] = {
     "events_session_window": "r3",   # sibling in window: events_sessionize
     "events_hopping_window": "r3",   # sibling in window: events_sessionize
     "cube_events_dow": "r3",         # sibling in window: grouping_sets_orders
-    "media_resized": "r3",           # siblings: media_features/media_frame_sample
     "explode_doc_words": "r3",
-    "doc_token_counts": "r3",        # sibling in window: doc_quality
     "set_ops_customers": "r3",       # union/intersect/except family, thrice-green
     "events_distinct_users": "r3",   # sibling in window: events_value_percentiles
-    "doc_fingerprints": "r3",        # sibling in window: doc_winnow_fp
+    "doc_fingerprints": "r3",        # md5 normalized-text key; sibling in
+                                     # window: source_quality_rollup
     "dedup_exact": "r3",             # md5-canonical logic also attested by
                                      # curation_filter_audit + source_quality_rollup
-    "embedding_near_dups": "r3",     # sibling in window: semantic_dedup
-                                     # (near-dup) + ann family
     "dedup_minhash_pairs": "r4",     # siblings in window: dedup_cross_corpus
                                      # + curation_source_prior (both run the
                                      # same banded-MinHash candidate stage)
-    "lsh_ann_topk": "r4",            # ANN family siblings in window:
-                                     # ann_cosine/ivf/pq/ivfpq
     "semi_suppliers_active": "r4",   # join family (broadcast/hash/anti/range)
                                      # still in window
-    "bpe_merges": "r5",              # sibling in window: bpe_token_counts
-                                     # composes the same training loop plus
-                                     # the encode pass
     "knn_label_accuracy": "r5",      # sibling in window: the IVF-PQ-backed
                                      # knn_label_accuracy_ivfpq (rotated in
                                      # r6) runs the same eval harness
-    "pq_ann_topk": "r5",             # ANN family siblings in window:
-                                     # ann_cosine/ivf/ivfpq (ivfpq composes
-                                     # the PQ encode/ADC machinery)
     "pivot_event_counts": "r5",      # agg/pivot family; sibling in window:
                                      # grouping_sets_orders
     "q5_region_revenue": "r4",       # join-agg family in window: q1/q3/
                                      # broadcast_part_revenue
-    "stratified_sample": "r4",       # md5-threshold sampling family in
-                                     # window: domain_mixture_sample (new)
-    "html_main_content": "r4",       # frozen-rule sibling in window:
-                                     # html_block_scores (same machinery,
-                                     # per-block detail)
-    "simhash_near_pairs": "r4",      # near-dup family in window: ngram_jaccard,
-                                     # dedup_cross_corpus, semantic_dedup,
-                                     # repeated_substrings (new)
-    "doc_winnow_fp": "r4",           # span-hash family in window:
-                                     # repeated_substrings (new); doc_fingerprints
-                                     # parked sibling
-    "media_features": "r4",          # media family in window:
-                                     # media_frame_sample + ocr_media_captions
-                                     # (new)
     "doc_repetition_stats": "r4",    # text-stats family in window:
                                      # doc_quality, doc_lang_id + the new
                                      # corpus_report rollup
@@ -3709,13 +3167,6 @@ EXTRA_LAST_GREEN: dict[str, str] = {
     "filter_ablation": "new r6 (pytest-oracle only; rotation candidate r7;"
                        " sibling in window: curation_filter_audit attests"
                        " the same flag expressions first-match-wins)",
-    "media_content_dedup": "new r6 (pytest-oracle only; rotation candidate"
-                           " r7 — multimodal axis; full SQL twin over the"
-                           " spans_input golden)",
-    "interleaved_pack": "new r6 (pytest-oracle only; rotation candidate r7"
-                        " — multimodal axis; sibling in window:"
-                        " pack_token_budget uses the same sharded"
-                        " prefix-sum idiom)",
     "corpus_snapshot_diff": "new r6 (pytest-oracle only; rotation candidate"
                             " r7 — release-engineering audit, md5-only"
                             " full-outer join)",
@@ -3734,26 +3185,15 @@ EXTRA_QUERIES: dict[str, Query] = {
     "events_distinct_users": events_distinct_users,
     "doc_fingerprints": doc_fingerprints,
     "dedup_exact": dedup_exact,
-    "embedding_near_dups": embedding_near_dups,
     "dedup_minhash_pairs": dedup_minhash_pairs,
-    "lsh_ann_topk": lsh_ann_topk,
     "semi_suppliers_active": semi_suppliers_active,
-    "bpe_merges": bpe_merges,
     "knn_label_accuracy": knn_label_accuracy,
-    "pq_ann_topk": pq_ann_topk,
     "pivot_event_counts": pivot_event_counts,
     "q5_region_revenue": q5_region_revenue,
-    "stratified_sample": stratified_sample,
-    "html_main_content": html_main_content,
-    "simhash_near_pairs": simhash_near_pairs,
-    "doc_winnow_fp": doc_winnow_fp,
-    "media_features": media_features,
     "doc_repetition_stats": doc_repetition_stats,
     "events_hopping_window": events_hopping_window,
     "cube_events_dow": cube_events_dow,
-    "media_resized": media_resized,
     "explode_doc_words": explode_doc_words,
-    "doc_token_counts": doc_token_counts,
     "anti_customers_no_orders": anti_customers_no_orders,
     "window_order_gaps": window_order_gaps,
     "events_daily_stats": events_daily_stats,
@@ -3765,8 +3205,6 @@ EXTRA_QUERIES: dict[str, Query] = {
     "events_approx_percentiles": events_approx_percentiles,
     "events_approx_distinct": events_approx_distinct,
     "filter_ablation": filter_ablation,
-    "media_content_dedup": media_content_dedup,
-    "interleaved_pack": interleaved_pack,
     "corpus_snapshot_diff": corpus_snapshot_diff,
     "embedding_int8_quantize": embedding_int8_quantize,
     "eval_split_assignment": eval_split_assignment,
@@ -3802,7 +3240,6 @@ def oracle_sql() -> dict[str, str]:
         "events_props_extract": _PROPS_SQL,
         "events_props_json": _PROPS_JSON_SQL,
         "explode_doc_words": _EXPLODE_SQL,
-        "doc_token_counts": _TOKCOUNT_SQL,
         "doc_quality": _QUALITY_SQL,
         "doc_repetition_stats": _REPETITION_SQL,
         "doc_lang_id": _langid_sql(),
@@ -3811,9 +3248,7 @@ def oracle_sql() -> dict[str, str]:
         "dedup_exact": _DEDUP_EXACT_SQL,
         "dedup_minhash_pairs": _MINHASH_SQL,
         "ngram_jaccard": _JACCARD_SQL,
-        "simhash_near_pairs": _simhash_sql(),
         "dedup_clusters": _CLUSTERS_SQL,
-        "stratified_sample": _sample_sql(),
         "pack_token_budget": _PACK_SQL,
         "domain_mixture_sample": _mixture_sql(),
         "html_block_scores": _html_blocks_sql(),
@@ -3826,18 +3261,13 @@ def oracle_sql() -> dict[str, str]:
         "doc_pii_scan": _PII_SQL,
         "curation_filter_audit": _FILTER_AUDIT_SQL,
         "filter_ablation": _FILTER_ABLATION_SQL,
-        "media_content_dedup": _MEDIA_DEDUP_SQL,
-        "interleaved_pack": _INTERLEAVED_PACK_SQL,
         "corpus_snapshot_diff": _SNAPSHOT_DIFF_SQL,
         "embedding_int8_quantize": _INT8_QUANT_SQL,
         "eval_split_assignment": _EVAL_SPLIT_SQL,
         "benchmark_decontaminate": _DECONTAM_SQL,
         "doc_boilerplate_strip": _BOILERPLATE_SQL,
-        "doc_winnow_fp": _WINNOW_SQL,
         "ann_cosine_topk": _ANN_SQL,
-        "lsh_ann_topk": _lsh_ann_sql(),
         "ivf_ann_topk": _ivf_ann_sql(),
-        "embedding_near_dups": _near_dups_sql(),
         "semantic_dedup": _semantic_dedup_sql(),
         "doc_model_quality": _MODEL_QUALITY_SQL,
         "doc_lm_score": _LM_SCORE_SQL,
@@ -3849,12 +3279,7 @@ def oracle_sql() -> dict[str, str]:
         "events_funnel": _FUNNEL_SQL,
         "source_quality_rollup": _SOURCE_ROLLUP_SQL,
         "knn_label_accuracy": _KNN_SQL.format(cos=_cosine_sql("h.qv", "c.vec")),
-        "pq_ann_topk": _pq_ann_sql(),
         "ivfpq_ann_topk": _ivfpq_sql(),
-        "bpe_merges": _bpe_sql(),
-        "html_main_content": _html_main_sql(),
-        "media_features": _media_sql(),
-        "media_resized": _media_resized_sql(),
         "media_frame_sample": _media_frames_sql(),
         "ocr_page_scores": _OCR_SCORES_SQL,
         "ocr_spans_out": _OCR_SPANS_SQL,
@@ -3864,12 +3289,12 @@ def oracle_sql() -> dict[str, str]:
         "interleaved_datasheet": _DATASHEET_SQL,
         "streaming_events_daily": _STREAMING_SQL,
         "streaming_click_to_purchase": _SS_JOIN_SQL,
-        # rows-only by design (the only 2 of the 91 queries):
+        # rows-only by design (the only 2 of the 78 queries):
         # events_approx_distinct and events_approx_percentiles —
         # engine-specific sketches (HLL / KLL)
         # whose exact outputs no other engine reproduces; each carries an
         # error-bound test in tests/ instead.  ocr_* twins are golden parquet
         # derived from the pure-Python oracle (fixtures/make_goldens.py);
-        # everything else — including all ANN/LSH/SimHash queries — is
+        # everything else — including all ANN queries — is
         # re-derived independently in DuckDB.
     }

@@ -1,8 +1,6 @@
-"""Curation operators: connected components, stratified sampling, packing."""
+"""Curation operators: connected components, dedup clusters, packing."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
 
 from .conftest import plan_string
 
@@ -33,27 +31,6 @@ def test_dedup_clusters_collapse_exact_dups(spark):
     # the three exact dups collapse to the min id; the unrelated doc is not
     # in any candidate pair and therefore absent
     assert got == {"a1": "a1", "a2": "a1", "a3": "a1"}
-
-
-def test_stratified_sample_deterministic_and_rate(spark, sf01_dir):
-    from page_evaluator_spark.operators.curation import stratified_sample
-
-    d = spark.read.parquet(f"{sf01_dir}/documents.parquet")
-    rates = {"en": 60, "de": 30}
-    s1 = stratified_sample(d, "lang", rates, default_pct=10)
-    s2 = stratified_sample(d, "lang", rates, default_pct=10)
-    ids1 = {r["doc_id"] for r in s1.select("doc_id").collect()}
-    ids2 = {r["doc_id"] for r in s2.select("doc_id").collect()}
-    assert ids1 == ids2  # deterministic, no rand()
-    kept = {r["lang"]: r["n"] for r in
-            s1.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    tot = {r["lang"]: r["n"] for r in
-           d.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    # md5 buckets are uniform: observed rate within a generous tolerance
-    assert 0.4 < kept["en"] / tot["en"] < 0.8
-    assert 0.15 < kept["de"] / tot["de"] < 0.45
-    for lang in ("fr", "es", "zh"):
-        assert kept.get(lang, 0) / tot[lang] < 0.25
 
 
 def test_pack_token_budget_bins_bounded(spark, sf01_dir):

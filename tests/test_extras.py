@@ -1,5 +1,5 @@
 """Unit-level semantics for the curation extras: lexicon matching, dedup
-(LSH vs exact Jaccard recall), similarity (LSH vs brute-force recall), media
+(LSH vs exact Jaccard recall), similarity (IVF vs brute-force recall), media
 plumbing, and the spark-submit CLI job."""
 
 from __future__ import annotations
@@ -58,64 +58,6 @@ def test_minhash_lsh_recall_vs_jaccard(spark):
     assert high  # a1/a2 exact dup pair exists
     assert high <= cand, f"LSH missed high-similarity pairs: {high - cand}"
     assert ("a1", "a2") in cand
-
-
-def test_simhash_identical_and_different(spark):
-    from page_evaluator_spark.operators.dedup import simhash_signatures
-
-    docs = spark.createDataFrame(
-        [("x", "alpha beta gamma delta"), ("y", "alpha beta gamma delta"),
-         ("z", "totally different words entirely unrelated")],
-        "doc_id string, text string")
-    sig = {r["doc_id"]: (r["sig_hi"], r["sig_lo"])
-           for r in simhash_signatures(docs).collect()}
-    assert sig["x"] == sig["y"]
-    assert sig["x"] != sig["z"]
-    for hi, lo in sig.values():  # 32-bit words, engine-portable range
-        assert 0 <= hi < (1 << 32) and 0 <= lo < (1 << 32)
-
-
-def test_lsh_ann_recall_vs_brute_force(spark, sf01_dir):
-    """Bucketed ANN: every returned neighbor must share the query's bucket and
-    appear in the brute-force ranking; recall@10 reported ≥ 0.2 (6 planes)."""
-    from page_evaluator_spark.operators.similarity import brute_force_topk, lsh_ann_topk
-
-    e = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), "embedding")
-    bf = brute_force_topk(e, q, k=10).collect()
-    ann = lsh_ann_topk(e, q, k=10).collect()
-    bf_sets = {}
-    for r in bf:
-        bf_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    ann_sets = {}
-    for r in ann:
-        ann_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recalls = [len(bf_sets[qid] & ann_sets.get(qid, set())) / 10 for qid in bf_sets]
-    assert sum(recalls) / len(recalls) >= 0.2
-    # ANN cosine values must agree with brute force for shared neighbors
-    bf_cos = {(r["query_id"], r["neighbor_id"]): r["cosine_sim"] for r in bf}
-    for r in ann:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in bf_cos:
-            assert r["cosine_sim"] == pytest.approx(bf_cos[key], abs=1e-6)
-
-
-def test_media_features_plumbing(spark):
-    from page_evaluator_spark.operators.media import extract_media_features, media_spans
-
-    docs = corpus_to_spark_df(spark, gen_corpus(20, seed=9))
-    feats = extract_media_features(media_spans(docs))
-    rows = feats.collect()
-    assert rows
-    for r in rows:
-        assert r["media_kind"] in ("image", "table", "figure")
-        assert r["decode_error"] is None
-        assert len(r["feature"]) == 8
-        assert all(0.0 <= x <= 1.0 for x in r["feature"])
-    # deterministic: same ref → same feature
-    again = {(r["doc_id"], r["media_ref"]): r["feature"] for r in feats.collect()}
-    first = {(r["doc_id"], r["media_ref"]): r["feature"] for r in rows}
-    assert again == first
 
 
 def test_cli_job_end_to_end(spark, tmp_path):
@@ -225,24 +167,11 @@ def test_approx_percentiles_error_bound(spark, sf01_dir):
 
 
 def test_media_resize_and_frame_sample_plumbing(spark):
-    """Resize + frame-sample kernels: real Arrow dataflow, deterministic stub
-    bodies, video fan-out shape exercised via a synthetic video span."""
+    """Frame-sample kernel: real Arrow dataflow, deterministic stub body,
+    video fan-out shape exercised via synthetic video spans."""
     import pytest as _pt
 
-    from page_evaluator_spark.operators.media import (
-        extract_media_features,
-        media_spans,
-        resize_media,
-        sample_frames,
-    )
-
-    docs = corpus_to_spark_df(spark, gen_corpus(15, seed=6))
-    rows = media_spans(docs)
-    resized = resize_media(rows, width=224, height=224).collect()
-    assert resized and all(r["out_width"] == 224 and r["decode_error"] is None
-                           for r in resized)
-    assert len({r["resized_sha"] for r in resized}) == len(
-        {(r["doc_id"], r["media_ref"]) for r in resized})  # per-ref deterministic
+    from page_evaluator_spark.operators.media import sample_frames
 
     # synthetic video rows exercise the frame fan-out
     vids = spark.createDataFrame(
@@ -263,8 +192,6 @@ def test_media_resize_and_frame_sample_plumbing(spark):
     assert len(per_doc["v1"]) == (n_a + 29) // 30  # ceil(n_frames / 30)
 
     # decode_stub=False raises the documented NotImplementedError
-    with _pt.raises(NotImplementedError):
-        resize_media(rows, decode_stub=False)
     with _pt.raises(NotImplementedError):
         sample_frames(vids, decode_stub=False)
 

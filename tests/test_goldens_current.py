@@ -22,7 +22,7 @@ GOLDEN = REPO / "fixtures" / "golden"
 FILES = ["ocr_page_scores.parquet", "ocr_spans_out.parquet",
          "ocr_quarantine.parquet", "ocr_worst_pages.parquet",
          "media_spans.parquet", "media_captions.parquet",
-         "interleaved_datasheet.parquet", "spans_input.parquet"]
+         "interleaved_datasheet.parquet"]
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -38,10 +38,17 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.loc[order].reset_index(drop=True)
 
 
+def test_golden_dir_holds_exactly_files():
+    """Every committed golden is one this module checks — a file no twin
+    reads any more is deleted with its writer, not left behind."""
+    assert sorted(p.name for p in GOLDEN.iterdir()) == sorted(FILES)
+
+
 def test_goldens_match_fresh_oracle_run(tmp_path):
     import make_goldens
 
     make_goldens.main(tmp_path)
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(FILES)
     for name in FILES:
         fresh = pd.read_parquet(tmp_path / name)
         committed = pd.read_parquet(GOLDEN / name)

@@ -1,12 +1,10 @@
-"""HTML boilerplate strip: frozen-rule behavior, native-expression twin
-equivalence, and full-pipeline parity for span kind 'html'."""
+"""HTML boilerplate strip: frozen-rule behavior, oracle equivalence, and
+full-pipeline parity for span kind 'html'."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from page_evaluator_spark.corpus import corpus_to_spark_df, fixtures_docs
-from page_evaluator_spark.functions.html import extract_main_text, extract_main_text_expr
+from page_evaluator_spark.functions.html import extract_main_text
 from page_evaluator_spark.plans.pipeline import evaluate_documents
 
 from . import oracle
@@ -38,18 +36,6 @@ def test_extract_main_text_rule():
             assert y in out, (html, out)
         for n in no:
             assert n not in out, (html, out)
-
-
-def test_native_expr_matches_python(spark):
-    htmls = [c[0] for c in CASES] + [
-        d["spans"][0]["text"] for d in fixtures_docs()
-        if d["doc_id"].startswith("f020")
-    ]
-    df = spark.createDataFrame([(h,) for h in htmls if h], "html string")
-    got = {r["html"]: r["t"]
-           for r in df.withColumn("t", extract_main_text_expr(F.col("html"))).collect()}
-    for h in got:
-        assert got[h] == extract_main_text(h), h
 
 
 def test_oracle_matches_pipeline_impl():

@@ -121,6 +121,7 @@ def test_lineage_counts_match_outputs_and_keep_job_group(spark, docs, tmp_path):
         assert row["n_docs"] == scores.get(part, 0)
         assert row["n_tokens"] == (tokens.get(part) or 0)
         assert row["metrics"] == {"pipeline": "evaluate_documents",
+                                  "n_parts": "4",
                                   "n_spans": str(spans.get(part, 0)),
                                   "n_quarantined": str(quarantined.get(part, 0))}
         assert runner.part_counts[part] == {
@@ -194,11 +195,35 @@ def test_resume_over_lineage_of_the_previous_format(spark, docs, tmp_path):
     for part in first:
         assert lineage[part]["metrics"] == {"pipeline": "evaluate_documents"}
     for part in second:
-        assert set(lineage[part]["metrics"]) == {"pipeline", "n_spans", "n_quarantined"}
+        assert set(lineage[part]["metrics"]) == {"pipeline", "n_parts", "n_spans",
+                                                 "n_quarantined"}
     n_docs = docs.count()
     assert sum(r["n_docs"] for r in lineage.values()) == n_docs
     assert resumed.page_scores().count() == n_docs
     assert resumed.lineage().schema.fields[:-1] == _lineage_fields(spark)
+
+
+def test_resume_with_a_different_n_parts_is_refused(spark, docs, tmp_path):
+    """Part ids mean different doc sets under another part count: resuming a
+    root committed with n_parts=4 under n_parts=8 would score some documents
+    twice and others never, so it raises before any work; resuming with the
+    recorded count still completes, each document scored once."""
+    out = str(tmp_path / "out")
+    first = IncrementalRunner(spark, out, n_parts=4).run(docs, run_id="r1", max_parts=2)
+    assert len(first) == 2
+
+    other = IncrementalRunner(spark, out, n_parts=8)
+    with pytest.raises(ValueError, match="n_parts=4"):
+        other.pending_parts()
+    with pytest.raises(ValueError, match="n_parts=4"):
+        other.run(docs, run_id="r2")
+
+    resumed = IncrementalRunner(spark, out, n_parts=4)
+    assert sorted(first + resumed.run(docs, run_id="r3")) == [0, 1, 2, 3]
+    n_docs = docs.count()
+    scores = resumed.page_scores()
+    assert scores.count() == n_docs
+    assert scores.select("doc_id").distinct().count() == n_docs
 
 
 def test_failed_concurrent_append_leaves_part_pending(spark, docs, tmp_path):

@@ -293,30 +293,40 @@ def test_title_props_fuzz_kernel_vs_oracle(title):
         assert op.error is not None, (title, "kernel crashed, oracle did not")
 
 
-def test_staging_restages_on_n_parts_change(spark, tmp_path):
-    """A resume under a different --n-parts must NOT reuse the old staged
-    _part layout (part ids would be wrong) — it re-stages."""
+def test_staging_restages_on_n_parts_change(spark, tmp_path, monkeypatch):
+    """A run under a different --n-parts must NOT reuse the old staged
+    _part layout (part ids would be wrong) — it re-stages.  A different
+    n_parts is only accepted while no part is committed (committed parts
+    pin it — test_resume.py), so the first run stages its input and then
+    fails before committing any part."""
     import os
 
     from page_evaluator_spark.corpus import corpus_to_spark_df, gen_corpus
     from page_evaluator_spark.plans.incremental import IncrementalRunner
+    from page_evaluator_spark.sources.catalog import Catalog
+
+    def failing_append(self, *args, **kwargs):
+        raise RuntimeError("simulated append failure")
 
     docs = corpus_to_spark_df(spark, gen_corpus(20, seed=23, include_fixtures=False))
     out = str(tmp_path / "out")
     r1 = IncrementalRunner(spark, out, n_parts=4)
-    r1.run(docs, run_id="a", max_parts=2)  # stages with n_parts=4, leaves 2 pending
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "append", failing_append)
+        with pytest.raises(RuntimeError, match="simulated append failure"):
+            r1.run(docs, run_id="a")  # stages with n_parts=4, commits nothing
+    assert r1.committed_parts() == set()
     staged = os.path.join(out, "staged_docs")
     parts4 = sorted(d for d in os.listdir(staged) if d.startswith("_part="))
-    assert len(parts4) <= 4
+    assert parts4 and len(parts4) <= 4
 
     # same output root, DIFFERENT n_parts: must re-stage with the new layout
     r2 = IncrementalRunner(spark, out, n_parts=8)
-    r2.run(docs, run_id="b")
+    assert sorted(r2.run(docs, run_id="b")) == list(range(8))
     parts8 = sorted(d for d in os.listdir(staged) if d.startswith("_part="))
     assert max(int(d.split("=")[1]) for d in parts8) >= 4  # new layout present
     n_docs = docs.count()
     scores = r2.page_scores()
-    # every doc scored at least once (4-part commits + 8-part commits overlap:
-    # changing n_parts mid-run is user error for dedup purposes, but no doc
-    # may be LOST to a stale staging layout)
+    # no doc lost to a stale staging layout, none scored twice
+    assert scores.count() == n_docs
     assert scores.select("doc_id").distinct().count() == n_docs

@@ -2,7 +2,6 @@
 
 - the kernel's title parser raises exactly on the titles the Java reference
   crashes on and builds the oracle's map otherwise (kernel vs oracle);
-- simhash_near_pairs rejects n_bands != 4 (ADVICE #2);
 - token_props x_wconf survives fractional confidences (ADVICE #5);
 - golden oracle dir is derived from the package location (ADVICE #4);
 - ensure_min_parallelism memoizes its partition probe (VERDICT #7).
@@ -35,15 +34,6 @@ def test_native_title_map_crash_parity():
         assert kernel == expected, repr(t)
     for t in TITLE_BAD:
         assert _title_kernel_vs_oracle(t) == (None, None), repr(t)
-
-def test_simhash_rejects_unsupported_band_count(spark):
-    from page_evaluator_spark.operators.dedup import simhash_near_pairs
-
-    docs = spark.createDataFrame([("a", "x y z")], "doc_id string, text string")
-    with pytest.raises(ValueError, match="4 16-bit bands"):
-        simhash_near_pairs(docs, n_bands=8)
-    # default still constructs a plan
-    assert simhash_near_pairs(docs).columns == ["doc_a", "doc_b", "hamming"]
 
 
 def test_token_props_fractional_x_wconf(spark):

@@ -423,39 +423,18 @@ def test_lm_score_oracle_empty_doc_parity(spark, tmp_path):
 
 
 def test_pq_ann_recall_and_encoding(spark, sf01_dir):
-    """PQ ANN (r4): codes stay in [0, n_codes); scores are deterministic
-    across partitionings; recall@10 vs brute force clears the documented
-    floor for 8x16 unrefined codebooks on this corpus (measured 0.32)."""
-    from page_evaluator_spark.operators.similarity import (
-        brute_force_topk,
-        pq_ann_topk,
-        pq_code_expr,
-        pq_codebooks,
-    )
+    """PQ encoding (r4): 8 codebooks of 16 codewords over 8-dim subspaces,
+    and every code a corpus vector gets stays in [0, n_codes) — the
+    codebook/encode machinery ivfpq_ann_topk composes."""
+    from page_evaluator_spark.operators.similarity import pq_code_expr, pq_codebooks
 
     e = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"),
-                                            "embedding")
-    bs: dict[int, set] = {}
-    for r in brute_force_topk(e, q, k=10).collect():
-        bs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    pq = pq_ann_topk(e, q, k=10).collect()
-    ps: dict[int, set] = {}
-    for r in pq:
-        ps.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recall = sum(len(bs[k] & ps.get(k, set())) / 10 for k in bs) / len(bs)
-    assert recall >= 0.25
-
     cbs = pq_codebooks(e, m=8, n_codes=16)
     assert len(cbs) == 8 and all(len(cb) == 16 for cb in cbs)
     assert all(len(cv) == 8 for cb in cbs for cv in cb)
     codes = e.select(*[pq_code_expr(F.col("embedding"), cbs[j], j, 8).alias(f"c{j}")
                        for j in range(8)]).collect()
     assert all(0 <= r[f"c{j}"] < 16 for r in codes for j in range(8))
-
-    a = sorted(map(tuple, pq_ann_topk(e.repartition(1), q, k=5).collect()))
-    b = sorted(map(tuple, pq_ann_topk(e.repartition(7), q, k=5).collect()))
-    assert a == b
 
 
 def test_lm_filter_stage_and_calibration(spark, tmp_path):
@@ -525,20 +504,20 @@ def test_ivfpq_candidates_from_probed_cells_only(spark, sf01_dir):
     for r in rows:
         assert cells[r["neighbor_id"]] in probed[r["query_id"]], r
 
-    # recall floor at k=10
+    # recall floor at k=10; one build (k-means + codebook collects run at
+    # build time) serves both this check and the plan check below
     bs: dict[int, set] = {}
     for r in brute_force_topk(e, q, k=10).collect():
         bs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    top = ivfpq_ann_topk(e, q, k=10, kmeans_rounds=1).collect()
+    top_df = ivfpq_ann_topk(e, q, k=10, kmeans_rounds=1)
     ps: dict[int, set] = {}
-    for r in top:
+    for r in top_df.collect():
         ps.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     assert sum(len(bs[k] & ps.get(k, set())) / 10 for k in bs) / len(bs) >= 0.25
 
-    # plan: candidate generation is an equi-join keyed by cell
-    df = ivfpq_ann_topk(e, q, k=10, kmeans_rounds=1)
-    df.write.format("noop").mode("overwrite").save()
-    plan = plan_string(df)
+    # plan: candidate generation is an equi-join keyed by cell (the executed
+    # plan of the collected DataFrame)
+    plan = plan_string(top_df)
     assert "BroadcastHashJoin [cell" in plan or "ShuffledHashJoin [cell" in plan \
         or "SortMergeJoin [cell" in plan, plan[:1200]
 

@@ -387,74 +387,6 @@ def test_mixture_zero_token_docs_and_empty_source_edge(spark):
     assert got == ref
 
 
-# ---------------------------------------------------------------------------
-# r6 multimodal additions: media content dedup + interleaved sequence packing
-# ---------------------------------------------------------------------------
-
-def _interleaved_docs(spark):
-    from page_evaluator_spark.corpus import corpus_to_spark_df, gen_corpus
-
-    return corpus_to_spark_df(spark, gen_corpus(40, seed=7))
-
-
-def test_interleaved_pack_cost_is_projection_no_explode(spark):
-    """The per-doc cost model is a pure projection over the spans array:
-    no Generate (explode) node anywhere in the packing plan — the only
-    corpus-sized shuffles are the shard window and the seq_id agg."""
-    from page_evaluator_spark.operators.media import pack_interleaved_sequences
-
-    plan = plan_string(pack_interleaved_sequences(_interleaved_docs(spark)))
-    assert "Generate" not in plan, plan
-    assert "Window" in plan
-
-
-def test_interleaved_pack_conserves_totals_and_respects_budget(spark):
-    """Packing must conserve tokens/docs exactly, and every bin except a
-    per-(shard-tail|overflow) case stays within budget + one doc."""
-    from page_evaluator_spark.operators.media import pack_interleaved_sequences
-    from page_evaluator_spark.operators.parse import MEDIA_KINDS
-
-    docs = _interleaved_docs(spark)
-    budget, media_tokens = 128, 32
-    out = pack_interleaved_sequences(docs, budget=budget,
-                                     media_tokens=media_tokens).collect()
-    rows = docs.collect()
-    import regex
-
-    tok = regex.compile(r"[\p{L}]+|[\p{N}]+|[^\p{L}\p{N} \t\n\x0B\f\r]")
-    exp_text = sum(len(tok.findall(s["text"]))
-                   for r in rows for s in r["spans"]
-                   if s["kind"] not in MEDIA_KINDS and s["text"] is not None)
-    exp_media = sum(1 for r in rows for s in r["spans"]
-                    if s["kind"] in MEDIA_KINDS)
-    assert sum(r["n_docs"] for r in out) == len(rows)
-    assert sum(r["text_tokens"] for r in out) == exp_text
-    assert sum(r["media_spans"] for r in out) == exp_media
-    for r in out:
-        assert r["total_cost"] == r["text_tokens"] + media_tokens * r["media_spans"]
-    # The budget bound itself (assign_packed_seq_ids contract): a bin's start
-    # offset is >= bin*budget and its last doc starts below (bin+1)*budget,
-    # so total_cost < budget + (last doc's cost) <= budget + max doc cost.
-    # A degenerate seq_id formula (whole shard in one bin) breaks this while
-    # conserving every total above.
-    doc_cost = {
-        r["doc_id"]: sum(len(tok.findall(s["text"]))
-                         for s in r["spans"]
-                         if s["kind"] not in MEDIA_KINDS and s["text"] is not None)
-        + media_tokens * sum(1 for s in r["spans"] if s["kind"] in MEDIA_KINDS)
-        for r in rows}
-    max_cost = max(doc_cost.values())
-    assert any(v > 0 for v in doc_cost.values())
-    for r in out:
-        assert r["total_cost"] < budget + max_cost, (
-            r["seq_id"], r["total_cost"], budget, max_cost)
-    # and the corpus genuinely spreads over multiple bins at this budget
-    # (explicit floor — the per-bin bound alone would be vacuous if the
-    # fixture ever shrank to a single bin's worth of cost)
-    assert sum(doc_cost.values()) > 2 * (budget + max_cost)
-    assert len(out) > 2
-
-
 def test_eval_split_is_keyed_by_content_not_doc_id(spark):
     """The leakage contract itself: byte-identical texts land in the SAME
     split regardless of doc_id or source — a doc_id-keyed bucket (the
@@ -487,31 +419,3 @@ def test_eval_split_is_keyed_by_content_not_doc_id(spark):
     assert len({s for (_, s) in by}) >= 2
 
 
-def test_media_content_dedup_recount(spark):
-    """Independent Python recount of the dedup groups (fingerprint classes,
-    ref/doc counts, canonical first occurrence, bytes_saved)."""
-    import hashlib
-
-    from page_evaluator_spark.corpus import gen_corpus
-    from page_evaluator_spark.operators.media import media_content_dedup
-    from page_evaluator_spark.operators.parse import MEDIA_KINDS
-
-    docs = gen_corpus(40, seed=7)
-    groups: dict[str, list] = {}
-    for d in docs:
-        for s in d["spans"]:
-            if s["kind"] in MEDIA_KINDS:
-                content = s["media_ref"].rsplit("/", 1)[-1]
-                fp = hashlib.sha256(content.encode()).hexdigest()
-                groups.setdefault(fp, []).append(
-                    (d["doc_id"], s["media_ref"], len(content)))
-    out = {r["content_sha"]: r
-           for r in media_content_dedup(_interleaved_docs(spark)).collect()}
-    assert set(out) == set(groups)
-    for fp, refs in groups.items():
-        r = out[fp]
-        assert r["n_refs"] == len(refs)
-        assert r["n_docs"] == len({x[0] for x in refs})
-        canon = min((x[0], x[1]) for x in refs)
-        assert (r["canonical_doc"], r["canonical_ref"]) == canon
-        assert r["bytes_saved"] == (len(refs) - 1) * refs[0][2]

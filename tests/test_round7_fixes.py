@@ -122,27 +122,6 @@ def test_tokenize_lower_equals_tokenize_normalized(spark):
     assert bad == []
 
 
-def test_pack_interleaved_null_spans_cost_zero(spark):
-    """ADVICE r6: a NULL spans array must cost 0 (F.size(NULL) is -1 and
-    would corrupt bin assignment), matching the DuckDB twin's coalesce."""
-    from page_evaluator_spark.operators.media import pack_interleaved_sequences
-
-    docs = spark.createDataFrame(
-        [(1, [("text", "five words of real text", None, 0)]),
-         (2, None),
-         (3, [("image", None, "img://3", 0)])],
-        "doc_id long, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>")
-    out = pack_interleaved_sequences(docs, budget=100, media_tokens=10,
-                                     n_shards=2)
-    rows = out.collect()
-    total_cost = sum(r["total_cost"] for r in rows)
-    total_docs = sum(r["n_docs"] for r in rows)
-    assert total_docs == 3           # the NULL-spans doc is packed, at cost 0
-    assert total_cost == 5 + 0 + 10  # text tokens + empty + one media span
-    assert all(r["total_cost"] >= 0 for r in rows)
-
-
 def test_repeated_substrings_single_explode_in_final_plan(spark):
     from page_evaluator_spark.operators.dedup import repeated_substrings
 
