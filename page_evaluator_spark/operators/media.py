@@ -1,9 +1,8 @@
 """Multimodal span processing: image/audio/video as opaque binary + metadata.
 
 The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas signatures,
-partitioning) is real and tested; the codec is stubbed behind an import
-guard because no image/audio libraries are installed — `decode_stub=True`
-substitutes deterministic sha256-derived frame counts so the dataflow is
+partitioning) is real and tested; no image/audio codec is installed, so frame
+counts are deterministic sha256-derived stub metadata and the dataflow is
 exercisable end-to-end.
 
 At 100 TB the pattern is: media bytes live in object storage referenced by
@@ -22,30 +21,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _decode_real(ref: str, kind: str) -> dict:
-    try:
-        import PIL  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "real media decode requires imaging/audio libraries not present "
-            "in this environment; use decode_stub=True") from e
-    raise NotImplementedError("real decoder wiring is deployment-specific")
-
-
 FRAMES_SCHEMA = ("doc_id string, media_ref string, media_kind string, "
                  "frame_idx int, frame_sha string")
 
 
-def sample_frames(media_rows: DataFrame, every_n: int = 30,
-                  decode_stub: bool = True) -> DataFrame:
+def sample_frames(media_rows: DataFrame, every_n: int = 30) -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled frame index.
 
     Frame counts come from deterministic stub metadata (video →
     1 + sha256(ref)[2] % 300 frames; stills → 1 frame), so the
     fan-out shape — a 300-frame video becomes ~10 rows — is exercised for
     real even though the decoded pixels are stubbed."""
-    if not decode_stub:
-        _decode_real("", "video")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -4,6 +4,15 @@ The ONLY Python boundary in the pipeline (Arrow-batched ``mapInArrow``; no
 per-row Python UDFs, per BASELINE.json input_hint).  Everything downstream
 (classification, aggregation, scoring) is native Catalyst.
 
+Output shape: ONE row per span.  A span's final tokens cross the boundary as
+one Arrow ``list<string>`` (line/tok indices and title props as parallel
+lists, when declared); 'page', 'error', 'empty' and media spans are marker
+rows.  ``parse_spans`` turns them into the token-grained PARSED_SCHEMA
+relation with a native ``posexplode_outer``: per-token rows would repeat
+doc_id/kind/offset for every word through the boundary (~3x the bytes).
+Output arrays are built from buffers (``pa.Array.from_buffers``): ``pa.array``
+would import pandas and ``pyarrow.compute`` into every Python worker.
+
 Skew design: the unit of work is a *span* (one page), not a document —
 ``explode_docs`` posexplodes the spans array natively, and a repartition
 spreads a pathological document's 10^6 spans across the cluster
@@ -23,7 +32,9 @@ from __future__ import annotations
 
 import unicodedata
 import xml.etree.ElementTree as ET
+from array import array
 from collections.abc import Iterator
+from itertools import accumulate
 
 import pyarrow as pa
 import regex
@@ -47,24 +58,24 @@ PARSED_SCHEMA = (
     "props map<string,string>, error string"
 )
 
-# (DDL type, Arrow type) per PARSED_SCHEMA field, in schema order — the
-# column-pruned kernels (guide §4.1: an opaque Python function ships every
-# declared output column through the Arrow boundary, so each pipeline branch
-# declares only the columns it consumes) build their subset schema from this.
-_FIELDS: dict[str, tuple[str, pa.DataType]] = {
-    "doc_id": ("string", pa.string()),
-    "span_offset": ("int", pa.int32()),
-    "pos": ("int", pa.int32()),
-    "kind": ("string", pa.string()),
-    "text": ("string", pa.string()),
-    "media_ref": ("string", pa.string()),
-    "line_idx": ("int", pa.int32()),
-    "tok_idx": ("int", pa.int32()),
-    "page_id": ("string", pa.string()),
-    "ocr_engine": ("string", pa.string()),
-    "ocr_capabilities": ("array<string>", pa.list_(pa.string())),
-    "props": ("map<string,string>", pa.map_(pa.string(), pa.string())),
-    "error": ("string", pa.string()),
+# DDL type per PARSED_SCHEMA field, in schema order — the column-pruned
+# kernels (guide §4.1: an opaque Python function ships every declared output
+# column through the Arrow boundary, so each pipeline branch declares only the
+# columns it consumes) build their subset schema from this.
+_FIELDS: dict[str, str] = {
+    "doc_id": "string",
+    "span_offset": "int",
+    "pos": "int",
+    "kind": "string",
+    "text": "string",
+    "media_ref": "string",
+    "line_idx": "int",
+    "tok_idx": "int",
+    "page_id": "string",
+    "ocr_engine": "string",
+    "ocr_capabilities": "array<string>",
+    "props": "map<string,string>",
+    "error": "string",
 }
 ALL_COLUMNS: tuple[str, ...] = tuple(_FIELDS)
 
@@ -219,69 +230,158 @@ def _fold_tokens(texts: list[str], is_last: list[bool]) -> tuple[list[str], list
     return out_t, out_i
 
 
-class _Out:
-    """Column accumulator for one output batch (subset-aware: only the
-    columns a branch declared are materialized and serialized)."""
+# --- span-row output, built straight from buffers ----------------------------
+# pa.array() imports pandas and pyarrow.compute on its first call (~40 MB of a
+# Python worker's peak RSS for a batch of a few MB), so every output array is
+# assembled from array.array buffers with pa.Array.from_buffers instead.
 
-    __slots__ = ("names", "cols")
+_MAP = pa.map_(pa.string(), pa.string())
+_MAP_ENTRIES = pa.struct([_MAP.key_field, _MAP.item_field])
 
-    def __init__(self, names: tuple[str, ...]) -> None:
-        self.names = names
-        self.cols: dict[str, list] = {n: [] for n in names}
 
-    def add(self, doc_id, span_offset, pos, kind, text=None, media_ref=None,
-            line_idx=None, tok_idx=None, page_id=None, engine=None, caps=None,
-            props=None, error=None) -> None:
-        all_vals = {"doc_id": doc_id, "span_offset": span_offset, "pos": pos,
-                    "kind": kind, "text": text, "media_ref": media_ref,
-                    "line_idx": line_idx, "tok_idx": tok_idx,
-                    "page_id": page_id, "ocr_engine": engine,
-                    "ocr_capabilities": caps, "props": props, "error": error}
-        for n, col in self.cols.items():
-            col.append(all_vals[n])
+def _validity(values: list) -> tuple[pa.Buffer | None, int]:
+    """Validity bitmap of `values` (None is null) and its null count; no
+    bitmap when nothing is null."""
+    n_null = values.count(None)
+    if not n_null:
+        return None, 0
+    bits = bytearray((len(values) + 7) >> 3)
+    for i, v in enumerate(values):
+        if v is not None:
+            bits[i >> 3] |= 1 << (i & 7)
+    return pa.py_buffer(bits), n_null
 
-    def add_words(self, doc_id, span_offset: int, toks: list[str],
-                  lines: list[int] | None, tok_idxs: list[int] | None,
-                  props: list[dict] | None = None) -> None:
-        """Bulk emit of a span's word rows (one list-extend per DECLARED
-        column instead of 13×n appends — the kernel's hot path)."""
+
+def _offsets(lengths) -> pa.Buffer:
+    return pa.py_buffer(array("i", accumulate(lengths, initial=0)))
+
+
+def _string_array(values: list[str | None]) -> pa.Array:
+    validity, n_null = _validity(values)
+    if n_null:
+        values = ["" if v is None else v for v in values]
+    joined = "".join(values)
+    data = joined.encode()
+    if len(data) == len(joined):  # all ASCII: byte lengths are char lengths
+        lengths = map(len, values)
+    else:
+        lengths = [len(v) if v.isascii() else len(v.encode()) for v in values]
+    return pa.Array.from_buffers(
+        pa.string(), len(values), [validity, _offsets(lengths), pa.py_buffer(data)],
+        null_count=n_null)
+
+
+def _int32_array(values: list[int | None]) -> pa.Array:
+    validity, n_null = _validity(values)
+    if n_null:
+        values = [0 if v is None else v for v in values]
+    return pa.Array.from_buffers(
+        pa.int32(), len(values), [validity, pa.py_buffer(array("i", values))],
+        null_count=n_null)
+
+
+def _list_array(lengths: list[int | None], child: pa.Array,
+                type: pa.DataType | None = None) -> pa.Array:
+    """list<child.type> (or the list-shaped `type`, e.g. a map) whose i-th
+    value holds the next lengths[i] child values; a None length is null."""
+    validity, n_null = _validity(lengths)
+    return pa.Array.from_buffers(
+        type or pa.list_(child.type), len(lengths),
+        [validity, _offsets(n or 0 for n in lengths)], null_count=n_null,
+        children=[child])
+
+
+def _string_list_array(lists: list[list[str] | None]) -> pa.Array:
+    return _list_array([None if v is None else len(v) for v in lists],
+                       _string_array([s for v in lists if v for s in v]))
+
+
+def _map_array(dicts: list[dict[str, str] | None]) -> pa.Array:
+    keys = [k for d in dicts if d for k in d]
+    entries = pa.Array.from_buffers(
+        _MAP_ENTRIES, len(keys), [None],
+        children=[_string_array(keys),
+                  _string_array([v for d in dicts if d for v in d.values()])])
+    return _list_array([None if d is None else len(d) for d in dicts], entries, _MAP)
+
+
+# The kernel's output: one row per span.  A word row carries its span's final
+# tokens as `tokens` (when `text` is declared; else only their count,
+# `n_words`), with line_idx / tok_idx / props as lists parallel to them; its
+# `pos` is null.  Marker rows ('page', 'error', 'empty', media) have no lists.
+_PER_TOKEN = {"text": ("tokens", "array<string>"),
+              "line_idx": ("line_idx", "array<int>"),
+              "tok_idx": ("tok_idx", "array<int>"),
+              "props": ("props", "array<map<string,string>>")}
+# per-span values of a row, in tuple order
+_ROW = ("doc_id", "span_offset", "pos", "kind", "media_ref", "page_id",
+        "ocr_engine", "ocr_capabilities", "error", "n_words", "n_props")
+
+
+def _span_columns(columns: tuple[str, ...]) -> list[tuple[str, str]]:
+    """(name, DDL type) of the kernel's output columns for `columns`."""
+    out = [_PER_TOKEN.get(c, (c, _FIELDS[c])) for c in columns]
+    if "text" not in columns:
+        out.append(("n_words", "int"))
+    return out
+
+
+class _SpanRows:
+    """One output batch: the span rows plus the flat per-token values their
+    lists slice (only the declared extras are collected)."""
+
+    __slots__ = ("rows", "tokens", "line_idx", "tok_idx", "props")
+
+    def __init__(self) -> None:
+        self.rows: list[tuple] = []
+        self.tokens: list[str] = []
+        self.line_idx: list[int] = []
+        self.tok_idx: list[int] = []
+        self.props: list[dict[str, str]] = []
+
+    def marker(self, doc_id, span_offset, pos, kind, media_ref=None,
+               page_id=None, engine=None, caps=None, error=None) -> None:
+        self.rows.append((doc_id, span_offset, pos, kind, media_ref, page_id,
+                          engine, caps, error, None, None))
+
+    def words(self, doc_id, span_offset: int, toks: list[str],
+              lines: list[int] | None, tok_idxs: list[int] | None,
+              props: list[dict] | None) -> None:
+        """The row of a span's k > 0 final tokens (None extras: undeclared,
+        or no props on a TXT span)."""
         k = len(toks)
-        if k == 0:
-            return
-        c = self.cols
-        nones = None
-        for n in self.names:
-            if n == "doc_id":
-                c["doc_id"].extend([doc_id] * k)
-            elif n == "span_offset":
-                c["span_offset"].extend([span_offset] * k)
-            elif n == "pos":
-                c["pos"].extend(range(k))
-            elif n == "kind":
-                c["kind"].extend(["word"] * k)
-            elif n == "text":
-                c["text"].extend(toks)
-            elif n == "line_idx":
-                c["line_idx"].extend(lines)
-            elif n == "tok_idx":
-                c["tok_idx"].extend(tok_idxs)
-            elif n == "props" and props is not None:
-                c["props"].extend(props)
-            else:  # media_ref / page_id / ocr_engine / caps / error / null props
-                if nones is None:
-                    nones = [None] * k
-                c[n].extend(nones)
+        self.rows.append((doc_id, span_offset, None, "word", None, None, None,
+                          None, None, k, None if props is None else k))
+        self.tokens += toks
+        self.line_idx += lines or ()
+        self.tok_idx += tok_idxs or ()
+        self.props += props or ()
 
-    def batch(self) -> pa.RecordBatch:
-        # build Arrow arrays directly from the python lists: no pandas frame,
-        # no object-ndarray detour, no serializer-side re-conversion
-        arrays = [pa.array(self.cols[n], type=_FIELDS[n][1]) for n in self.names]
-        return pa.RecordBatch.from_arrays(arrays, names=list(self.names))
+    def batch(self, names: list[str]) -> pa.RecordBatch:
+        col = dict(zip(_ROW, map(list, zip(*self.rows)))) if self.rows \
+            else dict.fromkeys(_ROW, [])
+        arrays = []
+        for n in names:
+            if n in ("span_offset", "pos", "n_words"):
+                arrays.append(_int32_array(col[n]))
+            elif n == "ocr_capabilities":
+                arrays.append(_string_list_array(col[n]))
+            elif n == "tokens":
+                arrays.append(_list_array(col["n_words"], _string_array(self.tokens)))
+            elif n in ("line_idx", "tok_idx"):
+                arrays.append(_list_array(col["n_words"],
+                                          _int32_array(getattr(self, n))))
+            elif n == "props":
+                arrays.append(_list_array(col["n_props"], _map_array(self.props)))
+            else:
+                arrays.append(_string_array(col[n]))
+        return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def _make_parse_kernel(columns: tuple[str, ...]):
     """mapInArrow kernel factory over exploded span rows
-    (doc_id, span_offset, kind, text, media_ref), emitting only `columns`.
+    (doc_id, span_offset, kind, text, media_ref), emitting the span rows of
+    `columns` (see _span_columns).
 
     Parsing work is IDENTICAL for every column subset (a branch that never
     reads `props` still parses each hOCR title so error rows match); only
@@ -290,10 +390,11 @@ def _make_parse_kernel(columns: tuple[str, ...]):
     want_props = "props" in columns
     want_lines = "line_idx" in columns
     want_toks = "tok_idx" in columns
+    names = [n for n, _ in _span_columns(columns)]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            out = _Out(columns)
+            out = _SpanRows()
             for doc_id, span_offset, kind, text, media_ref in zip(
                     rb.column("doc_id").to_pylist(),
                     rb.column("span_offset").to_pylist(),
@@ -303,21 +404,21 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                 if kind is None or span_offset is None:
                     if all(v is None for v in (kind, span_offset, text, media_ref)):
                         # explode_outer's row for a zero-span / null-spans doc
-                        out.add(doc_id, 0, 0, "empty")
+                        out.marker(doc_id, 0, 0, "empty")
                     else:  # a malformed span goes to quarantine, never dropped
                         field = "kind" if kind is None else "offset"
-                        out.add(doc_id, span_offset, -1, "error",
-                                error=f"InvalidSpan: null {field}")
+                        out.marker(doc_id, span_offset, -1, "error",
+                                   error=f"InvalidSpan: null {field}")
                     continue
                 if kind in MEDIA_KINDS:
-                    out.add(doc_id, span_offset, 0, kind, media_ref=media_ref)
+                    out.marker(doc_id, span_offset, 0, kind, media_ref=media_ref)
                     continue
                 try:
                     if kind == "hocr":
                         (texts, last, tprops, lines, toks,
                          page_id, engine, caps) = _parse_hocr(text or "")
-                        out.add(doc_id, span_offset, -1, "page", page_id=page_id,
-                                engine=engine, caps=caps)
+                        out.marker(doc_id, span_offset, -1, "page", page_id=page_id,
+                                   engine=engine, caps=caps)
                         folded_t, src = _fold_tokens(texts, last)
                         out_lines = [lines[i] for i in src] if want_lines else None
                         out_toks = [toks[i] for i in src] if want_toks else None
@@ -338,15 +439,16 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                     else:
                         raise ValueError(f"Unsupported format: {kind}")  # Main.java:87-88
                 except ValueError as e:
-                    out.add(doc_id, span_offset, -1, "error", error=str(e))
+                    out.marker(doc_id, span_offset, -1, "error", error=str(e))
                     continue
-                if not folded_t and kind in ("text", "html"):
+                if folded_t:
+                    out.words(doc_id, span_offset, folded_t, out_lines, out_toks,
+                              out_props)
+                elif kind in ("text", "html"):
                     # token-less TXT span: keep the doc_id alive in the parsed
                     # relation (hOCR spans already emit a 'page' metadata row)
-                    out.add(doc_id, span_offset, -1, "empty")
-                out.add_words(doc_id, span_offset, folded_t, out_lines, out_toks,
-                              out_props)
-            yield out.batch()
+                    out.marker(doc_id, span_offset, -1, "empty")
+            yield out.batch(names)
 
     return kernel
 
@@ -372,6 +474,9 @@ def parse_spans(span_rows: DataFrame, repartition: int | None = None,
                 columns: tuple[str, ...] | None = None) -> DataFrame:
     """Span rows → parsed relation (PARSED_SCHEMA) via Arrow-native mapInArrow.
 
+    The kernel emits one row per span; a native posexplode_outer of its
+    token lists yields the word rows (pos = the token's index in its span).
+
     columns (default: every PARSED_SCHEMA field) prunes the kernel's OUTPUT
     to the subset a branch consumes — Spark cannot see through the opaque
     Python function, so undeclared columns would otherwise be computed and
@@ -389,8 +494,16 @@ def parse_spans(span_rows: DataFrame, repartition: int | None = None,
     if repartition:
         # hash-spread spans (incl. a giant doc's spans) across the cluster
         span_rows = span_rows.repartition(repartition, "doc_id", "span_offset")
-    schema = ", ".join(f"{n} {_FIELDS[n][0]}" for n in columns)
-    return span_rows.mapInArrow(_make_parse_kernel(columns), schema=schema)
+    schema = ", ".join(f"{n} {ddl}" for n, ddl in _span_columns(columns))
+    spans = span_rows.mapInArrow(_make_parse_kernel(columns), schema=schema)
+    # marker rows have null lists: the outer explode keeps them as one row
+    # with a null index and token.  SQL text, not Column objects: each Column
+    # call is a py4j round trip, paid per plan (per part in IncrementalRunner)
+    words = "tokens" if "text" in columns else "array_repeat(0, n_words)"
+    per_row = {"pos": "coalesce(_i, pos)", "text": "_w", "line_idx": "line_idx[_i]",
+               "tok_idx": "tok_idx[_i]", "props": "props[_i]"}
+    return (spans.selectExpr("*", f"posexplode_outer({words}) AS (_i, _w)")
+            .selectExpr(*(f"{per_row.get(c, c)} AS {c}" for c in columns)))
 
 
 def parse_documents(docs: DataFrame, repartition: int | None = None,

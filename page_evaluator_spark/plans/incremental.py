@@ -40,6 +40,7 @@ pruning) — one extra full write instead of n_parts full scans.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor, wait
@@ -88,6 +89,10 @@ class IncrementalRunner:
     def lineage_ref(self) -> str:
         return self._ref("lineage")
 
+    @property
+    def staging_meta(self) -> str:
+        return os.path.join(self.out_dir, "_staging_meta.json")
+
     def lineage(self) -> DataFrame:
         if self.catalog.exists(self.lineage_ref):
             return self.catalog.read(self.lineage_ref)
@@ -100,12 +105,16 @@ class IncrementalRunner:
         Raises ValueError when the lineage was committed under a different
         ``n_parts``: part ids mean different doc sets under another part
         count, so resuming would duplicate some documents and never score
-        others.  Lineage rows without an ``n_parts`` metric (written before
-        it was recorded) are not checked."""
+        others.  When no lineage row records an ``n_parts`` metric (rows
+        written before it was recorded), the count the input was staged with
+        (``_staging_meta.json``) is checked instead."""
         rows = (self.lineage()
                 .select("part_id", F.col("metrics")["n_parts"].alias("n_parts"))
                 .distinct().collect())
         recorded = {int(r["n_parts"]) for r in rows if r["n_parts"] is not None}
+        if rows and not recorded and os.path.exists(self.staging_meta):
+            with open(self.staging_meta) as f:
+                recorded = {json.load(f)["n_parts"]}
         if recorded - {self.n_parts}:
             raise ValueError(
                 f"{self.out_dir} was committed with n_parts="
@@ -132,13 +141,10 @@ class IncrementalRunner:
         layout would assign docs to the wrong parts.  (Resume semantics
         assume the same logical input across invocations, as lineage does.)
         """
-        import json
-
         staged = self._ref("staged_docs")
-        meta_path = os.path.join(self.out_dir, "_staging_meta.json")
         ok = os.path.exists(os.path.join(staged, "_SUCCESS"))
-        if ok and os.path.exists(meta_path):
-            with open(meta_path) as f:
+        if ok and os.path.exists(self.staging_meta):
+            with open(self.staging_meta) as f:
                 ok = json.load(f).get("n_parts") == self.n_parts
         else:
             ok = False
@@ -146,7 +152,7 @@ class IncrementalRunner:
             (docs.withColumn("_part", part_id_expr(self.n_parts))
                  .write.mode("overwrite").partitionBy("_part").parquet(staged))
             os.makedirs(self.out_dir, exist_ok=True)
-            with open(meta_path, "w") as f:
+            with open(self.staging_meta, "w") as f:
                 json.dump({"n_parts": self.n_parts}, f)
         return self.spark.read.parquet(staged)
 

@@ -169,8 +169,6 @@ def test_approx_percentiles_error_bound(spark, sf01_dir):
 def test_media_resize_and_frame_sample_plumbing(spark):
     """Frame-sample kernel: real Arrow dataflow, deterministic stub body,
     video fan-out shape exercised via synthetic video spans."""
-    import pytest as _pt
-
     from page_evaluator_spark.operators.media import sample_frames
 
     # synthetic video rows exercise the frame fan-out
@@ -190,10 +188,6 @@ def test_media_resize_and_frame_sample_plumbing(spark):
 
     n_a = 1 + _h.sha256(b"vid://a").digest()[2] % 300
     assert len(per_doc["v1"]) == (n_a + 29) // 30  # ceil(n_frames / 30)
-
-    # decode_stub=False raises the documented NotImplementedError
-    with _pt.raises(NotImplementedError):
-        sample_frames(vids, decode_stub=False)
 
 
 def test_ivf_ann_recall_and_plan_shape(spark, sf01_dir):

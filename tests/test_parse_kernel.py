@@ -6,15 +6,21 @@ title sets and the title helpers here are shared with the round-2/3 tests.
 
 from __future__ import annotations
 
+import json
 import random
+import subprocess
+import sys
 from collections import Counter
 
-from hypothesis import given, settings
+import pyarrow as pa
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from page_evaluator_spark.operators import parse
 from page_evaluator_spark.operators.parse import _fold_tokens, _parse_hocr
 
 from . import oracle
+from .conftest import REPO
 from .test_native_parity import _ALPHABET
 
 # Titles HOCRToken.java:20-29 parses fine (well-formed per the Java split;
@@ -88,6 +94,96 @@ def test_fold_tokens_matches_sequential(toks):
         # and folding from i on yields that token first
         assert oracle.final_tokens(tokens[:i]) == folded[:k], (k, i)
         assert oracle.final_tokens(tokens[i:])[:1] == [folded[k]], (k, i)
+
+
+# A script that runs every declared kernel over the span rows on stdin (an
+# Arrow IPC stream) and reports its output rows and which of the modules
+# pa.array() would have imported are loaded.
+_KERNEL_IN_FRESH_PROCESS = """
+import json, sys
+import pyarrow as pa
+from page_evaluator_spark.operators.parse import ALL_COLUMNS, _make_parse_kernel
+from page_evaluator_spark.plans.pipeline import BRANCH_COLUMNS
+
+rb = pa.ipc.open_stream(sys.stdin.buffer.read()).read_next_batch()
+rows = {}
+for name, columns in {"all": ALL_COLUMNS, **BRANCH_COLUMNS}.items():
+    out = list(_make_parse_kernel(columns)(iter([rb])))
+    for b in out:
+        b.validate(full=True)
+    rows[name] = sum(b.num_rows for b in out)
+print(json.dumps({"rows": rows, "loaded": [m for m in ("pandas", "pyarrow.compute")
+                                          if m in sys.modules]}))
+"""
+
+
+def test_kernel_runs_without_pandas_or_pyarrow_compute():
+    """The kernel's output arrays are built from buffers: pa.array() would
+    import pandas and pyarrow.compute (~40 MB of every Python worker's peak
+    RSS).  Checked in a fresh process over every kind of span row."""
+    from page_evaluator_spark.corpus import make_hocr
+
+    spans = [
+        ("hocr", 0, "hocr", make_hocr([["Quality", "of-"], ["mercy", "\u00e9t\u00e9"]]), None),
+        ("txt", 0, "text", "plain w\u00f6rds \U0001f600 here\nnext-\nline", None),
+        ("html", 0, "html", "<html><body><p>" + "a paragraph of plain words " * 8
+         + "</p></body></html>", None),
+        ("media", 1, "image", None, "img://1"),
+        ("bad_title", 0, "hocr", make_hocr([["a", "b"]], bad_title_at=1), None),
+        ("null_kind", 3, None, "x", None),
+        ("zero", None, None, None, None),
+        ("blank", 0, "text", "  ", None),
+    ]
+    names = ["doc_id", "span_offset", "kind", "text", "media_ref"]
+    types = [pa.string(), pa.int32(), pa.string(), pa.string(), pa.string()]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(list(c), t) for c, t in zip(zip(*spans), types)], names=names)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, rb.schema) as w:
+        w.write_batch(rb)
+    proc = subprocess.run([sys.executable, "-c", _KERNEL_IN_FRESH_PROCESS],
+                          input=sink.getvalue().to_pybytes(), capture_output=True,
+                          cwd=str(REPO), timeout=120, check=True)
+    report = json.loads(proc.stdout.decode().splitlines()[-1])
+    assert report["loaded"] == [], report
+    assert len(set(report["rows"].values())) == 1, report["rows"]
+
+
+_TEXT = st.one_of(st.none(), st.text(), st.sampled_from(["", "\x00", "\U0001f600", "\u00e9"]))
+_INT32 = st.one_of(st.none(), st.integers(-2**31, 2**31 - 1))
+
+
+def _equal(built: pa.Array, expected: pa.Array) -> None:
+    built.validate(full=True)
+    assert built.type == expected.type
+    assert built.equals(expected), (built, expected)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_TEXT), st.lists(_INT32))
+@example([], [])
+@example([None, None], [None, None])
+@example(["", "\x00", None, "\U0001f600x", "\u00e9"], [0, None, -1])
+def test_buffer_builders_equal_pa_array(strings, ints):
+    _equal(parse._string_array(strings), pa.array(strings, pa.string()))
+    _equal(parse._int32_array(ints), pa.array(ints, pa.int32()))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.lists(_TEXT, max_size=4))),
+       st.lists(st.one_of(st.none(), st.dictionaries(st.text(), _TEXT, max_size=3))))
+@example([], [])
+@example([None], [None])
+@example([[], None, [""], ["\x00", None]], [{}, None, {"": None}, {"\U0001f600": "\x00"}])
+def test_list_and_map_builders_equal_pa_array(lists, dicts):
+    _equal(parse._string_list_array(lists), pa.array(lists, pa.list_(pa.string())))
+    _equal(parse._map_array(dicts),
+           pa.array([None if d is None else list(d.items()) for d in dicts],
+                    pa.map_(pa.string(), pa.string())))
+    # the kernel's per-token props: a list of maps parallel to the tokens
+    _equal(parse._list_array([len(dicts)], parse._map_array(dicts)),
+           pa.array([[None if d is None else list(d.items()) for d in dicts]],
+                    pa.list_(pa.map_(pa.string(), pa.string()))))
 
 
 _SPANS = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"

@@ -152,17 +152,13 @@ def test_empty_parts_commit_zero_counts(spark, tmp_path):
     assert sum(r["n_docs"] for r in lineage.values()) == 3
 
 
-def test_resume_over_lineage_of_the_previous_format(spark, docs, tmp_path):
-    """An output root whose lineage rows were built by createDataFrame (and
-    carry only the pipeline metric) resumes and reads cleanly; the resume
-    reads the lineage once to find its pending parts."""
+def _recommit_in_previous_format(spark, runner, parts):
+    """Re-commit `parts`' lineage rows the way they used to be built: by
+    createDataFrame, with only the pipeline metric (no n_parts)."""
     from page_evaluator_spark.plans.incremental import LINEAGE_SCHEMA
     from page_evaluator_spark.sources.catalog import Catalog
 
-    out = str(tmp_path / "out")
-    runner = IncrementalRunner(spark, out, n_parts=6)
-    first = runner.run(docs, run_id="old", max_parts=2)
-    for part in first:  # re-commit those parts' lineage the way it used to be built
+    for part in parts:
         counts = runner.part_counts[part]
         old_row = spark.createDataFrame(
             [("old", part, counts["n_docs"], counts["n_tokens"], None,
@@ -170,6 +166,18 @@ def test_resume_over_lineage_of_the_previous_format(spark, docs, tmp_path):
             LINEAGE_SCHEMA,
         ).withColumn("committed_at", F.current_timestamp())
         Catalog(spark).append(old_row, runner.lineage_ref, run_id=f"part{part}")
+
+
+def test_resume_over_lineage_of_the_previous_format(spark, docs, tmp_path):
+    """An output root whose lineage rows were built by createDataFrame (and
+    carry only the pipeline metric) resumes and reads cleanly; the resume
+    reads the lineage once to find its pending parts."""
+    from page_evaluator_spark.sources.catalog import Catalog
+
+    out = str(tmp_path / "out")
+    runner = IncrementalRunner(spark, out, n_parts=6)
+    first = runner.run(docs, run_id="old", max_parts=2)
+    _recommit_in_previous_format(spark, runner, first)
 
     reads = []
     real_read = Catalog.read
@@ -207,9 +215,12 @@ def test_resume_with_a_different_n_parts_is_refused(spark, docs, tmp_path):
     """Part ids mean different doc sets under another part count: resuming a
     root committed with n_parts=4 under n_parts=8 would score some documents
     twice and others never, so it raises before any work; resuming with the
-    recorded count still completes, each document scored once."""
+    recorded count still completes, each document scored once.  A lineage of
+    the previous format (no n_parts metric) is checked against the count the
+    input was staged with."""
     out = str(tmp_path / "out")
-    first = IncrementalRunner(spark, out, n_parts=4).run(docs, run_id="r1", max_parts=2)
+    runner = IncrementalRunner(spark, out, n_parts=4)
+    first = runner.run(docs, run_id="r1", max_parts=2)
     assert len(first) == 2
 
     other = IncrementalRunner(spark, out, n_parts=8)
@@ -217,6 +228,11 @@ def test_resume_with_a_different_n_parts_is_refused(spark, docs, tmp_path):
         other.pending_parts()
     with pytest.raises(ValueError, match="n_parts=4"):
         other.run(docs, run_id="r2")
+
+    _recommit_in_previous_format(spark, runner, first)
+    assert other.lineage().where(F.col("metrics")["n_parts"].isNotNull()).count() == 0
+    with pytest.raises(ValueError, match="n_parts=4"):
+        other.pending_parts()
 
     resumed = IncrementalRunner(spark, out, n_parts=4)
     assert sorted(first + resumed.run(docs, run_id="r3")) == [0, 1, 2, 3]

@@ -138,21 +138,64 @@ def test_repeated_substrings_single_explode_in_final_plan(spark):
     assert "ExistingRDD" in plan
 
 
+def _ddl(schema) -> str:
+    """`schema` as DDL text that spells out every nullability, nested ones
+    included (NOT NULL marks a non-nullable field, element or map value)."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    def typ(t):
+        if isinstance(t, ArrayType):
+            return f"array<{typ(t.elementType)}{'' if t.containsNull else ' NOT NULL'}>"
+        if isinstance(t, MapType):
+            return (f"map<{typ(t.keyType)},{typ(t.valueType)}"
+                    f"{'' if t.valueContainsNull else ' NOT NULL'}>")
+        return t.simpleString()
+
+    return ", ".join(f"{f.name} {typ(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+                     for f in schema.fields)
+
+
 def test_parse_kernel_output_is_column_pruned(spark):
-    """r7: each uncached pipeline branch declares only the parsed columns it
-    consumes, so the Arrow boundary never ships the other ten (guide §4.1).
-    Pinned on the scores branch: the Python node is MapInArrow and its
-    output is exactly (doc_id, kind, text)."""
+    """Each uncached pipeline branch declares only the parsed columns it
+    consumes, so the Arrow boundary ships nothing else (guide §4.1).  The
+    kernel emits one row per span — `tokens` carries a span's words, or
+    only their count `n_words` when the branch reads no text — and a native
+    posexplode_outer turns them back into the parsed relation, whose
+    schema (nullability included) and the outputs' are unchanged."""
+    import re
+
     from page_evaluator_spark.plans.pipeline import evaluate_documents
 
     docs = spark.createDataFrame(
         [(1, [("text", "some words here", None, 0)])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    plan = plan_string(evaluate_documents(docs).page_scores)
-    assert "MapInArrow" in plan, plan
-    import re
-    args = re.search(r"MapInArrow .*?#\d+, \[([^\]]*)\]", plan)
-    assert args, plan
-    cols = [c.split("#")[0].strip() for c in args.group(1).split(",")]
-    assert cols == ["doc_id", "kind", "text"], cols
+    out = evaluate_documents(docs)
+    crossing = {
+        "page_scores": ["doc_id", "kind", "tokens"],
+        "spans_out": ["doc_id", "span_offset", "pos", "kind", "tokens", "media_ref"],
+        "quarantine": ["doc_id", "span_offset", "kind", "error", "n_words"],
+    }
+    for branch, expected in crossing.items():
+        plan = plan_string(getattr(out, branch))
+        args = re.search(r"MapInArrow .*?#\d+, \[([^\]]*)\]", plan)
+        assert args, plan
+        cols = [c.split("#")[0].strip() for c in args.group(1).split(",")]
+        assert cols == expected, (branch, cols)
+        assert re.search(r"Generate posexplode\(", plan), plan
+
+    assert {b: _ddl(getattr(out, b).schema) for b in (*crossing, "parsed")} == {
+        "page_scores": "doc_id string, token_count int, punct int, "
+                       "number_objects int, single_letter int, ge4_repeated int, "
+                       "len_gt1_nonalpha int, clean_short int, clean_all_alpha int, "
+                       "clean_one_nonalpha int, clean_two_nonalpha int, "
+                       "clean_3plus_nonalpha int, correctable_score float, "
+                       "quality_score float",
+        "spans_out": "doc_id string, ord int NOT NULL, kind string, text string, "
+                     "media_ref string",
+        "quarantine": "doc_id string, span_ord int, error string",
+        "parsed": "doc_id string, span_offset int, pos int, kind string, "
+                  "text string, media_ref string, line_idx int, tok_idx int, "
+                  "page_id string, ocr_engine string, ocr_capabilities array<string>, "
+                  "props map<string,string>, error string",
+    }
