@@ -5,8 +5,8 @@ entry(spark)  — flagship: full OCR page-evaluation pipeline over a span-table
 queries()     — one entry per implemented operator family (SURVEY.md §2.6) +
                 the training-data-pipeline extras (dedup/similarity/textstats/
                 media/streaming) + the OCR pipeline itself.
-oracle_sql()  — DuckDB twins for every SQL-expressible query (identical
-                aliases/types); non-SQL-expressible ops are rows-only.
+oracle_sql()  — a DuckDB twin for every query (identical aliases/types);
+                the OCR pipeline's twins read golden parquet.
 """
 
 from __future__ import annotations

@@ -75,10 +75,7 @@ EXTRA_HEADLINE = [
                                # are meaningless)
     "corpus_snapshot_diff",    # r6, sf-scaled (documents)
     "eval_split_assignment",   # r6, sf-scaled (documents)
-    "embedding_int8_quantize",  # r6, sf-scaled (embeddings); the
-                                # fixed-corpus media_content_dedup /
-                                # interleaved_pack / filter_ablation are
-                                # NOT timed, same policy as above
+    "embedding_int8_quantize",  # r6, sf-scaled (embeddings)
 ]
 
 

@@ -47,13 +47,10 @@ PR_FXP = 1 << 40
 # Distinct-edge count at or below which the recurrence runs driver-side (a
 # dimension-sized collect — the |sources|²-bounded copy graphs this engine
 # feeds PageRank are ≤ a few hundred edges; a 10-round distributed loop over
-# 20 nodes is ~30 jobs of pure scheduling overhead).  Parameterised for
-# cluster deployments; 4096 edges ≈ 150 KB collected, the same dimension-
-# collect class as the mixture shard stats (≤ |sources|×256 rows).
-import os as _os
-
-_DRIVER_EDGE_LIMIT = int(_os.environ.get("PAGEEVAL_PR_DRIVER_EDGE_LIMIT",
-                                         "4096"))
+# 20 nodes is ~30 jobs of pure scheduling overhead).  4096 edges ≈ 150 KB
+# collected, the same dimension-collect class as the mixture shard stats
+# (≤ |sources|×256 rows).
+_DRIVER_EDGE_LIMIT = 4096
 
 
 def pagerank_int(edges: DataFrame, src: str = "src", dst: str = "dst",

@@ -39,7 +39,6 @@ from itertools import accumulate
 import pyarrow as pa
 import regex
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_KINDS = ("image", "table", "figure")
 TEXT_KINDS = ("text", "hocr", "html")
@@ -454,17 +453,13 @@ def _make_parse_kernel(columns: tuple[str, ...]):
 
 
 def explode_docs(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans) → one row per span, natively (skew-splitting explode)."""
-    return docs.select(
-        "doc_id",
-        F.explode_outer("spans").alias("span"),
-    ).select(
-        "doc_id",
-        F.col("span.offset").alias("span_offset"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-    )
+    """(doc_id, spans) → one row per span, natively (skew-splitting explode).
+
+    SQL text, not Column objects, for the same reason as parse_spans: each
+    Column call is a py4j round trip paid per plan build."""
+    return (docs.selectExpr("doc_id", "explode_outer(spans) AS span")
+            .selectExpr("doc_id", "span.offset AS span_offset", "span.kind AS kind",
+                        "span.text AS text", "span.media_ref AS media_ref"))
     # explode_outer keeps zero-span docs as a null-span row; the parse kernel
     # turns those into kind='empty' markers so every doc_id survives into the
     # parsed relation (and therefore gets a score row) without any extra join.

@@ -164,42 +164,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
 """
 
 
-def window_order_gaps(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (o.withColumn("prev_date", F.lag("o_orderdate").over(w))
-            .where(F.col("prev_date").isNotNull())
-            .select("o_custkey", "o_orderkey",
-                    F.datediff("o_orderdate", "prev_date").alias("gap_days")))
-
-
-_WINDOW_GAPS_SQL = """
-SELECT o_custkey, o_orderkey, CAST(datediff('day', prev_date, o_orderdate) AS INT) AS gap_days
-FROM (SELECT o_custkey, o_orderkey, o_orderdate,
-             lag(o_orderdate) OVER (PARTITION BY o_custkey
-                                    ORDER BY o_orderdate, o_orderkey) AS prev_date
-      FROM orders) WHERE prev_date IS NOT NULL
-"""
-
-
-def window_running_revenue(spark, sf_dir):
-    """Cumulative-sum window: running order total per customer over time."""
-    o = load(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return o.select("o_custkey", "o_orderkey",
-                    F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"))
-
-
-_RUNNING_SQL = """
-SELECT o_custkey, o_orderkey,
-       round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
-FROM orders
-"""
-
-
 def grouping_sets_orders(spark, sf_dir):
     """Explicit GROUPING SETS (distinct from rollup/cube) via Spark SQL."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
@@ -223,131 +187,6 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
 """
 
 
-def rollup_orders(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
-    return (o.rollup("o_orderstatus", "o_orderpriority")
-            .agg(F.count("*").alias("n_orders"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
-
-_ROLLUP_SQL = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-       round(sum(o_totalprice), 2) AS total_price
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-def cube_events_dow(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    dow = (F.dayofweek("ts") - 1).cast("int").alias("dow")  # 0 = Sunday, both engines
-    return (ev.select("event_type", dow, "value")
-            .cube("event_type", "dow")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")))
-
-
-_CUBE_SQL = """
-SELECT event_type, CAST(date_part('dow', ts) AS INT) AS dow,
-       count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events GROUP BY CUBE (event_type, CAST(date_part('dow', ts) AS INT))
-"""
-
-
-def set_ops_customers(spark, sf_dir):
-    """INTERSECT + EXCEPT, tagged and unioned."""
-    c = load(spark, sf_dir, "customer")
-    rich = c.where(F.col("c_acctbal") > 9000).select("c_custkey")
-    auto = c.where(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
-    both = rich.intersect(auto).withColumn("tag", F.lit("both"))
-    only_rich = rich.exceptAll(auto).withColumn("tag", F.lit("only_rich"))
-    return both.unionByName(only_rich).select("tag", "c_custkey")
-
-
-_SETOPS_SQL = """
-SELECT 'both' AS tag, c_custkey FROM
-  (SELECT c_custkey FROM customer WHERE c_acctbal > 9000
-   INTERSECT SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')
-UNION ALL
-SELECT 'only_rich' AS tag, c_custkey FROM
-  (SELECT c_custkey FROM customer WHERE c_acctbal > 9000
-   EXCEPT ALL SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')
-"""
-
-
-def anti_customers_no_orders(spark, sf_dir):
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    return (c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-            .select("c_custkey", "c_name"))
-
-
-_ANTI_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
-def semi_suppliers_active(spark, sf_dir):
-    s = load(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 5000)
-    li = load(spark, sf_dir, "lineitem")
-    return (s.join(li, s.s_suppkey == li.l_suppkey, "left_semi")
-            .select("s_suppkey", "s_name"))
-
-
-_SEMI_SQL = """
-SELECT s_suppkey, s_name FROM supplier
-WHERE s_acctbal > 5000
-  AND EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-"""
-
-
-def top_parts_by_price(spark, sf_dir):
-    p = load(spark, sf_dir, "part")
-    return (p.orderBy(F.col("p_retailprice").desc(), "p_partkey")
-            .limit(15)
-            .select("p_partkey", "p_name", F.round("p_retailprice", 2).alias("retailprice")))
-
-
-_TOPPARTS_SQL = """
-SELECT p_partkey, p_name, round(p_retailprice, 2) AS retailprice
-FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 15
-"""
-
-
-def orders_by_year_quarter(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
-    return (o.groupBy(F.year("o_orderdate").cast("int").alias("yr"),
-                      F.quarter("o_orderdate").cast("int").alias("qtr"))
-            .agg(F.count("*").alias("n_orders"),
-                 F.round(F.avg("o_totalprice"), 4).alias("avg_price")))
-
-
-_YEARQTR_SQL = """
-SELECT CAST(date_part('year', o_orderdate) AS INT) AS yr,
-       CAST(date_part('quarter', o_orderdate) AS INT) AS qtr,
-       count(*) AS n_orders, round(avg(o_totalprice), 4) AS avg_price
-FROM orders GROUP BY 1, 2
-"""
-
-
-def pivot_event_counts(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    kinds = ["click", "view", "signup", "purchase", "error"]
-    return (ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-            .pivot("event_type", kinds).count()
-            .na.fill(0, kinds))
-
-
-_PIVOT_SQL = """
-SELECT date_trunc('day', ts) AS day,
-       CAST(coalesce(sum(CASE WHEN event_type = 'click' THEN 1 END), 0) AS BIGINT) AS click,
-       CAST(coalesce(sum(CASE WHEN event_type = 'view' THEN 1 END), 0) AS BIGINT) AS view,
-       CAST(coalesce(sum(CASE WHEN event_type = 'signup' THEN 1 END), 0) AS BIGINT) AS signup,
-       CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 END), 0) AS BIGINT) AS purchase,
-       CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 END), 0) AS BIGINT) AS error
-FROM events GROUP BY 1
-"""
-
-
 # ---------------------------------------------------------------------------
 # Events: time ops, as-of join, sessionization, extraction
 # ---------------------------------------------------------------------------
@@ -368,57 +207,6 @@ SELECT event_type,
        round(quantile_cont(value, 0.9), 6) AS p90,
        round(quantile_cont(value, 0.99), 6) AS p99
 FROM events GROUP BY event_type
-"""
-
-
-def events_approx_distinct(spark, sf_dir):
-    """Approximate distinct users (HLL) vs exact, per event type — approx is
-    engine-specific so the check is rows-only, but the exact column and the
-    bounded relative error are asserted in tests."""
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-            .agg(F.approx_count_distinct("user_id").alias("approx_users"),
-                 F.countDistinct("user_id").alias("exact_users")))
-
-
-def events_approx_percentiles(spark, sf_dir):
-    """Sketch-based percentiles (approx_percentile / KLL-ish) — engine-specific
-    like HLL, so rows-only; the error bound vs exact percentiles is asserted
-    in tests (the 100 TB path: sketches merge map-side, exact quantiles
-    don't)."""
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-            .agg(F.percentile_approx("value", F.lit(0.5), F.lit(1000)).alias("ap50"),
-                 F.percentile_approx("value", F.lit(0.99), F.lit(1000)).alias("ap99")))
-
-
-def events_distinct_users(spark, sf_dir):
-    """Exact distinct-count twin of events_approx_distinct (VERDICT r1 #5:
-    the exact column deserves its own oracle-checked row)."""
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("exact_users")))
-
-
-_DISTINCT_USERS_SQL = """
-SELECT event_type, count(DISTINCT user_id) AS exact_users
-FROM events GROUP BY event_type
-"""
-
-
-def events_daily_stats(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"),
-                       "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.avg("value"), 4).alias("avg_value"),
-                 F.round(F.sum("value"), 2).alias("sum_value")))
-
-
-_DAILY_SQL = """
-SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
-       round(avg(value), 4) AS avg_value, round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1, 2
 """
 
 
@@ -564,70 +352,6 @@ FROM sess GROUP BY user_id, session_id
 """
 
 
-def events_session_window(spark, sf_dir):
-    """Native session windows (F.session_window, Spark's SessionWindowing
-    operator — the same primitive Structured Streaming uses for session
-    aggregation).  Semantics: events within a 30-min gap merge; window end =
-    last event + gap.  Oracle re-derives sessions with lag + running sum."""
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("win"))
-            .agg(F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select("user_id",
-                    F.col("win.start").alias("session_start"),
-                    F.col("win.end").alias("session_end"),
-                    "n_events", "sum_value"))
-
-
-_SESSION_WINDOW_SQL = """
-WITH flagged AS (
-  SELECT user_id, ts, value,
-         CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_sess
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, value,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM flagged
-)
-SELECT user_id, min(ts) AS session_start,
-       max(ts) + INTERVAL 30 MINUTE AS session_end,
-       count(*) AS n_events, round(sum(value), 2) AS sum_value
-FROM sess GROUP BY user_id, sid
-"""
-
-
-def events_hopping_window(spark, sf_dir):
-    """Hopping (sliding) windows: 7-day windows advancing by 1 day — each
-    event lands in 7 overlapping windows (F.window with a slide).  Oracle
-    re-derives windows via generate_series + range join."""
-    ev = load(spark, sf_dir, "events")
-    return (ev.groupBy(F.window("ts", "7 days", "1 day").alias("win"), "event_type")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("win.start").alias("win_start"),
-                    F.col("win.end").alias("win_end"), "event_type", "n", "sum_value"))
-
-
-# Spark aligns hopping windows to the epoch: a timestamp t belongs to windows
-# starting at every slide boundary in (t - size, t].  Re-derived with a
-# 7-step series per event (size/slide = 7).
-_HOPPING_SQL = """
-WITH e AS (
-  SELECT event_type, value,
-         to_timestamp(floor(epoch(ts) / 86400) * 86400)::TIMESTAMP AS day0
-  FROM events
-), expanded AS (
-  SELECT event_type, value,
-         day0 - to_days(CAST(k AS INT)) AS win_start
-  FROM e CROSS JOIN (SELECT unnest(range(0, 7)) AS k)
-)
-SELECT win_start, win_start + INTERVAL 7 DAY AS win_end, event_type,
-       count(*) AS n, round(sum(value), 2) AS sum_value
-FROM expanded GROUP BY 1, 2, 3
-"""
-
-
 def events_props_extract(spark, sf_dir):
     """Regex extraction from the JSON-ish props column + agg."""
     ev = load(spark, sf_dir, "events")
@@ -643,43 +367,6 @@ SELECT event_type, count(*) AS n,
        round(avg(k), 4) AS avg_k, max(k) AS max_k
 FROM (SELECT event_type, CAST(regexp_extract(props, '[0-9]+', 0) AS INT) AS k FROM events)
 GROUP BY event_type
-"""
-
-
-def events_props_json(spark, sf_dir):
-    """Native JSON parsing (from_json) of the props column; the oracle parses
-    the same values with a regexp — values must agree exactly."""
-    ev = load(spark, sf_dir, "events")
-    k = F.from_json("props", "k INT").getField("k")
-    return (ev.withColumn("k", k)
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum("k").cast("bigint").alias("sum_k"),
-                 F.min("k").alias("min_k")))
-
-
-_PROPS_JSON_SQL = """
-SELECT event_type, count(*) AS n,
-       CAST(sum(k) AS BIGINT) AS sum_k, min(k) AS min_k
-FROM (SELECT event_type, CAST(regexp_extract(props, '[0-9]+', 0) AS INT) AS k FROM events)
-GROUP BY event_type
-"""
-
-
-def explode_doc_words(spark, sf_dir):
-    """Explode/unnest + top-20 word counts."""
-    d = load(spark, sf_dir, "documents")
-    return (d.select(F.explode(F.split("text", " ")).alias("word"))
-            .where(F.length("word") > 0)
-            .groupBy("word").agg(F.count("*").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "word").limit(20))
-
-
-_EXPLODE_SQL = """
-SELECT word, count(*) AS cnt
-FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-WHERE length(word) > 0
-GROUP BY word ORDER BY cnt DESC, word LIMIT 20
 """
 
 
@@ -842,16 +529,6 @@ FROM hits
 """
 
 
-def doc_fingerprints(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", TS.fingerprint(F.col("text")).alias("fp"))
-
-
-_FP_SQL = r"""
-SELECT doc_id, md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS fp FROM documents
-"""
-
-
 def source_quality_rollup(spark, sf_dir):
     """Per-source reputation rollup (r4) — the domain-level quality table a
     curation pipeline maintains to drive source blocklists: doc counts, mean
@@ -919,25 +596,9 @@ _SOURCE_ROLLUP_SQL = ("WITH " + _ROLLUP_BASE_CTE + _ROLLUP_SELECT
                       + " ORDER BY source\n")
 
 
-def knn_label_accuracy(spark, sf_dir):
-    """Embedding-space eval (r4): a 10-NN majority-vote classifier over the
-    labeled embeddings — held-out queries (vec_id >= 400) classified by their
-    nearest corpus neighbors' labels (ties → smallest label).  The quality
-    probe a pipeline runs on embeddings before trusting them for semantic
-    dedup/retrieval."""
-    from .operators.similarity import brute_force_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    corpus = e.where(F.col("vec_id") < 400)
-    held = (e.where(F.col("vec_id") >= 400)
-            .select(F.col("vec_id").alias("query_id"), "embedding"))
-    nn = brute_force_topk(corpus, held, k=10)
-    return _knn_verdict(nn, corpus, e)
-
-
 def _knn_verdict(nn, corpus, e):
-    """Majority vote + truth join shared by the brute-force and IVF-PQ kNN
-    evals: neighbors → label votes → top vote (ties → smallest label) →
+    """Majority vote + truth join of the kNN eval over any neighbor set:
+    neighbors → label votes → top vote (ties → smallest label) →
     correctness flag per held-out query."""
     votes = (nn.join(corpus.select(F.col("vec_id").alias("neighbor_id"),
                                    F.col("label").alias("nbr_label")), "neighbor_id")
@@ -960,7 +621,7 @@ def knn_label_accuracy_ivfpq(spark, sf_dir):
     labeled set stops being small enough to brute-force.  The index
     (centroids, codebooks, codes) is derived from the corpus only; held-out
     queries probe nprobe cells and score via ADC LUTs.  Deterministic →
-    exact twin; tests/test_similarity assert agreement with the
+    exact twin; tests/test_round5_fixes.py asserts agreement with the
     brute-force verdict."""
     e = load(spark, sf_dir, "embeddings")
     corpus = e.where(F.col("vec_id") < 400)
@@ -969,34 +630,6 @@ def knn_label_accuracy_ivfpq(spark, sf_dir):
     nn = SIM.ivfpq_ann_topk(corpus, held, k=10, n_cells=16, nprobe=4,
                             kmeans_rounds=1, m=8, n_codes=16)
     return _knn_verdict(nn, corpus, e)
-
-
-_KNN_SQL = """
-WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec, label FROM embeddings WHERE vec_id < 400),
-held AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv, label AS true_label
-         FROM embeddings WHERE vec_id >= 400),
-pairs AS (
-  SELECT h.query_id, c.vec_id AS neighbor_id, c.label AS nbr_label,
-         {cos} AS cos
-  FROM held h CROSS JOIN corpus c WHERE c.vec_id <> h.query_id
-), topk AS (
-  SELECT query_id, nbr_label FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rank
-    FROM pairs) WHERE rank <= 10
-), votes AS (
-  SELECT query_id, nbr_label, count(*) AS v FROM topk GROUP BY 1, 2
-), pred AS (
-  SELECT query_id, nbr_label AS pred_label FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY v DESC, nbr_label) AS rn
-    FROM votes) WHERE rn = 1
-)
-SELECT h.query_id, h.true_label, p.pred_label,
-       h.true_label = p.pred_label AS correct
-FROM held h JOIN pred p USING (query_id)
-ORDER BY h.query_id
-"""
 
 
 def lexicon_match_rate(spark, sf_dir):
@@ -1038,17 +671,6 @@ GROUP BY doc_id
 # ---------------------------------------------------------------------------
 # Deduplication family
 # ---------------------------------------------------------------------------
-
-def dedup_exact(spark, sf_dir):
-    return (DD.exact_dedup_groups(load(spark, sf_dir, "documents"))
-            .orderBy("content_hash"))
-
-
-_DEDUP_EXACT_SQL = r"""
-SELECT md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g')))) AS content_hash,
-       count(*) AS n_docs, min(doc_id) AS canonical_id
-FROM documents GROUP BY 1 ORDER BY content_hash
-"""
 
 
 # shared shingle CTE (3-gram token shingles over normalized text)
@@ -1779,12 +1401,9 @@ FROM enriched
 
 
 def _curation_flags(d):
-    """The ONE definition of the four curation-filter predicates (length,
-    quality, language, exact-duplicate), shared by `curation_filter_audit`
-    and `filter_ablation` so their "same thresholds" attestation is
-    structural, not a by-hand copy that could drift silently (code-review
-    r6 pass 3).  Returns doc_id, lang, n_tokens, quality plus the four
-    nullable boolean flags."""
+    """The four curation-filter predicates (length, quality, language,
+    exact-duplicate) of `curation_filter_audit`.  Returns doc_id, lang,
+    n_tokens, quality plus the four nullable boolean flags."""
     from pyspark.sql import Window
 
     from .operators.dedup import normalized_text
@@ -1807,8 +1426,7 @@ def curation_filter_audit(spark, sf_dir):
     """Composed curation filter chain with an audit column: first failing
     stage (too_short → low_quality → lang → exact-duplicate) or NULL when
     kept — the shape of a real corpus-cleaning pass, one scan + one window.
-    Flag predicates come from `_curation_flags` (shared with
-    `filter_ablation`)."""
+    Flag predicates come from `_curation_flags`."""
     flags = _curation_flags(load(spark, sf_dir, "documents"))
     reason = (F.when(F.col("f_short"), "too_short")
               .when(F.col("f_quality"), "low_quality")
@@ -1819,47 +1437,7 @@ def curation_filter_audit(spark, sf_dir):
             .select("doc_id", "n_tokens", "quality", "drop_reason", "kept"))
 
 
-def filter_ablation(spark, sf_dir):
-    """Filter-ablation matrix (r6): INDEPENDENT pass/fail flags for the four
-    curation filters (length, quality, language, exact-duplicate), cubed
-    into the full overlap lattice — the release-engineering view of how much
-    each filter removes ALONE and how the removals overlap.  The
-    first-match-wins `curation_filter_audit` undercounts overlap by
-    construction (a doc that is both short and low-quality only ever shows
-    as `too_short`); ablation is how pipelines actually tune thresholds.
-
-    Flag expressions come from the shared `_curation_flags` helper, so the
-    two queries attest the same thresholds by construction.  Scale shape: the only corpus-sized work is
-    the flag projection plus the ONE duplicate-canonicalization shuffle the
-    audit already pays; the cube itself aggregates four booleans — partial
-    (map-side) aggregation collapses each task to ≤ 3^4 = 81 grouping rows
-    before the exchange, so the shuffle is O(tasks), not O(docs), at any
-    corpus size.  grouping() indicators disambiguate NULL-as-aggregated
-    from a genuinely NULL flag on both engines.
-
-    The output flag columns are cast BOOLEAN -> INT: a nullable boolean
-    round-trips through pandas as object-dtype None on Spark but float NaN
-    on DuckDB, which any pandas-based comparator (the driver's included)
-    sees as different values; nullable INT narrows to float64/NaN on BOTH
-    engines."""
-    flags = _curation_flags(load(spark, sf_dir, "documents"))
-    cube = (flags.cube("f_short", "f_quality", "f_lang", "f_dup")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-                 F.grouping("f_short").cast("int").alias("g_short"),
-                 F.grouping("f_quality").cast("int").alias("g_quality"),
-                 F.grouping("f_lang").cast("int").alias("g_lang"),
-                 F.grouping("f_dup").cast("int").alias("g_dup")))
-    return cube.select(
-        *[F.col(c).cast("int").alias(c)
-          for c in ("f_short", "f_quality", "f_lang", "f_dup")],
-        "n_docs", "n_tokens", "g_short", "g_quality", "g_lang", "g_dup")
-
-
-# The ONE SQL definition of the curation-filter flag lattice, shared by the
-# audit and ablation twins exactly as _curation_flags is shared by their
-# Spark queries — a threshold edit lands in both twins or neither
-# (code-review r6 pass 3).
+# SQL twin of _curation_flags: the four flags per doc as a `flags` CTE.
 _FILTER_FLAGS_CTE = r"""
 WITH base AS (
   SELECT doc_id, lang,
@@ -1889,21 +1467,6 @@ WITH base AS (
          doc_id <> canonical_id AS f_dup
   FROM q
 )
-"""
-
-_FILTER_ABLATION_SQL = _FILTER_FLAGS_CTE + r"""
-SELECT CAST(f_short AS INT) AS f_short,
-       CAST(f_quality AS INT) AS f_quality,
-       CAST(f_lang AS INT) AS f_lang,
-       CAST(f_dup AS INT) AS f_dup,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(grouping(f_short) AS INT) AS g_short,
-       CAST(grouping(f_quality) AS INT) AS g_quality,
-       CAST(grouping(f_lang) AS INT) AS g_lang,
-       CAST(grouping(f_dup) AS INT) AS g_dup
-FROM flags
-GROUP BY CUBE (f_short, f_quality, f_lang, f_dup)
 """
 
 
@@ -2202,91 +1765,6 @@ SELECT t.n_docs, p.total_tokens, t.n_sources, t.n_langs, t.dup_docs,
        round(t.qfx / (t.n_docs * 1000000.0), 4) AS avg_quality,
        p.p50_tokens, p.p90_tokens
 FROM totals t CROSS JOIN pct p
-"""
-
-
-def doc_repetition_stats(spark, sf_dir):
-    """Gopher/RefinedWeb-style repetition signals: duplicate-line fraction
-    (per-row native array ops — zero shuffle) and top-bigram fraction (the
-    scalable relational shape: pipelined bigram explode → partial-agg count →
-    per-doc max/sum).  `kept` applies the classic thresholds (dup lines < 30%,
-    top bigram < 20%).
-
-    At 100 TB the bigram stream exists only inside map tasks; the shuffle
-    carries partially-combined (doc, bigram) counts, then one row per doc.
-    """
-    d = load(spark, sf_dir, "documents")
-    lines = F.filter(F.transform(F.split("text", "\n"), F.trim),
-                     lambda x: x != F.lit(""))
-    n_lines = F.size(lines)
-    dup_line_frac = F.when(
-        n_lines > 0,
-        F.round((n_lines - F.size(F.array_distinct(lines)))
-                / n_lines.cast("double"), 6)).otherwise(0.0)
-    base = d.select("doc_id", dup_line_frac.alias("dup_line_frac"))
-
-    toks = F.regexp_extract_all(F.lower("text"), F.lit(TS.PORTABLE_TOKEN_RE), 0)
-    # guard: Spark sequence(0, -1) counts DOWN — short docs need an empty array
-    windows = F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                          lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)))
-    bigrams = F.when(F.size(toks) >= 2, windows).otherwise(
-        F.array().cast("array<string>"))
-    bg = (d.select("doc_id", F.explode(bigrams).alias("bg"))
-          .groupBy("doc_id", "bg").agg(F.count("*").alias("n"))
-          .groupBy("doc_id")
-          .agg(F.max("n").alias("top_bigram_n"),
-               F.sum("n").cast("bigint").alias("n_bigrams")))
-    out = (base.join(bg, "doc_id", "left")
-           .select("doc_id", "dup_line_frac",
-                   F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-                   F.coalesce("top_bigram_n", F.lit(0)).cast("bigint")
-                   .alias("top_bigram_n")))
-    top_frac = F.when(F.col("n_bigrams") > 0,
-                      F.round(F.col("top_bigram_n") / F.col("n_bigrams")
-                              .cast("double"), 6)).otherwise(0.0)
-    return (out.withColumn("top_bigram_frac", top_frac)
-            .withColumn("kept", (F.col("dup_line_frac") < 0.3)
-                        & (F.col("top_bigram_frac") < 0.2))
-            .orderBy("doc_id"))
-
-
-_REPETITION_SQL = r"""
-WITH lines AS (
-  SELECT doc_id,
-         list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
-                     x -> x <> '') AS ls
-  FROM documents
-), linestats AS (
-  SELECT doc_id,
-         CASE WHEN len(ls) > 0
-              THEN round((len(ls) - len(list_distinct(ls))) / CAST(len(ls) AS DOUBLE), 6)
-              ELSE 0.0 END AS dup_line_frac
-  FROM lines
-), toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N} \t\n\x0B\f\r]') AS tk
-  FROM documents
-), bg AS (
-  SELECT doc_id, tk[i] || ' ' || tk[i+1] AS bg
-  FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks WHERE len(tk) >= 2)
-), bgc AS (
-  SELECT doc_id, bg, count(*) AS n FROM bg GROUP BY 1, 2
-), bgstats AS (
-  SELECT doc_id, max(n) AS top_bigram_n, sum(n) AS n_bigrams FROM bgc GROUP BY 1
-)
-SELECT d.doc_id, l.dup_line_frac,
-       CAST(coalesce(b.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       CAST(coalesce(b.top_bigram_n, 0) AS BIGINT) AS top_bigram_n,
-       CASE WHEN coalesce(b.n_bigrams, 0) > 0
-            THEN round(b.top_bigram_n / CAST(b.n_bigrams AS DOUBLE), 6)
-            ELSE 0.0 END AS top_bigram_frac,
-       (l.dup_line_frac < 0.3 AND
-        CASE WHEN coalesce(b.n_bigrams, 0) > 0
-             THEN round(b.top_bigram_n / CAST(b.n_bigrams AS DOUBLE), 6)
-             ELSE 0.0 END < 0.2) AS kept
-FROM documents d
-JOIN linestats l USING (doc_id)
-LEFT JOIN bgstats b USING (doc_id)
-ORDER BY d.doc_id
 """
 
 
@@ -2614,7 +2092,7 @@ def _knn_ivfpq_sql(k: int = 10, n_cells: int = 16, nprobe: int = 4, m: int = 8,
     """Generated twin of knn_label_accuracy_ivfpq: the _ivfpq_sql machinery
     with the index CTEs (v / kmeans / codebooks / enc) built over the
     corpus split only and probes drawn from the held-out split, then the
-    same vote/majority/truth tail as _KNN_SQL."""
+    vote/majority/truth tail of _knn_verdict."""
     dim = dim or EMBEDDING_DIM
     sub = dim // m
     c = _pq_ctes(m, sub)
@@ -2727,7 +2205,7 @@ ORDER BY vec_id
 
 
 # ---------------------------------------------------------------------------
-# OCR pipeline itself (generated corpus — non-SQL-expressible; rows-only)
+# OCR pipeline itself (generated corpus)
 # ---------------------------------------------------------------------------
 
 def _corpus_df(spark):
@@ -3050,16 +2528,8 @@ FROM events GROUP BY 1, 2
 # Registry
 # ---------------------------------------------------------------------------
 
-# Registry policy (VERDICT r3 #1): QUERIES holds EXACTLY 50 entries — the
-# driver's CORRECTNESS window — so every registry row is attested in the
-# round artifact; there is no unattested tail inside the registry anymore.
-# Everything else lives in EXTRA_QUERIES below: pytest runs BOTH dicts
-# against their oracles every suite run (tests/test_queries.py), and
-# EXTRA_LAST_GREEN records each parked entry's most recent driver-artifact-
-# green round so the rotation is auditable (ADVICE r3).  Rotation: each
-# round, new/plan-changed queries enter the window; the displaced entries
-# are the ones with the most recent green artifacts and a sibling still in
-# the window covering the same operator family.
+# QUERIES is the driver window: exactly 50 entries.  EXTRA_QUERIES holds the
+# five queries outside it that bench.py / bench_extra.py time.
 QUERIES: dict[str, Query] = {
     # -- new / plan-changed this round (r6) --
     "exact_substring_dedup": exact_substring_dedup,  # NEW: Lee et al. removal
@@ -3125,86 +2595,10 @@ QUERIES: dict[str, Query] = {
     "ann_cosine_topk": ann_cosine_topk,
 }
 
-# Parked outside the driver window this round — every one pytest-oracle-
-# checked each suite run.  Values = last round whose driver artifact showed
-# the entry hash-green (or rows-green for the two by-design sketch queries).
-EXTRA_LAST_GREEN: dict[str, str] = {
-    "events_session_window": "r3",   # sibling in window: events_sessionize
-    "events_hopping_window": "r3",   # sibling in window: events_sessionize
-    "cube_events_dow": "r3",         # sibling in window: grouping_sets_orders
-    "explode_doc_words": "r3",
-    "set_ops_customers": "r3",       # union/intersect/except family, thrice-green
-    "events_distinct_users": "r3",   # sibling in window: events_value_percentiles
-    "doc_fingerprints": "r3",        # md5 normalized-text key; sibling in
-                                     # window: source_quality_rollup
-    "dedup_exact": "r3",             # md5-canonical logic also attested by
-                                     # curation_filter_audit + source_quality_rollup
-    "dedup_minhash_pairs": "r4",     # siblings in window: dedup_cross_corpus
-                                     # + curation_source_prior (both run the
-                                     # same banded-MinHash candidate stage)
-    "semi_suppliers_active": "r4",   # join family (broadcast/hash/anti/range)
-                                     # still in window
-    "knn_label_accuracy": "r5",      # sibling in window: the IVF-PQ-backed
-                                     # knn_label_accuracy_ivfpq (rotated in
-                                     # r6) runs the same eval harness
-    "pivot_event_counts": "r5",      # agg/pivot family; sibling in window:
-                                     # grouping_sets_orders
-    "q5_region_revenue": "r4",       # join-agg family in window: q1/q3/
-                                     # broadcast_part_revenue
-    "doc_repetition_stats": "r4",    # text-stats family in window:
-                                     # doc_quality, doc_lang_id + the new
-                                     # corpus_report rollup
-    "anti_customers_no_orders": "r2",
-    "window_order_gaps": "r2",
-    "events_daily_stats": "r2",
-    "window_running_revenue": "r2",
-    "rollup_orders": "r2",
-    "orders_by_year_quarter": "r2",
-    "top_parts_by_price": "r2",
-    "events_props_json": "r2",
-    "events_approx_percentiles": "rows-only by design (HLL/KLL sketches)",
-    "events_approx_distinct": "rows-only by design (HLL/KLL sketches)",
-    "filter_ablation": "new r6 (pytest-oracle only; rotation candidate r7;"
-                       " sibling in window: curation_filter_audit attests"
-                       " the same flag expressions first-match-wins)",
-    "corpus_snapshot_diff": "new r6 (pytest-oracle only; rotation candidate"
-                            " r7 — release-engineering audit, md5-only"
-                            " full-outer join)",
-    "embedding_int8_quantize": "new r6 (pytest-oracle only; rotation"
-                               " candidate r7 — scalar-quantization sibling"
-                               " of the windowed IVF-PQ stack)",
-    "eval_split_assignment": "new r6 (pytest-oracle only; rotation candidate"
-                             " r7 — content-hash train/val/test split:"
-                             " exact dups cannot straddle the eval"
-                             " boundary)",
-}
 
 EXTRA_QUERIES: dict[str, Query] = {
-    "events_session_window": events_session_window,
-    "set_ops_customers": set_ops_customers,
-    "events_distinct_users": events_distinct_users,
-    "doc_fingerprints": doc_fingerprints,
-    "dedup_exact": dedup_exact,
     "dedup_minhash_pairs": dedup_minhash_pairs,
-    "semi_suppliers_active": semi_suppliers_active,
-    "knn_label_accuracy": knn_label_accuracy,
-    "pivot_event_counts": pivot_event_counts,
     "q5_region_revenue": q5_region_revenue,
-    "doc_repetition_stats": doc_repetition_stats,
-    "events_hopping_window": events_hopping_window,
-    "cube_events_dow": cube_events_dow,
-    "explode_doc_words": explode_doc_words,
-    "anti_customers_no_orders": anti_customers_no_orders,
-    "window_order_gaps": window_order_gaps,
-    "events_daily_stats": events_daily_stats,
-    "window_running_revenue": window_running_revenue,
-    "rollup_orders": rollup_orders,
-    "orders_by_year_quarter": orders_by_year_quarter,
-    "top_parts_by_price": top_parts_by_price,
-    "events_props_json": events_props_json,
-    "events_approx_percentiles": events_approx_percentiles,
-    "events_approx_distinct": events_approx_distinct,
-    "filter_ablation": filter_ablation,
     "corpus_snapshot_diff": corpus_snapshot_diff,
     "embedding_int8_quantize": embedding_int8_quantize,
     "eval_split_assignment": eval_split_assignment,
@@ -3218,34 +2612,15 @@ def oracle_sql() -> dict[str, str]:
         "q5_region_revenue": _Q5_SQL,
         "broadcast_part_revenue": _BROADCAST_SQL,
         "window_top_orders_per_cust": _WINDOW_TOPK_SQL,
-        "window_order_gaps": _WINDOW_GAPS_SQL,
-        "window_running_revenue": _RUNNING_SQL,
         "grouping_sets_orders": _GROUPING_SETS_SQL,
-        "rollup_orders": _ROLLUP_SQL,
-        "cube_events_dow": _CUBE_SQL,
-        "set_ops_customers": _SETOPS_SQL,
-        "anti_customers_no_orders": _ANTI_SQL,
-        "semi_suppliers_active": _SEMI_SQL,
-        "top_parts_by_price": _TOPPARTS_SQL,
-        "orders_by_year_quarter": _YEARQTR_SQL,
-        "pivot_event_counts": _PIVOT_SQL,
-        "events_daily_stats": _DAILY_SQL,
         "events_value_percentiles": _PERCENTILES_SQL,
-        "events_distinct_users": _DISTINCT_USERS_SQL,
         "events_asof_last_signup": _ASOF_SQL,
         "events_range_join": _RANGE_JOIN_SQL,
         "events_sessionize": _SESSION_SQL,
-        "events_session_window": _SESSION_WINDOW_SQL,
-        "events_hopping_window": _HOPPING_SQL,
         "events_props_extract": _PROPS_SQL,
-        "events_props_json": _PROPS_JSON_SQL,
-        "explode_doc_words": _EXPLODE_SQL,
         "doc_quality": _QUALITY_SQL,
-        "doc_repetition_stats": _REPETITION_SQL,
         "doc_lang_id": _langid_sql(),
-        "doc_fingerprints": _FP_SQL,
         "lexicon_match_rate": _lexicon_sql(),
-        "dedup_exact": _DEDUP_EXACT_SQL,
         "dedup_minhash_pairs": _MINHASH_SQL,
         "ngram_jaccard": _JACCARD_SQL,
         "dedup_clusters": _CLUSTERS_SQL,
@@ -3260,7 +2635,6 @@ def oracle_sql() -> dict[str, str]:
         "tfidf_top_terms": _TFIDF_SQL,
         "doc_pii_scan": _PII_SQL,
         "curation_filter_audit": _FILTER_AUDIT_SQL,
-        "filter_ablation": _FILTER_ABLATION_SQL,
         "corpus_snapshot_diff": _SNAPSHOT_DIFF_SQL,
         "embedding_int8_quantize": _INT8_QUANT_SQL,
         "eval_split_assignment": _EVAL_SPLIT_SQL,
@@ -3278,7 +2652,6 @@ def oracle_sql() -> dict[str, str]:
         "knn_label_accuracy_ivfpq": _knn_ivfpq_sql(),
         "events_funnel": _FUNNEL_SQL,
         "source_quality_rollup": _SOURCE_ROLLUP_SQL,
-        "knn_label_accuracy": _KNN_SQL.format(cos=_cosine_sql("h.qv", "c.vec")),
         "ivfpq_ann_topk": _ivfpq_sql(),
         "media_frame_sample": _media_frames_sql(),
         "ocr_page_scores": _OCR_SCORES_SQL,
@@ -3289,12 +2662,7 @@ def oracle_sql() -> dict[str, str]:
         "interleaved_datasheet": _DATASHEET_SQL,
         "streaming_events_daily": _STREAMING_SQL,
         "streaming_click_to_purchase": _SS_JOIN_SQL,
-        # rows-only by design (the only 2 of the 78 queries):
-        # events_approx_distinct and events_approx_percentiles —
-        # engine-specific sketches (HLL / KLL)
-        # whose exact outputs no other engine reproduces; each carries an
-        # error-bound test in tests/ instead.  ocr_* twins are golden parquet
-        # derived from the pure-Python oracle (fixtures/make_goldens.py);
-        # everything else — including all ANN queries — is
-        # re-derived independently in DuckDB.
+        # ocr_* twins are golden parquet derived from the pure-Python oracle
+        # (fixtures/make_goldens.py); everything else, including all ANN
+        # queries, is re-derived independently in DuckDB.
     }

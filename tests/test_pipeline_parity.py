@@ -131,9 +131,8 @@ def test_cached_page_meta_and_token_props_equal_uncached(spark):
     assert meta == {0: "page_1", 2: "page_2"}
 
 
-def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
-    """Building page_scores over a parsed relation (no action) costs a few
-    dozen py4j commands — the Column-per-counter form took ~1,400.  Counted
+def _py4j_commands(monkeypatch, build):
+    """build() and the py4j commands this thread sent while it ran.  Counted
     at the py4j connection, so this guards driver plan-build cost without
     timing anything.  Only this thread's commands count: py4j's finalizer
     thread sends the detach commands of JavaObjects freed anywhere (earlier
@@ -143,10 +142,6 @@ def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
 
     from py4j.clientserver import ClientServerConnection
 
-    from page_evaluator_spark.operators.parse import parse_documents
-    from page_evaluator_spark.operators.score import score_pages
-
-    parsed = parse_documents(_hocr_docs(spark), columns=("doc_id", "kind", "text"))
     sent = []
     real = ClientServerConnection.send_command
     me = threading.get_ident()
@@ -157,7 +152,33 @@ def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
         return real(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    scores = score_pages(parsed)
-    monkeypatch.undo()
-    assert 0 < len(sent) <= 60, len(sent)
+    try:
+        out = build()
+    finally:
+        monkeypatch.undo()
+    return out, len(sent)
+
+
+def test_score_pages_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
+    """Building page_scores over a parsed relation (no action) costs a few
+    dozen py4j commands — the Column-per-counter form took ~1,400."""
+    from page_evaluator_spark.operators.parse import parse_documents
+    from page_evaluator_spark.operators.score import score_pages
+
+    parsed = parse_documents(_hocr_docs(spark), columns=("doc_id", "kind", "text"))
+    scores, n = _py4j_commands(monkeypatch, lambda: score_pages(parsed))
+    assert 0 < n <= 60, n
     assert scores.columns[:2] == ["doc_id", "token_count"]
+
+
+def test_parse_documents_plan_build_is_a_few_py4j_commands(spark, monkeypatch):
+    """Building the parse plan (explode, kernel, token explode; no action)
+    costs a few dozen py4j commands; with a Column-built explode_docs it
+    took 191."""
+    from page_evaluator_spark.operators.parse import parse_documents
+
+    docs = _hocr_docs(spark)
+    parsed, n = _py4j_commands(
+        monkeypatch, lambda: parse_documents(docs, columns=("doc_id", "kind", "text")))
+    assert 0 < n <= 90, n
+    assert parsed.columns == ["doc_id", "kind", "text"]

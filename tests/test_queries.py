@@ -1,7 +1,6 @@
 """Mirror of the driver's correctness gate: run every queries() entry on Spark
 and its oracle_sql() twin on DuckDB (sf0.01), compare row count + column names
-+ order-insensitive values.  Rows-only entries just have to run and return a
-stable schema.
++ order-insensitive values.
 """
 
 from __future__ import annotations
@@ -11,7 +10,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from page_evaluator_spark.queries import EXTRA_LAST_GREEN, EXTRA_QUERIES, QUERIES, oracle_sql
+from page_evaluator_spark.queries import EXTRA_QUERIES, QUERIES, oracle_sql
 
 # window + parked entries are both oracle-checked every run
 ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
@@ -159,7 +158,6 @@ def _compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str):
 
 ORACLE = oracle_sql()
 ORACLE_CHECKED = sorted(ORACLE)
-ROWS_ONLY = sorted(set(ALL_QUERIES) - set(ORACLE))
 
 
 def test_registry_is_exactly_the_driver_window():
@@ -167,9 +165,8 @@ def test_registry_is_exactly_the_driver_window():
     the registry at exactly 50 means every entry is attested each round."""
     assert len(QUERIES) == 50
     assert not set(QUERIES) & set(EXTRA_QUERIES)
-    assert set(EXTRA_QUERIES) == set(EXTRA_LAST_GREEN)
-    # every oracle key must correspond to a real query somewhere
-    assert set(ORACLE) <= set(ALL_QUERIES)
+    # every query has an oracle twin and every oracle key a query
+    assert set(ORACLE) == set(ALL_QUERIES)
 
 
 @pytest.mark.parametrize("name", ORACLE_CHECKED)
@@ -180,11 +177,3 @@ def test_query_vs_oracle(spark, ddb, sf01_dir, name):
     got = sdf.toPandas()
     exp = rel.df()
     _compare(got, exp, name)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_query_runs(spark, sf01_dir, name):
-    df = ALL_QUERIES[name](spark, sf01_dir)
-    n = df.count()
-    assert n >= 0
-    assert len(df.columns) > 0

@@ -39,8 +39,6 @@ KEEP = {
         "full kernel schema that the parse parity tests check column subsets of",
     f"{PACKAGE}.operators.parse:TEXT_KINDS":
         "span kinds the parse tests enumerate",
-    f"{PACKAGE}.queries:EXTRA_LAST_GREEN":
-        "audit record of the parked queries, checked against EXTRA_QUERIES",
 }
 
 
