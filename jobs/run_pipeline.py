@@ -65,11 +65,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.lexicon:
         from page_evaluator_spark.operators.parse import parse_documents
-        from page_evaluator_spark.plans.pipeline import BRANCH_COLUMNS
 
         lex = catalog.read(args.lexicon)
-        parsed = parse_documents(docs, repartition=args.repartition,
-                                 columns=BRANCH_COLUMNS["lexicon_match_rates"])
+        parsed = parse_documents(docs, repartition=args.repartition)
         # the rates cover the whole input on every invocation, so a resume
         # replaces the table instead of appending a second copy
         rates = page_match_rates(parsed, lex)

@@ -13,9 +13,6 @@ Input column contract: the trimmed, hyphen-joined, NFC, non-empty token text
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .textnorm import clean_token_sql, sql_string
 
 # Java patterns (OCRPage.java:16-19); CANON_EQ dropped per NFC rule.  The
@@ -43,11 +40,12 @@ def category_sql(tok: str = "text") -> str:
     """Token text (the SQL expression ``tok``) → category, as SQL text
     (OCRPage.java:64-121, exact cascade order).
 
-    The one definition of the cascade: ``category_expr`` and ``score_pages``
-    both use this text, and building it costs no py4j round trip.  RLIKE is
-    find() semantics; the first three patterns are ^…\\z-anchored (true
-    matches() equivalence, see above) and the repeated-chars pattern is
-    deliberately unanchored (find(), OCRPage.java:82-86).
+    The one definition of the cascade: ``score_pages`` uses this text (a
+    Column is ``F.expr(category_sql(...))``), and building it costs no py4j
+    round trip.  RLIKE is find() semantics; the first three patterns are
+    ^…\\z-anchored (true matches() equivalence, see above) and the
+    repeated-chars pattern is deliberately unanchored (find(),
+    OCRPage.java:82-86).
     """
     norm = f"lower({tok})"  # OCRPage.java:53 (ROOT-locale intent)
     clean = clean_token_sql(norm)  # OCRPage.java:54,140-145
@@ -65,11 +63,6 @@ def category_sql(tok: str = "text") -> str:
         f" WHEN {non_alpha} = 2 THEN 'clean_two_nonalpha'"                          # :114-116
         " ELSE 'clean_3plus_nonalpha' END"                                          # :118-120
     )
-
-
-def category_expr(tok: str = "text") -> Column:
-    """The cascade over the column (or SQL expression) ``tok`` as a Column."""
-    return F.expr(category_sql(tok))
 
 
 # Correctable/quality scores over the per-doc counters (OCRPageStats.java:

@@ -5,11 +5,13 @@ per-row Python UDFs, per BASELINE.json input_hint).  Everything downstream
 (classification, aggregation, scoring) is native Catalyst.
 
 Output shape: ONE row per span.  A span's final tokens cross the boundary as
-one Arrow ``list<string>`` (line/tok indices and title props as parallel
-lists, when declared); 'page', 'error', 'empty' and media spans are marker
-rows.  ``parse_spans`` turns them into the token-grained PARSED_SCHEMA
+one Arrow ``list<string>``; 'page', 'error', 'empty' and media spans are
+marker rows.  ``parse_spans`` turns them into the token-grained parsed
 relation with a native ``posexplode_outer``: per-token rows would repeat
 doc_id/kind/offset for every word through the boundary (~3x the bytes).
+The kernel has two shapes: the span rows (SPAN_COLUMNS, all that scoring,
+spans_out and quarantine read) and those plus the hOCR page metadata and
+per-token title props (META_COLUMNS), which only page_meta/token_props read.
 Output arrays are built from buffers (``pa.Array.from_buffers``): ``pa.array``
 would import pandas and ``pyarrow.compute`` into every Python worker.
 
@@ -41,42 +43,18 @@ import regex
 from pyspark.sql import DataFrame
 
 MEDIA_KINDS = ("image", "table", "figure")
-TEXT_KINDS = ("text", "hocr", "html")
 
-# Output relation of the parse stage.  kind: 'word' (a final token),
-# media pass-through ('image'/'table'/'figure'), 'page' (per-parsed-span
-# metadata), 'error' (quarantine).  pos = 0-based emit position within the
-# span (words) / the span itself (media) — (span_offset, pos) is the total
-# order that defines spans_out.  props = the word's hOCR title properties
-# (HOCRToken.java:20-38: split on ';', trailing empties dropped, each segment
-# Java-trimmed then split at its FIRST space); null for TXT tokens.
-PARSED_SCHEMA = (
-    "doc_id string, span_offset int, pos int, kind string, text string, "
-    "media_ref string, line_idx int, tok_idx int, "
-    "page_id string, ocr_engine string, ocr_capabilities array<string>, "
-    "props map<string,string>, error string"
-)
-
-# DDL type per PARSED_SCHEMA field, in schema order — the column-pruned
-# kernels (guide §4.1: an opaque Python function ships every declared output
-# column through the Arrow boundary, so each pipeline branch declares only the
-# columns it consumes) build their subset schema from this.
-_FIELDS: dict[str, str] = {
-    "doc_id": "string",
-    "span_offset": "int",
-    "pos": "int",
-    "kind": "string",
-    "text": "string",
-    "media_ref": "string",
-    "line_idx": "int",
-    "tok_idx": "int",
-    "page_id": "string",
-    "ocr_engine": "string",
-    "ocr_capabilities": "array<string>",
-    "props": "map<string,string>",
-    "error": "string",
-}
-ALL_COLUMNS: tuple[str, ...] = tuple(_FIELDS)
+# The parsed relation.  kind: 'word' (a final token), media pass-through
+# ('image'/'table'/'figure'), 'page' (per-parsed-span metadata), 'error'
+# (quarantine), 'empty' (a doc or TXT span with no tokens).  pos = 0-based
+# emit position within the span (words) / the span itself (media) —
+# (span_offset, pos) is the total order that defines spans_out.
+SPAN_COLUMNS = ("doc_id", "span_offset", "pos", "kind", "text", "media_ref", "error")
+# carried hOCR metadata, never scored: the 'page' row's page_id / ocr_engine /
+# ocr_capabilities, and a word's title properties (HOCRToken.java:20-38:
+# split on ';', trailing empties dropped, each segment Java-trimmed then
+# split at its FIRST space); props is null for TXT tokens.
+META_COLUMNS = ("page_id", "ocr_engine", "ocr_capabilities", "props")
 
 # --- TXT path (TxtPage.java:24,41-54) --------------------------------------
 # Java \s / \S here are ASCII-only (no UNICODE_CHARACTER_CLASS).
@@ -134,11 +112,9 @@ def _title_props(title: str) -> dict[str, str]:
 
 def _parse_hocr(
     xml_text: str,
-) -> tuple[list[str], list[bool], list[dict[str, str]], list[int],
-           list[int], str, str, list[str]]:
-    """→ (token_texts, is_last_on_line flags, per-token title props,
-    per-token line indices, per-token within-line indices, page_id, engine,
-    capabilities).
+) -> tuple[list[str], list[bool], list[dict[str, str]], str, str, list[str]]:
+    """→ (token_texts, is_last_on_line flags, per-token title props, page_id,
+    engine, capabilities).
 
     Raises ValueError on anything the reference turns into PageParserException
     or a crash (missing ocr_page → NPE, HOCRPage.java:53-61; malformed title
@@ -167,21 +143,14 @@ def _parse_hocr(
     texts: list[str] = []
     last: list[bool] = []
     props: list[dict[str, str]] = []
-    lines: list[int] = []
-    toks: list[int] = []
-    li = -1
     for line in (e for e in page.iter() if e is not page and e.get("class") == "ocr_line"):
         words = [e for e in line.iter() if e is not line and e.get("class") == "ocrx_word"]
         n = len(words)  # zero-word lines skipped, HOCRTokenIterator.java:60-82
-        if n:
-            li += 1
         for i, w in enumerate(words):
             props.append(_title_props(w.get("title", "")))  # HOCRToken.java:20-29
             texts.append("".join(w.itertext()))  # getTextContent, HOCRToken.java:40-42
             last.append(i == n - 1)  # HOCRTokenIterator.java:45
-            lines.append(li)
-            toks.append(i)
-    return texts, last, props, lines, toks, page_id, engine, caps.split(" ")
+    return texts, last, props, page_id, engine, caps.split(" ")
 
 
 # --- hyphen fold with provenance (OCRPage.java:38-49) -------------------------
@@ -194,10 +163,9 @@ def _fold_tokens(texts: list[str], is_last: list[bool]) -> tuple[list[str], list
     consumes the NEXT token; the consumed token never joins on its own and
     the joined result is not re-checked (no chains).
 
-    Returns parallel lists (token_texts, src_idxs); callers index any
-    per-source-token payload (line/tok provenance, hOCR title props) by
-    src_idxs.  Fast path for spans with no join candidates (all TXT spans,
-    most hOCR spans).
+    Returns parallel lists (token_texts, src_idxs); callers index the
+    per-source-token hOCR title props by src_idxs.  Fast path for spans
+    with no join candidates (all TXT spans, most hOCR spans).
     """
     n = len(texts)
     if n == 0:
@@ -305,91 +273,66 @@ def _map_array(dicts: list[dict[str, str] | None]) -> pa.Array:
 
 
 # The kernel's output: one row per span.  A word row carries its span's final
-# tokens as `tokens` (when `text` is declared; else only their count,
-# `n_words`), with line_idx / tok_idx / props as lists parallel to them; its
-# `pos` is null.  Marker rows ('page', 'error', 'empty', media) have no lists.
-_PER_TOKEN = {"text": ("tokens", "array<string>"),
-              "line_idx": ("line_idx", "array<int>"),
-              "tok_idx": ("tok_idx", "array<int>"),
-              "props": ("props", "array<map<string,string>>")}
-# per-span values of a row, in tuple order
-_ROW = ("doc_id", "span_offset", "pos", "kind", "media_ref", "page_id",
-        "ocr_engine", "ocr_capabilities", "error", "n_words", "n_props")
-
-
-def _span_columns(columns: tuple[str, ...]) -> list[tuple[str, str]]:
-    """(name, DDL type) of the kernel's output columns for `columns`."""
-    out = [_PER_TOKEN.get(c, (c, _FIELDS[c])) for c in columns]
-    if "text" not in columns:
-        out.append(("n_words", "int"))
-    return out
+# tokens as `tokens` (and, in the meta shape, their title props as a parallel
+# `props` list); its `pos` is null.  Marker rows ('page', 'error', 'empty',
+# media) have no lists.
+_SPAN_SCHEMA = ("doc_id string, span_offset int, pos int, kind string, "
+                "tokens array<string>, media_ref string, error string")
+_META_SCHEMA = (", page_id string, ocr_engine string, "
+                "ocr_capabilities array<string>, props array<map<string,string>>")
 
 
 class _SpanRows:
     """One output batch: the span rows plus the flat per-token values their
-    lists slice (only the declared extras are collected)."""
+    lists slice."""
 
-    __slots__ = ("rows", "tokens", "line_idx", "tok_idx", "props")
+    __slots__ = ("rows", "tokens", "props")
 
     def __init__(self) -> None:
         self.rows: list[tuple] = []
         self.tokens: list[str] = []
-        self.line_idx: list[int] = []
-        self.tok_idx: list[int] = []
         self.props: list[dict[str, str]] = []
 
     def marker(self, doc_id, span_offset, pos, kind, media_ref=None,
                page_id=None, engine=None, caps=None, error=None) -> None:
-        self.rows.append((doc_id, span_offset, pos, kind, media_ref, page_id,
-                          engine, caps, error, None, None))
+        self.rows.append((doc_id, span_offset, pos, kind, media_ref, error,
+                          page_id, engine, caps, None, None))
 
     def words(self, doc_id, span_offset: int, toks: list[str],
-              lines: list[int] | None, tok_idxs: list[int] | None,
               props: list[dict] | None) -> None:
-        """The row of a span's k > 0 final tokens (None extras: undeclared,
-        or no props on a TXT span)."""
+        """The row of a span's k > 0 final tokens (props None: the span
+        shape, or a TXT span)."""
         k = len(toks)
         self.rows.append((doc_id, span_offset, None, "word", None, None, None,
                           None, None, k, None if props is None else k))
         self.tokens += toks
-        self.line_idx += lines or ()
-        self.tok_idx += tok_idxs or ()
         self.props += props or ()
 
-    def batch(self, names: list[str]) -> pa.RecordBatch:
-        col = dict(zip(_ROW, map(list, zip(*self.rows)))) if self.rows \
-            else dict.fromkeys(_ROW, [])
-        arrays = []
-        for n in names:
-            if n in ("span_offset", "pos", "n_words"):
-                arrays.append(_int32_array(col[n]))
-            elif n == "ocr_capabilities":
-                arrays.append(_string_list_array(col[n]))
-            elif n == "tokens":
-                arrays.append(_list_array(col["n_words"], _string_array(self.tokens)))
-            elif n in ("line_idx", "tok_idx"):
-                arrays.append(_list_array(col["n_words"],
-                                          _int32_array(getattr(self, n))))
-            elif n == "props":
-                arrays.append(_list_array(col["n_props"], _map_array(self.props)))
-            else:
-                arrays.append(_string_array(col[n]))
+    def batch(self, meta: bool) -> pa.RecordBatch:
+        (doc_id, span_offset, pos, kind, media_ref, error, page_id, engine,
+         caps, n_tokens, n_props) = zip(*self.rows) if self.rows else [()] * 11
+        arrays = [_string_array(doc_id), _int32_array(span_offset),
+                  _int32_array(pos), _string_array(kind),
+                  _list_array(n_tokens, _string_array(self.tokens)),
+                  _string_array(media_ref), _string_array(error)]
+        names = ["doc_id", "span_offset", "pos", "kind", "tokens", "media_ref", "error"]
+        if meta:
+            arrays += [_string_array(page_id), _string_array(engine),
+                       _string_list_array(caps),
+                       _list_array(n_props, _map_array(self.props))]
+            names += META_COLUMNS
         return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def _make_parse_kernel(columns: tuple[str, ...]):
+def _make_parse_kernel(meta: bool):
     """mapInArrow kernel factory over exploded span rows
-    (doc_id, span_offset, kind, text, media_ref), emitting the span rows of
-    `columns` (see _span_columns).
+    (doc_id, span_offset, kind, text, media_ref), emitting the span rows
+    (_SPAN_SCHEMA), plus the hOCR metadata and title props when `meta`.
 
-    Parsing work is IDENTICAL for every column subset (a branch that never
-    reads `props` still parses each hOCR title so error rows match); only
-    the materialization/serialization of the dropped columns is skipped.
+    Parsing work is IDENTICAL for both shapes (the span shape still parses
+    each hOCR title so error rows match); only the metadata columns are
+    skipped.
     """
-    want_props = "props" in columns
-    want_lines = "line_idx" in columns
-    want_toks = "tok_idx" in columns
-    names = [n for n, _ in _span_columns(columns)]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -414,14 +357,11 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                     continue
                 try:
                     if kind == "hocr":
-                        (texts, last, tprops, lines, toks,
-                         page_id, engine, caps) = _parse_hocr(text or "")
+                        texts, last, tprops, page_id, engine, caps = _parse_hocr(text or "")
                         out.marker(doc_id, span_offset, -1, "page", page_id=page_id,
                                    engine=engine, caps=caps)
                         folded_t, src = _fold_tokens(texts, last)
-                        out_lines = [lines[i] for i in src] if want_lines else None
-                        out_toks = [toks[i] for i in src] if want_toks else None
-                        out_props = [tprops[i] for i in src] if want_props else None
+                        out_props = [tprops[i] for i in src] if meta else None
                     elif kind in ("text", "html"):
                         if kind == "html":
                             # boilerplate strip first (functions/html.py frozen
@@ -431,9 +371,7 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                             text = extract_main_text(text or "")
                         tok_texts = _tokenize_txt(text or "")
                         # TxtToken.isLastTokenOnLine() == false always (TxtToken.java:19-21)
-                        folded_t, src = _fold_tokens(tok_texts, [False] * len(tok_texts))
-                        out_lines = [0] * len(folded_t) if want_lines else None
-                        out_toks = src if want_toks else None
+                        folded_t, _ = _fold_tokens(tok_texts, [False] * len(tok_texts))
                         out_props = None
                     else:
                         raise ValueError(f"Unsupported format: {kind}")  # Main.java:87-88
@@ -441,13 +379,12 @@ def _make_parse_kernel(columns: tuple[str, ...]):
                     out.marker(doc_id, span_offset, -1, "error", error=str(e))
                     continue
                 if folded_t:
-                    out.words(doc_id, span_offset, folded_t, out_lines, out_toks,
-                              out_props)
+                    out.words(doc_id, span_offset, folded_t, out_props)
                 elif kind in ("text", "html"):
                     # token-less TXT span: keep the doc_id alive in the parsed
                     # relation (hOCR spans already emit a 'page' metadata row)
                     out.marker(doc_id, span_offset, -1, "empty")
-            yield out.batch(names)
+            yield out.batch(meta)
 
     return kernel
 
@@ -466,43 +403,34 @@ def explode_docs(docs: DataFrame) -> DataFrame:
 
 
 def parse_spans(span_rows: DataFrame, repartition: int | None = None,
-                columns: tuple[str, ...] | None = None) -> DataFrame:
-    """Span rows → parsed relation (PARSED_SCHEMA) via Arrow-native mapInArrow.
+                columns: tuple[str, ...] = SPAN_COLUMNS) -> DataFrame:
+    """Span rows → the parsed relation's `columns` via Arrow-native mapInArrow.
 
     The kernel emits one row per span; a native posexplode_outer of its
     token lists yields the word rows (pos = the token's index in its span).
-
-    columns (default: every PARSED_SCHEMA field) prunes the kernel's OUTPUT
-    to the subset a branch consumes — Spark cannot see through the opaque
-    Python function, so undeclared columns would otherwise be computed and
-    shipped through the Arrow boundary just to be dropped (guide §4.1).
-    Parsing semantics (incl. which spans become error rows) are identical
-    for every subset.
+    `columns` is a plain projection of SPAN_COLUMNS + META_COLUMNS; the
+    kernel ships the metadata (the per-token props maps are most of the
+    bytes) only when one of META_COLUMNS is asked for.
     """
-    if columns is None:
-        columns = ALL_COLUMNS
-    else:  # normalize to PARSED_SCHEMA order (and reject unknown names)
-        unknown = set(columns) - set(ALL_COLUMNS)
-        if unknown:
-            raise ValueError(f"unknown parsed columns: {sorted(unknown)}")
-        columns = tuple(n for n in ALL_COLUMNS if n in set(columns))
+    unknown = set(columns) - set(SPAN_COLUMNS + META_COLUMNS)
+    if unknown:
+        raise ValueError(f"unknown parsed columns: {sorted(unknown)}")
+    meta = not set(columns).isdisjoint(META_COLUMNS)
     if repartition:
         # hash-spread spans (incl. a giant doc's spans) across the cluster
         span_rows = span_rows.repartition(repartition, "doc_id", "span_offset")
-    schema = ", ".join(f"{n} {ddl}" for n, ddl in _span_columns(columns))
-    spans = span_rows.mapInArrow(_make_parse_kernel(columns), schema=schema)
+    spans = span_rows.mapInArrow(_make_parse_kernel(meta),
+                                 schema=_SPAN_SCHEMA + (_META_SCHEMA if meta else ""))
     # marker rows have null lists: the outer explode keeps them as one row
     # with a null index and token.  SQL text, not Column objects: each Column
     # call is a py4j round trip, paid per plan (per part in IncrementalRunner)
-    words = "tokens" if "text" in columns else "array_repeat(0, n_words)"
-    per_row = {"pos": "coalesce(_i, pos)", "text": "_w", "line_idx": "line_idx[_i]",
-               "tok_idx": "tok_idx[_i]", "props": "props[_i]"}
-    return (spans.selectExpr("*", f"posexplode_outer({words}) AS (_i, _w)")
+    per_row = {"pos": "coalesce(_i, pos)", "text": "_w", "props": "props[_i]"}
+    return (spans.selectExpr("*", "posexplode_outer(tokens) AS (_i, _w)")
             .selectExpr(*(f"{per_row.get(c, c)} AS {c}" for c in columns)))
 
 
 def parse_documents(docs: DataFrame, repartition: int | None = None,
-                    columns: tuple[str, ...] | None = None) -> DataFrame:
+                    columns: tuple[str, ...] = SPAN_COLUMNS) -> DataFrame:
     """(doc_id, spans) documents table → parsed relation."""
     return parse_spans(explode_docs(docs), repartition=repartition,
                        columns=columns)

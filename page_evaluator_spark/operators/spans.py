@@ -54,9 +54,11 @@ def token_props(parsed: DataFrame) -> DataFrame:
     the parsed Properties map plus the two fields real hOCR users want —
     word confidence (x_wconf) and bounding box (bbox)."""
     # cast via double: real engines (Tesseract) emit fractional confidences
-    # like '85.3', which a direct string→int cast would NULL out
+    # like '85.3', which a direct string→int cast would NULL out.  try_cast:
+    # the value is free text the reference never parses, so a non-number or
+    # an out-of-int value is NULL, not an ANSI cast error that kills the job
     return (parsed.where((F.col("kind") == "word") & F.col("props").isNotNull())
             .select("doc_id", "span_offset", "pos", "text", "props",
-                    F.col("props").getItem("x_wconf").cast("double").cast("int")
+                    F.col("props").getItem("x_wconf").try_cast("double").try_cast("int")
                     .alias("x_wconf"),
                     F.col("props").getItem("bbox").alias("bbox")))

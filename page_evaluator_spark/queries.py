@@ -2531,25 +2531,18 @@ FROM events GROUP BY 1, 2
 # QUERIES is the driver window: exactly 50 entries.  EXTRA_QUERIES holds the
 # five queries outside it that bench.py / bench_extra.py time.
 QUERIES: dict[str, Query] = {
-    # -- new / plan-changed this round (r6) --
-    "exact_substring_dedup": exact_substring_dedup,  # NEW: Lee et al. removal
-    "knn_label_accuracy_ivfpq": knn_label_accuracy_ivfpq,  # rotated in (r5
-                                                 # named candidate)
-    "events_funnel": events_funnel,              # rotated in (r5 named
-                                                 # candidate)
-    "interleaved_datasheet": interleaved_datasheet,  # NEW: multimodal
-                                                 # release datasheet
-    "domain_mixture_sample": domain_mixture_sample,  # plan-changed r6:
-                                                 # two-phase sharded selection
-    "repeated_substrings": repeated_substrings,  # plan-changed r6: hash-first
-    # -- new r5 --
+    "exact_substring_dedup": exact_substring_dedup,
+    "knn_label_accuracy_ivfpq": knn_label_accuracy_ivfpq,
+    "events_funnel": events_funnel,
+    "interleaved_datasheet": interleaved_datasheet,
+    "domain_mixture_sample": domain_mixture_sample,
+    "repeated_substrings": repeated_substrings,
     "curation_source_prior": curation_source_prior,
     "graph_pagerank_dangling": graph_pagerank_dangling,
     "dsir_importance_sample": dsir_importance_sample,
     "html_block_scores": html_block_scores,
     "bpe_token_counts": bpe_token_counts,
     "corpus_report": corpus_report,
-    # -- new / plan-changed r4 --
     "semantic_dedup": semantic_dedup,
     "doc_model_quality": doc_model_quality,
     "doc_lm_score": doc_lm_score,
@@ -2557,11 +2550,10 @@ QUERIES: dict[str, Query] = {
     "graph_pagerank": graph_pagerank,
     "source_quality_rollup": source_quality_rollup,
     "ivfpq_ann_topk": ivfpq_ann_topk,
-    "ngram_jaccard": ngram_jaccard,              # r4: max_df hot-shingle cap
-    "ivf_ann_topk": ivf_ann_topk,                # r4: k-means-refined centroids
-    "dedup_clusters": dedup_clusters,            # r4: star-CC convergence rework sibling
-    "doc_boilerplate_strip": doc_boilerplate_strip,  # r4: NULL-text contract fix
-    # -- rotated back into the window r5 (last green r1/r2) --
+    "ngram_jaccard": ngram_jaccard,
+    "ivf_ann_topk": ivf_ann_topk,
+    "dedup_clusters": dedup_clusters,
+    "doc_boilerplate_strip": doc_boilerplate_strip,
     "events_props_extract": events_props_extract,
     # -- OCR pipeline goldens --
     "ocr_page_scores": ocr_page_scores,

@@ -319,8 +319,8 @@ def parse_hocr(page_xml: str) -> ParsedPage:
       absent → parse error (NPE → PageParserException, :59-61).
     - lines = descendants with class exactly 'ocr_line'; words = descendants
       with class exactly 'ocrx_word' per line, document order; zero-word lines
-      skipped (HOCRTokenIterator.java:60-82); is_last_on_line = tok_idx ==
-      line_token_count - 1 (:45).
+      skipped (HOCRTokenIterator.java:60-82); is_last_on_line = the word's
+      index in its line == line_token_count - 1 (:45).
     - every ocrx_word must carry a title whose ;-segments each contain a space
       (HOCRToken.java:22-29) — violation → StringIndexOutOfBounds → error here.
     """

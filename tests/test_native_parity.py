@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from page_evaluator_spark.functions.classify import category_expr
+from page_evaluator_spark.functions.classify import category_sql
 from page_evaluator_spark.functions.textnorm import clean_token_sql, tokenize_txt
 from page_evaluator_spark.operators.parse import _tokenize_txt
 
@@ -44,7 +44,7 @@ def test_native_classify_matches_oracle(spark):
     toks = [t for t in toks if t]
     df = spark.createDataFrame([(t,) for t in toks], "text string")
     got = {r["text"]: r["cat"]
-           for r in df.withColumn("cat", category_expr("text")).collect()}
+           for r in df.withColumn("cat", F.expr(category_sql("text"))).collect()}
     mismatches = [(t, got[t], oracle.classify_token(t))
                   for t in set(toks) if got[t] != oracle.classify_token(t)]
     assert mismatches == []
@@ -201,6 +201,7 @@ def test_cascade_sql_escaping_matches_oracle(spark):
                                           for i, s in enumerate(literals))).first()
     assert list(row) == literals
     df = spark.createDataFrame([(t,) for t in _ESCAPE_TOKENS], "text string")
-    got = {r["text"]: r["cat"] for r in df.withColumn("cat", category_expr("text")).collect()}
+    got = {r["text"]: r["cat"]
+           for r in df.withColumn("cat", F.expr(category_sql("text"))).collect()}
     assert {t: got[t] for t in _ESCAPE_TOKENS} == \
         {t: oracle.classify_token(t) for t in _ESCAPE_TOKENS}

@@ -1,6 +1,6 @@
 """The parse kernel (operators/parse.py) against the reference oracle
 (tests/oracle.py): the hyphen fold, seeded hOCR title fuzzing, and how
-malformed spans and column-pruned kernels turn into rows.  The good/bad
+malformed spans and both kernel shapes turn into rows.  The good/bad
 title sets and the title helpers here are shared with the round-2/3 tests.
 """
 
@@ -96,24 +96,23 @@ def test_fold_tokens_matches_sequential(toks):
         assert oracle.final_tokens(tokens[i:])[:1] == [folded[k]], (k, i)
 
 
-# A script that runs every declared kernel over the span rows on stdin (an
-# Arrow IPC stream) and reports its output rows and which of the modules
+# A script that runs both kernel shapes over the span rows on stdin (an
+# Arrow IPC stream) and reports their output rows and which of the modules
 # pa.array() would have imported are loaded.
 _KERNEL_IN_FRESH_PROCESS = """
 import json, sys
 import pyarrow as pa
-from page_evaluator_spark.operators.parse import ALL_COLUMNS, _make_parse_kernel
-from page_evaluator_spark.plans.pipeline import BRANCH_COLUMNS
+from page_evaluator_spark.operators.parse import _make_parse_kernel
 
 rb = pa.ipc.open_stream(sys.stdin.buffer.read()).read_next_batch()
+out = {meta: list(_make_parse_kernel(meta)(iter([rb]))) for meta in (False, True)}
+loaded = [m for m in ("pandas", "pyarrow.compute") if m in sys.modules]
 rows = {}
-for name, columns in {"all": ALL_COLUMNS, **BRANCH_COLUMNS}.items():
-    out = list(_make_parse_kernel(columns)(iter([rb])))
-    for b in out:
+for meta, batches in out.items():
+    for b in batches:
         b.validate(full=True)
-    rows[name] = sum(b.num_rows for b in out)
-print(json.dumps({"rows": rows, "loaded": [m for m in ("pandas", "pyarrow.compute")
-                                          if m in sys.modules]}))
+    rows[str(meta)] = [r for b in batches for r in b.select(range(7)).to_pylist()]
+print(json.dumps({"rows": rows, "loaded": loaded}))
 """
 
 
@@ -146,7 +145,10 @@ def test_kernel_runs_without_pandas_or_pyarrow_compute():
                           cwd=str(REPO), timeout=120, check=True)
     report = json.loads(proc.stdout.decode().splitlines()[-1])
     assert report["loaded"] == [], report
-    assert len(set(report["rows"].values())) == 1, report["rows"]
+    # the meta shape's first seven columns are the span shape
+    assert report["rows"]["False"] == report["rows"]["True"], report["rows"]
+    assert [r["kind"] for r in report["rows"]["False"]] == [
+        "page", "word", "word", "word", "image", "error", "error", "empty", "empty"]
 
 
 _TEXT = st.one_of(st.none(), st.text(), st.sampled_from(["", "\x00", "\U0001f600", "\u00e9"]))
@@ -218,13 +220,13 @@ def test_null_kind_or_offset_span_is_quarantined(spark):
         assert words == [("nk", "good"), ("nk", "words")]
 
 
-def test_pruned_kernels_keep_crash_parity(spark, monkeypatch):
-    """Every column subset the pipeline declares yields the same error, page
-    and empty rows as the full kernel — dropping `props` from the output
-    must not change which spans are quarantined."""
+def test_both_kernel_shapes_keep_crash_parity(spark):
+    """The span shape and the meta shape yield the same error, page and empty
+    rows: leaving `props` out of the output must not change which spans are
+    quarantined."""
     from page_evaluator_spark.corpus import make_hocr
-    from page_evaluator_spark.operators import parse
-    from page_evaluator_spark.plans import pipeline
+    from page_evaluator_spark.operators.parse import (
+        META_COLUMNS, SPAN_COLUMNS, parse_documents)
 
     good = make_hocr([["Quality", "of-"], ["mercy"]])
     docs = spark.createDataFrame([
@@ -237,31 +239,14 @@ def test_pruned_kernels_keep_crash_parity(spark, monkeypatch):
         ("zero", []),
     ], _SPANS)
 
-    declared = []
-    real = pipeline.parse_documents
+    def markers(columns):
+        return Counter(tuple(r[c] for c in SPAN_COLUMNS)
+                       for r in parse_documents(docs, columns=columns).collect()
+                       if r["kind"] in ("error", "page", "empty"))
 
-    def recording(d, repartition=None, columns=None):
-        declared.append(columns)
-        return real(d, repartition=repartition, columns=columns)
-
-    monkeypatch.setattr(pipeline, "parse_documents", recording)
-    out = pipeline.evaluate_documents(docs)
-    for branch in ("page_scores", "spans_out", "quarantine", "page_meta",
-                   "token_props", "parsed"):
-        getattr(out, branch)
-    assert len(declared) == 6 and None in declared, declared
-
-    marker_kinds = ("error", "page", "empty")
-    full = [r for r in real(docs).collect() if r["kind"] in marker_kinds]
-    assert {(r["doc_id"], r["kind"]) for r in full} == {
+    span = markers(SPAN_COLUMNS)
+    assert {(d, k) for d, _, _, k, *_ in span} == {
         ("bad_title", "error"), ("bad_title", "page"), ("no_page", "error"),
         ("unknown", "error"), ("unknown", "empty"), ("null_kind", "error"),
         ("zero", "empty")}
-    for columns in declared:
-        # (doc_id, kind) always; span_offset and error where the subset has them
-        keys = [c for c in ("doc_id", "kind", "span_offset", "error")
-                if c in (columns or parse.ALL_COLUMNS)]
-        got = Counter(tuple(r[c] for c in keys)
-                      for r in real(docs, columns=columns).collect()
-                      if r["kind"] in marker_kinds)
-        assert got == Counter(tuple(r[c] for c in keys) for r in full), columns
+    assert markers(SPAN_COLUMNS + META_COLUMNS) == span

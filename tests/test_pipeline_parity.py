@@ -102,8 +102,8 @@ def _hocr_docs(spark):
 
 
 def test_cached_parse_holds_only_the_writer_columns(spark):
-    """cache_parsed persists the union of the columns page_scores, spans_out
-    and quarantine read — seven of the thirteen PARSED_SCHEMA columns."""
+    """cache_parsed persists the span parse: the seven columns page_scores,
+    spans_out and quarantine read, without the hOCR metadata or props."""
     out = evaluate_documents(_hocr_docs(spark), cache_parsed=True)
     try:
         assert out.parsed.columns == ["doc_id", "span_offset", "pos", "kind", "text",
@@ -114,7 +114,7 @@ def test_cached_parse_holds_only_the_writer_columns(spark):
 
 def test_cached_page_meta_and_token_props_equal_uncached(spark):
     """page_meta / token_props read columns the cache does not hold; on
-    cached outputs they get their own pruned parse with the same rows."""
+    cached outputs they share their own metadata parse with the same rows."""
     docs = _hocr_docs(spark)
     cached = evaluate_documents(docs, cache_parsed=True)
     plain = evaluate_documents(docs)

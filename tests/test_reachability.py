@@ -33,12 +33,6 @@ KEEP = {
         "PDF/layout parse is part of the BASELINE north_rule input contract",
     f"{PACKAGE}.operators.skew:*":
         "skew helpers stay until the parse-width rule decides between them",
-    f"{PACKAGE}.functions.classify:category_expr":
-        "Column form of the cascade that the oracle parity tests compare",
-    f"{PACKAGE}.operators.parse:PARSED_SCHEMA":
-        "full kernel schema that the parse parity tests check column subsets of",
-    f"{PACKAGE}.operators.parse:TEXT_KINDS":
-        "span kinds the parse tests enumerate",
 }
 
 

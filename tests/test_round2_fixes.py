@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from page_evaluator_spark.functions.classify import category_expr
+from page_evaluator_spark.functions.classify import category_sql
 from page_evaluator_spark.operators.parse import (
     _parse_hocr,
     _title_props,
@@ -123,7 +123,7 @@ MATCHES_CASES = ["12 ", "12 ", "12\x85", "! ", "a ",
 def test_matches_semantics_native_oracle_agree(spark):
     df = spark.createDataFrame([(t,) for t in MATCHES_CASES], "text string")
     got = {r["text"]: r["cat"]
-           for r in df.withColumn("cat", category_expr("text")).collect()}
+           for r in df.withColumn("cat", F.expr(category_sql("text"))).collect()}
     for t in MATCHES_CASES:
         assert got[t] == oracle.classify_token(t), repr(t)
     # the three clean ones still hit their categories
@@ -161,7 +161,7 @@ def test_token_props_carried_end_to_end(spark):
     props = {(r["doc_id"], r["text"]): (dict(r["props"]), r["x_wconf"], r["bbox"])
              for r in out.token_props.collect()}
     # 'Qual-' is last-on-line + hyphen → joins 'ity'; surviving token carries
-    # the FIRST token's props (same provenance rule as line_idx/tok_idx)
+    # the FIRST token's props (the fold's src index)
     assert props[("p1", "Quality")] == (
         {"bbox": "1 2 3 4", "x_wconf": "85"}, 85, "1 2 3 4")
     assert props[("p1", "done")] == ({"bbox": "9 9 9 9", "x_wconf": "99"}, 99, "9 9 9 9")

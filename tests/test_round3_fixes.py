@@ -38,23 +38,28 @@ def test_native_title_map_crash_parity():
 
 def test_token_props_fractional_x_wconf(spark):
     """Tesseract emits fractional confidences ('85.3'); the convenience column
-    must not NULL them out (ADVICE r2 #5: cast via double)."""
+    must not NULL them out (ADVICE r2 #5: cast via double).  A value that is
+    no number, or out of int range, is NULL: under ANSI casts it would
+    otherwise fail the job over metadata the reference never parses."""
     from page_evaluator_spark.corpus import corpus_to_spark_df
-    from page_evaluator_spark.operators.parse import parse_documents
-    from page_evaluator_spark.operators.spans import token_props
+    from page_evaluator_spark.plans.pipeline import evaluate_documents
 
     xml = ('<html><body><div class="ocr_page" id="p1" title="bbox 0 0 9 9">'
            '<span class="ocr_line" title="bbox 0 0 9 9">'
            '<span class="ocrx_word" title="bbox 1 2 3 4; x_wconf 85.3">Word</span>'
            '<span class="ocrx_word" title="bbox 5 6 7 8; x_wconf 40">Next</span>'
+           '<span class="ocrx_word" title="bbox 1 2 3 4; x_wconf high">Odd</span>'
+           '<span class="ocrx_word" title="bbox 1 2 3 4; x_wconf 1e20">Huge</span>'
            '</span></div></body></html>')
     docs = corpus_to_spark_df(spark, [{
         "doc_id": "d1",
         "spans": [{"kind": "hocr", "text": xml, "media_ref": None, "offset": 0}]}])
-    rows = {r["text"]: r for r in token_props(parse_documents(docs)).collect()}
+    rows = {r["text"]: r for r in evaluate_documents(docs).token_props.collect()}
     assert rows["Word"]["x_wconf"] == 85  # double→int truncation, not NULL
     assert rows["Next"]["x_wconf"] == 40
     assert rows["Word"]["props"]["x_wconf"] == "85.3"  # raw value untouched
+    assert rows["Odd"]["x_wconf"] is None and rows["Huge"]["x_wconf"] is None
+    assert rows["Odd"]["props"]["x_wconf"] == "high"
 
 
 def test_golden_dir_is_package_relative():

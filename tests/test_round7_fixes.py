@@ -155,11 +155,11 @@ def _ddl(schema) -> str:
                      for f in schema.fields)
 
 
-def test_parse_kernel_output_is_column_pruned(spark):
-    """Each uncached pipeline branch declares only the parsed columns it
-    consumes, so the Arrow boundary ships nothing else (guide §4.1).  The
-    kernel emits one row per span — `tokens` carries a span's words, or
-    only their count `n_words` when the branch reads no text — and a native
+def test_parse_kernel_ships_two_shapes(spark):
+    """The kernel has two output shapes.  The three writers read the span
+    shape, whose MapInArrow never ships the hOCR metadata or `props`;
+    page_meta and token_props read the meta shape.  The kernel emits one
+    row per span (`tokens` carries a span's words) and a native
     posexplode_outer turns them back into the parsed relation, whose
     schema (nullability included) and the outputs' are unchanged."""
     import re
@@ -171,16 +171,15 @@ def test_parse_kernel_output_is_column_pruned(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
     out = evaluate_documents(docs)
-    crossing = {
-        "page_scores": ["doc_id", "kind", "tokens"],
-        "spans_out": ["doc_id", "span_offset", "pos", "kind", "tokens", "media_ref"],
-        "quarantine": ["doc_id", "span_offset", "kind", "error", "n_words"],
-    }
+    span = ["doc_id", "span_offset", "pos", "kind", "tokens", "media_ref", "error"]
+    meta = span + ["page_id", "ocr_engine", "ocr_capabilities", "props"]
+    crossing = {"page_scores": span, "spans_out": span, "quarantine": span,
+                "page_meta": meta, "token_props": meta}
     for branch, expected in crossing.items():
         plan = plan_string(getattr(out, branch))
-        args = re.search(r"MapInArrow .*?#\d+, \[([^\]]*)\]", plan)
-        assert args, plan
-        cols = [c.split("#")[0].strip() for c in args.group(1).split(",")]
+        args = re.findall(r"MapInArrow .*?#\d+, \[([^\]]*)\]", plan)
+        assert len(args) == 1, plan
+        cols = [c.split("#")[0].strip() for c in args[0].split(",")]
         assert cols == expected, (branch, cols)
         assert re.search(r"Generate posexplode\(", plan), plan
 
@@ -194,8 +193,10 @@ def test_parse_kernel_output_is_column_pruned(spark):
         "spans_out": "doc_id string, ord int NOT NULL, kind string, text string, "
                      "media_ref string",
         "quarantine": "doc_id string, span_ord int, error string",
+        "page_meta": "doc_id string, span_offset int, page_id string, "
+                     "ocr_engine string, ocr_capabilities array<string>",
+        "token_props": "doc_id string, span_offset int, pos int, text string, "
+                       "props map<string,string>, x_wconf int, bbox string",
         "parsed": "doc_id string, span_offset int, pos int, kind string, "
-                  "text string, media_ref string, line_idx int, tok_idx int, "
-                  "page_id string, ocr_engine string, ocr_capabilities array<string>, "
-                  "props map<string,string>, error string",
+                  "text string, media_ref string, error string",
     }
